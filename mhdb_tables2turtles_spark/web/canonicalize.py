@@ -18,7 +18,9 @@ aggregation is therefore **two-phase with an explicit salt** — first
 ``groupBy(node, pmod(xxhash64(label), S))``, then ``groupBy(node)`` — so a
 hub's partial mins spread over S reducers before the final combine (on top
 of Spark's own map-side partial aggregation).  Each round is
-``localCheckpoint``-ed to cut lineage growth across iterations.
+``localCheckpoint``-ed to cut lineage growth across iterations, and a
+labeling still changing after ``_MAX_ROUNDS`` rounds raises rather than
+returning truncated components.
 """
 
 from __future__ import annotations
@@ -33,31 +35,32 @@ __all__ = [
     "canonical_mapping",
 ]
 
+# propagation-round cap: pointer jumping converges in O(log diameter)
+# rounds, so 25 covers any chain a real equivalence graph produces
+_MAX_ROUNDS = 25
+# reducers a hub's partial mins spread over in the salted aggregation
+_SALT = 16
 
-def _salted_min(df: DataFrame, key: str, val: str, salt: int) -> DataFrame:
+
+def _salted_min(df: DataFrame, key: str, val: str) -> DataFrame:
     """min(val) grouped by key, via an explicit two-phase salted shuffle."""
     partial = df.groupBy(
-        key, F.pmod(F.xxhash64(F.col(val)), F.lit(salt)).alias("__salt")
+        key, F.pmod(F.xxhash64(F.col(val)), F.lit(_SALT)).alias("__salt")
     ).agg(F.min(val).alias(val))
     return partial.groupBy(key).agg(F.min(val).alias(val))
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-    salt: int = 16,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src, dst) -> (node, component); component = min node id (by
     ordering of the id type) in the node's connected component.
 
     Deterministic: min-label over a total order, independent of
-    partitioning and parallelism.
+    partitioning and parallelism.  Raises ``RuntimeError`` if labels are
+    still changing after ``_MAX_ROUNDS`` rounds.
     """
     sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -74,13 +77,13 @@ def connected_components(
         # jobs — measurable fixed overhead on every no-merge epoch)
         return labels
 
-    for _ in range(max_iter):
+    for _ in range(_MAX_ROUNDS):
         # propagate: each node offers its label to every neighbor
         offered = sym.join(
             labels.withColumnRenamed("node", "u"), "u"
         ).select(F.col("v").alias("node"), "component")
         new_labels = _salted_min(
-            offered.unionByName(labels), "node", "component", salt
+            offered.unionByName(labels), "node", "component"
         )
         # compress: follow one pointer hop (label <- label of label)
         comp_of_comp = labels.select(
@@ -116,18 +119,13 @@ def connected_components(
         changed = flagged.filter(F.col("__changed")).limit(1).count()
         labels = flagged.drop("__changed")
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {_MAX_ROUNDS} rounds"
+    )
 
 
-def merge_components(
-    prev: DataFrame,
-    new_edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-    salt: int = 16,
-) -> DataFrame:
+def merge_components(prev: DataFrame, new_edges: DataFrame) -> DataFrame:
     """Incremental connected components: fold a batch of NEW equivalence
     edges into an existing ``(node, component)`` labeling (the committed
     output of a previous :func:`connected_components` run) without
@@ -153,7 +151,7 @@ def merge_components(
     has to thread new edges between star centers), vs O(log diameter)
     from scratch.
     """
-    e = new_edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = new_edges.select("src", "dst")
     if e.isEmpty():
         # a batch with no equivalence edges touches no component: the
         # prior labeling IS the merged labeling (the common case for a
@@ -173,9 +171,7 @@ def merge_components(
     star = active.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("src"), F.col("component").alias("dst")
     )
-    merged = connected_components(
-        e.unionByName(star), max_iter=max_iter, salt=salt
-    )
+    merged = connected_components(e.unionByName(star))
     untouched = prev.join(touched, "component", "left_anti").select(
         "node", "component"
     )

@@ -39,10 +39,10 @@ def _lineage_from_footers(path: str) -> "dict[str, int] | None":
     file whose rows all carry the same ``LINEAGE_COL`` value (the
     pre-write ``spark_partition_id``), so every row group's min==max
     statistic identifies the partition and ``num_rows`` is its count.
-    Returns None (caller falls back to a Spark aggregation) whenever
-    the invariant doesn't hold — e.g. an explicit ``repartition``
-    between the lineage projection and the write mixed ids within a
-    file, or stats are missing."""
+    Returns None (caller falls back to a Spark aggregation) whenever a
+    footer cannot be read or does not carry that invariant: missing or
+    truncated footer, no lineage column, absent statistics, or a row
+    group whose min and max differ."""
     import pyarrow.parquet as pq
 
     lineage: dict[str, int] = {}
@@ -106,10 +106,16 @@ class StagedPipeline:
         name: str,
         build: Callable[[], DataFrame],
         upstream: tuple[str, ...] = (),
-        partitions: int | None = None,
     ) -> DataFrame:
         """Return the stage's committed output, computing it only if no
-        committed snapshot exists."""
+        committed snapshot exists.
+
+        Computing writes ``build()`` as parquet under ``<workdir>/<name>``
+        with the source partition id as a lineage column, then commits a
+        manifest (rows, elapsed seconds, ``upstream`` stage names,
+        per-partition row counts) by atomic rename.  Either way the
+        returned DataFrame reads the committed parquet, lineage column
+        dropped."""
         import time as _time
 
         path = self._path(name)
@@ -120,8 +126,6 @@ class StagedPipeline:
         self.log.append(f"compute:{name}")
         t0 = _time.time()
         df = build().withColumn(LINEAGE_COL, F.spark_partition_id())
-        if partitions:
-            df = df.repartition(partitions)
         obs = Observation(f"stage_{name}")
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         df.write.mode("overwrite").parquet(path)
@@ -130,8 +134,8 @@ class StagedPipeline:
         # per-partition lineage: row counts per source partition, read
         # driver-side from the committed parquet footers (min==max row
         # group stats on the lineage column — zero Spark jobs); the
-        # Spark aggregation only runs when a repartition mixed
-        # partition ids within a file
+        # Spark aggregation only runs when a footer is unreadable or
+        # lacks the min==max stats
         lineage = _lineage_from_footers(path)
         if lineage is None:
             lineage = {

@@ -1,7 +1,7 @@
 """Mention detection + (subj, pred, obj) triple extraction over web pages.
 
 Arrow-batched ``mapInPandas`` runs the token-index matcher (:mod:`trie`;
-match-set-identical to its Aho-Corasick automaton, differential-tested)
+match-set-identical to the Aho-Corasick reference, differential-tested)
 over each page's extracted text; the surface list rides in a
 Spark broadcast and the matcher is memoized per worker.  Everything
 downstream of the scan is built-in DataFrame ops (broadcast joins,
@@ -24,12 +24,9 @@ from pyspark.sql import types as T
 from mhdb_tables2turtles_spark.functions import udfs
 from mhdb_tables2turtles_spark.web.trie import matcher_for
 
-__all__ = ["scan_mentions", "page_entity_triples", "cooccurrence_edges"]
+__all__ = ["scan_mentions", "page_entity_triples"]
 
-MENTIONS_SCHEMA = "url string, surface string, start int, end int"
-
-# context window (chars) on each side of a match, for the linking scorer
-_CTX = 120
+MENTIONS_SCHEMA = "url string, surface string"
 
 
 def scan_mentions(
@@ -37,7 +34,10 @@ def scan_mentions(
     surfaces: tuple[str, ...],
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """pages(url, text) -> one row per vocabulary occurrence.
+    """pages(url, text) -> mentions(url, surface[, passthrough...]):
+    one row per vocabulary occurrence, so a surface found three times on
+    a page yields three identical rows (consumers count or distinct them).
+    Match positions are not emitted: no consumer reads them.
 
     ``surfaces`` must be lowercase; matching is case-insensitive on
     word boundaries.
@@ -62,12 +62,12 @@ def scan_mentions(
     for name in extra:
         out_schema.add(pages.schema[name])
     in_cols = ["url", "text", *extra]
-    out_cols = ["url", "surface", "start", "end", *extra]
+    out_cols = ["url", "surface", *extra]
 
     def scan(batches):
         patterns = bc.value
         # token-indexed matcher: identical match set to the Aho-Corasick
-        # automaton (differential-tested in tests/test_web_pipeline.py)
+        # reference (differential-tested in tests/test_web_pipeline.py)
         # at ~2x the scan throughput — this loop is the engine's hottest
         matcher = matcher_for(patterns)
         for pdf in batches:
@@ -78,8 +78,6 @@ def scan_mentions(
             # former top cost, ahead of the scan itself)
             c_url: list = []
             c_surface: list = []
-            c_start: list = []
-            c_end: list = []
             c_rest: tuple[list, ...] = tuple([] for _ in extra)
             for url, text, *rest in pdf[in_cols].itertuples(
                 index=False, name=None
@@ -87,18 +85,16 @@ def scan_mentions(
                 if not text:
                     continue
                 low = text.lower()
-                n0 = len(c_start)
-                for start, end, idx in matcher.find_words(low):
-                    c_surface.append(patterns[idx])
-                    c_start.append(start)
-                    c_end.append(end)
-                n_hits = len(c_start) - n0
+                n0 = len(c_surface)
+                c_surface.extend(
+                    patterns[idx] for _, _, idx in matcher.find_words(low)
+                )
+                n_hits = len(c_surface) - n0
                 if n_hits:
                     c_url.extend([url] * n_hits)
                     for col, val in zip(c_rest, rest):
                         col.extend([val] * n_hits)
-            data = {"url": c_url, "surface": c_surface,
-                    "start": c_start, "end": c_end}
+            data = {"url": c_url, "surface": c_surface}
             for name, col in zip(extra, c_rest):
                 data[name] = col
             yield pd.DataFrame(data, columns=out_cols)
@@ -171,22 +167,3 @@ def page_entity_triples(
         F.col("entity_iri").alias("object"),
     )
     return decl.unionByName(urls).unionByName(ments)
-
-
-def cooccurrence_edges(linked: DataFrame) -> DataFrame:
-    """Distinct (entity_a < entity_b) pairs linked on the same page, with
-    page counts — the co-mention graph feeding canonicalization and
-    downstream analytics.  Self-join is on ``url`` (page-local), so the
-    shuffle is keyed by url: uniform, no hub skew."""
-    ents = linked.select("url", "entity_iri").distinct()
-    a = ents.alias("a")
-    b = ents.alias("b")
-    return (
-        a.join(b, "url")
-        .filter(F.col("a.entity_iri") < F.col("b.entity_iri"))
-        .groupBy(
-            F.col("a.entity_iri").alias("entity_a"),
-            F.col("b.entity_iri").alias("entity_b"),
-        )
-        .agg(F.count("*").alias("n_pages"))
-    )

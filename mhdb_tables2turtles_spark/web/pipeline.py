@@ -2,7 +2,7 @@
 
     pages (url, warc_ts, html, text, lang)
       -> stage extract   : html -> text (byte-identical per url)
-      -> stage mentions  : Aho-Corasick vocabulary scan
+      -> stage mentions  : token-index vocabulary scan
       -> stage linked    : alias candidates + TF-IDF scoring
       -> stage triples   : (subj, pred, obj) emission
       -> stage canonical : connected-components rewrite
@@ -32,7 +32,6 @@ from mhdb_tables2turtles_spark.web.extract import extract_text_col
 from mhdb_tables2turtles_spark.web.linking import link_mentions
 from mhdb_tables2turtles_spark.web.materialize import StagedPipeline
 from mhdb_tables2turtles_spark.web.mentions import (
-    cooccurrence_edges,
     page_entity_triples,
     scan_mentions,
 )
@@ -214,7 +213,6 @@ class KGPipeline:
             "linked": linked,
             "triples": triples,
             "canonical": canonical,
-            "cooccurrence": cooccurrence_edges(linked),
             "counters": self.staged.counters(),
         }
 
@@ -305,71 +303,50 @@ class KGPipeline:
         rewritten canonical graph commit as per-epoch stages; the epoch
         enters ``_EPOCHS.json`` (atomic replace) LAST.  A kill anywhere
         re-runs only uncommitted steps (at epoch granularity for the
-        batch chain, stage granularity after it).
+        batch chain, stage granularity after it); a resumed epoch whose
+        triples are committed runs no Spark job before
+        ``incremental_stage``.
+
+        Returns ``triples`` (this epoch's new triples), ``components``
+        (the merged labels), ``canonical`` (the full rewritten graph as
+        of this epoch) and ``counters`` (committed row counts per stage).
         """
         import os
 
         if not self.staged.is_committed("triples"):
             raise RuntimeError("run() the base crawl before update()")
         staged = self.staged
-        spark = self.spark
 
         # epoch stage graph — isolated workdir, single commit
         ep = StagedPipeline(
-            spark, os.path.join(staged.workdir, f"epoch_{batch_id}")
+            self.spark, os.path.join(staged.workdir, f"epoch_{batch_id}")
         )
-        parts: dict[str, DataFrame] = {}
 
-        def _build_chain(checkpoint: bool):
+        def _new_triples() -> DataFrame:
+            # one in-memory materialization replaces the four parquet
+            # commits: extracted feeds scan AND link, and n_new (the
+            # per-epoch idf corpus size) needs a count
             extracted = new_pages.select(
                 "url",
                 "warc_ts",
                 "lang",
                 extract_text_col(F.col("html")).alias("text"),
-            )
-            if checkpoint:
-                # one in-memory materialization replaces the four
-                # parquet commits: extracted feeds scan AND link, and
-                # n_new (the per-epoch idf corpus size) needs a count
-                extracted = extracted.localCheckpoint(eager=True)
-                n_new = extracted.count()
-            else:
-                # resumed epoch: twins for the return dict only — but
-                # link_mentions builds its idf subtree eagerly when the
-                # vocab has ambiguous surfaces, and token_idf's
-                # n_pages=None fallback would count(extracted), running
-                # the full extract UDF over the batch at build time.
-                # Count the RAW input instead: extract is a 1:1 select,
-                # so the cardinality is identical and the count never
-                # touches the UDF.
-                n_new = new_pages.count()
-            mentions = scan_mentions(extracted, self.surfaces)
+            ).localCheckpoint(eager=True)
+            n_new = extracted.count()
             linked = link_mentions(
-                mentions, self.vocab, extracted, self.profiles,
-                n_pages=n_new,
+                scan_mentions(extracted, self.surfaces), self.vocab,
+                extracted, self.profiles, n_pages=n_new,
             )
-            if checkpoint:
-                # page_entity_triples consumes linked via several
-                # branches (pairs + per-page IRIs); without the old
-                # committed-parquet snapshot each branch would re-run
-                # the scan+link chain
-                linked = linked.localCheckpoint(eager=True)
-            parts.update(
-                extract=extracted, mentions=mentions, linked=linked,
-                n_new=n_new,
-            )
-            return linked, n_new
-
-        def _new_triples() -> DataFrame:
-            linked, n_new = _build_chain(checkpoint=True)
+            # page_entity_triples consumes linked via several branches
+            # (pairs + per-page IRIs); without the old committed-parquet
+            # snapshot each branch would re-run the scan+link chain
+            linked = linked.localCheckpoint(eager=True)
             t = page_entity_triples(linked, n_urls=n_new)
             if extra_equiv_edges is not None:
                 t = t.unionByName(_equiv_triples(extra_equiv_edges))
             return t
 
         new_triples = ep.stage("triples", _new_triples)
-        if not parts:  # stage resumed from its committed snapshot
-            _build_chain(checkpoint=False)
 
         # append to the shared epoch-partitioned triple table (lineage =
         # done_partitions; re-running a committed batch is a no-op)
@@ -418,9 +395,6 @@ class KGPipeline:
         )
         self._commit_epoch(batch_id)
         return {
-            "extract": parts["extract"],
-            "mentions": parts["mentions"],
-            "linked": parts["linked"],
             "triples": new_triples,
             "components": comps,
             "canonical": canonical,

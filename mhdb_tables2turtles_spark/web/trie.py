@@ -1,23 +1,29 @@
-"""Aho-Corasick multi-pattern matcher (pure Python, dependency-free).
+"""Word-boundary multi-pattern matching over page text (pure Python,
+dependency-free).
 
 Generalizes the reference's exact-label matching (labels and aliases
 resolved by equality against dimension sheets,
 /root/reference/mhdb/ingest.py:2841-2847, :445-446) to streaming text:
 one pass over a page finds every vocabulary term.
 
+:class:`TokenIndexMatcher` is the scan kernel.  :class:`AhoCorasick` is
+its differential reference: the classic automaton, kept so tests can pin
+that the kernel emits the identical match set.
+
 Execution model: the term list rides to executors once (Spark broadcast);
-the automaton is built lazily per worker and memoized by a content
-fingerprint, so a 1000-executor cluster builds it 1000 times total, not
-once per batch or per row.  Matching itself runs inside Arrow-batched
-``mapInPandas`` (see :mod:`mentions`).
+the matcher is built lazily per worker and memoized by the pattern tuple,
+so a 1000-executor cluster builds it 1000 times total, not once per batch
+or per row.  Matching itself runs inside Arrow-batched ``mapInPandas``
+(see :mod:`mentions`).
 """
 
 from __future__ import annotations
 
+import functools
 import re
 from collections import deque
 
-__all__ = ["AhoCorasick", "TokenIndexMatcher", "automaton_for", "matcher_for"]
+__all__ = ["AhoCorasick", "TokenIndexMatcher", "matcher_for"]
 
 _WORD_CHARS = frozenset(
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_"
@@ -175,30 +181,10 @@ class TokenIndexMatcher:
 
 _TOKEN_RE = re.compile(r"[A-Za-z0-9_]+")
 
-_CACHE: dict[tuple, AhoCorasick] = {}
-_MATCHER_CACHE: dict[tuple, TokenIndexMatcher] = {}
 
-
-def _memoized(cache: dict, patterns: tuple, ctor):
-    """Per-worker memoization, bounded for long-lived workers: on
-    overflow past 4 entries keep only the 2 most recent (one shared
-    eviction policy for both matcher kinds)."""
-    m = cache.get(patterns)
-    if m is None:
-        m = cache[patterns] = ctor(list(patterns))
-        if len(cache) > 4:
-            for k in list(cache)[:-2]:
-                del cache[k]
-    return m
-
-
-def automaton_for(patterns: tuple[str, ...]) -> AhoCorasick:
-    """Per-worker memoized automaton (key: the pattern tuple itself —
-    broadcast lists are small; the automaton is the expensive part)."""
-    return _memoized(_CACHE, patterns, AhoCorasick)
-
-
+@functools.lru_cache(maxsize=4)
 def matcher_for(patterns: tuple[str, ...]) -> TokenIndexMatcher:
-    """Per-worker memoized token-index matcher (same contract and match
-    set as :func:`automaton_for`'s ``find_words``; the scan's hot path)."""
-    return _memoized(_MATCHER_CACHE, patterns, TokenIndexMatcher)
+    """Per-worker memoized token-index matcher (key: the pattern tuple
+    itself — broadcast lists are small; the matcher is the expensive
+    part), bounded for long-lived workers by least-recent use."""
+    return TokenIndexMatcher(list(patterns))

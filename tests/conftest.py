@@ -1,3 +1,5 @@
+import os
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -16,6 +18,13 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def onto_ttl():
+    """In-repo ontology for the web KG tests: 40 labelled entities with
+    comments, in the Turtle layout ``web.vocab`` reads."""
+    return os.path.join(os.path.dirname(__file__), "data", "ontology.ttl")
 
 
 def pytest_configure(config):

@@ -17,12 +17,14 @@ def _run(capsys, argv):
     return rc, json.loads(out[-1])
 
 
-def test_cli_synthesize_and_resume(spark, tmp_path, capsys):
+def test_cli_synthesize_and_resume(spark, tmp_path, capsys, onto_ttl):
     argv = [
         "--synthesize",
         "60",
         "--workdir",
         str(tmp_path / "kg"),
+        "--vocab-ttl",
+        onto_ttl,
         "--count",
         "--ttl",
     ]
@@ -46,13 +48,15 @@ def test_cli_synthesize_and_resume(spark, tmp_path, capsys):
     assert summary2["canonical_triples"] == summary["canonical_triples"]
 
 
-def test_cli_reads_parquet_input(spark, tmp_path, capsys):
+def test_cli_reads_parquet_input(spark, tmp_path, capsys, onto_ttl):
     from mhdb_tables2turtles_spark.web.pipeline import build_corpus
 
     src = str(tmp_path / "pages")
-    build_corpus(spark, 40, seed=7).write.parquet(src)
+    build_corpus(spark, 40, seed=7, ttl_path=onto_ttl).write.parquet(src)
     rc, summary = _run(
-        capsys, ["--input", src, "--workdir", str(tmp_path / "kg2")]
+        capsys,
+        ["--input", src, "--workdir", str(tmp_path / "kg2"),
+         "--vocab-ttl", onto_ttl],
     )
     assert rc == 0
     assert summary["stages"]["extract"]["rows"] == 40
@@ -93,20 +97,26 @@ def test_cli_workbooks_run_all(spark, tmp_path, capsys):
     assert len(ours & golden) / len(golden) >= 0.99
 
 
-def test_cli_update_batch_epoch(spark, tmp_path, capsys):
+def test_cli_update_batch_epoch(spark, tmp_path, capsys, onto_ttl):
     from mhdb_tables2turtles_spark.web.pipeline import build_corpus
 
     wd = str(tmp_path / "kgu")
     # base crawl via the CLI
-    rc, base = _run(capsys, ["--synthesize", "20", "--workdir", wd])
+    rc, base = _run(
+        capsys,
+        ["--synthesize", "20", "--workdir", wd, "--vocab-ttl", onto_ttl],
+    )
     assert rc == 0 and base["epochs"] == []
 
     # a re-crawl batch lands as parquet, applied via --update-batch
     drop = str(tmp_path / "drop")
-    build_corpus(spark, 30, seed=2).limit(8).write.parquet(drop)
+    build_corpus(spark, 30, seed=2, ttl_path=onto_ttl).limit(8).write.parquet(
+        drop
+    )
     rc, upd = _run(
         capsys,
-        ["--input", drop, "--workdir", wd, "--update-batch", "b1", "--count"],
+        ["--input", drop, "--workdir", wd, "--update-batch", "b1", "--count",
+         "--vocab-ttl", onto_ttl],
     )
     assert rc == 0
     assert upd["epochs"] == ["b1"]

@@ -20,9 +20,9 @@ SURFACES = ("music", "chills", "study")
 
 
 @pytest.fixture(scope="module")
-def page_drop(spark, tmp_path_factory):
+def page_drop(spark, tmp_path_factory, onto_ttl):
     d = str(tmp_path_factory.mktemp("drops"))
-    build_corpus(spark, 24, seed=11, partitions=3).write.mode(
+    build_corpus(spark, 24, seed=11, partitions=3, ttl_path=onto_ttl).write.mode(
         "overwrite"
     ).parquet(d)
     return d
@@ -179,7 +179,7 @@ def test_stream_dedup_exact_and_url(spark, tmp_path):
     assert "canonical_url" in by_url.columns
 
 
-def test_stream_kg_updates_epochs_and_replay(spark, tmp_path):
+def test_stream_kg_updates_epochs_and_replay(spark, tmp_path, onto_ttl):
     """foreachBatch → KGPipeline.update: each micro-batch becomes an
     incremental epoch; a restarted query with the same checkpoint does
     not duplicate committed epochs."""
@@ -189,12 +189,12 @@ def test_stream_kg_updates_epochs_and_replay(spark, tmp_path):
     )
     from mhdb_tables2turtles_spark.web.pipeline import KGPipeline
 
-    corpus = build_corpus(spark, 30, seed=13, partitions=2)
+    corpus = build_corpus(spark, 30, seed=13, partitions=2, ttl_path=onto_ttl)
     base = corpus.limit(18)
     rest = corpus.subtract(base)
 
     wd = str(tmp_path / "kg_stream")
-    pipe = KGPipeline(spark, wd)
+    pipe = KGPipeline(spark, wd, ttl_path=onto_ttl)
     pipe.run(base)
     n_base = pipe.canonical_asof().count()
 

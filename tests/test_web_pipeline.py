@@ -75,6 +75,18 @@ def test_token_index_matcher_equals_aho_corasick():
     assert set(auto.find_words("x y z")) == set(matcher.find_words("x y z"))
 
 
+def test_matcher_for_evicts_least_recently_used():
+    """The per-worker matcher memo keeps recently used pattern tuples: a
+    hit refreshes recency, so the next insert evicts the coldest entry."""
+    from mhdb_tables2turtles_spark.web.trie import matcher_for
+
+    a, b, c, d, e = (("lru", str(i)) for i in range(5))
+    first = matcher_for(a)
+    for patterns in (b, c, d, a, e):
+        matcher_for(patterns)
+    assert matcher_for(a) is first
+
+
 def test_vocabulary_from_golden():
     vf = vocab_mod.vocabulary_frame()
     assert len(vf) > 300
@@ -89,12 +101,16 @@ def test_vocabulary_from_golden():
 # ---------- Spark stages ----------
 
 @pytest.fixture(scope="module")
-def corpus(spark):
-    return build_corpus(spark, n_pages=60, seed=7, partitions=4).cache()
+def corpus(spark, onto_ttl):
+    return build_corpus(
+        spark, n_pages=60, seed=7, partitions=4, ttl_path=onto_ttl
+    ).cache()
 
 
-def test_pages_deterministic_and_invariant(spark, corpus):
-    again = build_corpus(spark, n_pages=60, seed=7, partitions=2)
+def test_pages_deterministic_and_invariant(spark, corpus, onto_ttl):
+    again = build_corpus(
+        spark, n_pages=60, seed=7, partitions=2, ttl_path=onto_ttl
+    )
     a = {r.url: (r.text, bytes(r.html)) for r in corpus.collect()}
     b = {r.url: (r.text, bytes(r.html)) for r in again.collect()}
     assert a == b  # parallelism-independent generation
@@ -109,7 +125,9 @@ def test_pages_deterministic_and_invariant(spark, corpus):
 
 def test_scan_mentions_matches_python(spark, corpus):
     surfaces = ("music", "chills", "study")
-    got = scan_mentions(corpus, surfaces).groupBy("surface").count().collect()
+    mentions = scan_mentions(corpus, surfaces)
+    assert mentions.columns == ["url", "surface"]
+    got = mentions.groupBy("surface").count().collect()
     got = {r.surface: r["count"] for r in got}
     auto = AhoCorasick(list(surfaces))
     want: dict[str, int] = {}
@@ -132,18 +150,31 @@ def test_connected_components_basic(spark):
     assert comps["x"] == comps["y"] == "x"
 
 
-def test_connected_components_long_chain(spark):
-    # pointer compression: a 40-node path converges within the cap
-    edges = spark.createDataFrame(
+def _chain_edges(spark):
+    return spark.createDataFrame(
         [(f"n{i:02d}", f"n{i+1:02d}") for i in range(40)], ["src", "dst"]
     )
-    comps = connected_components(edges)
+
+
+def test_connected_components_long_chain(spark):
+    # pointer compression: a 40-node path converges within the cap
+    comps = connected_components(_chain_edges(spark))
     assert comps.select("component").distinct().count() == 1
 
 
-def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path):
+def test_connected_components_raises_at_round_cap(spark, monkeypatch):
+    # labels still changing when the cap is reached: raise, never return
+    # a truncated labeling
+    from mhdb_tables2turtles_spark.web import canonicalize
+
+    monkeypatch.setattr(canonicalize, "_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(_chain_edges(spark))
+
+
+def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path, onto_ttl):
     wd = str(tmp_path / "kg")
-    pipe = KGPipeline(spark, wd)
+    pipe = KGPipeline(spark, wd, ttl_path=onto_ttl)
     out = pipe.run(corpus)
     triples = out["canonical"]
     assert triples.columns == ["subject", "predicate", "object"]
@@ -159,7 +190,7 @@ def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path):
     assert counters["extract"] == 60
 
     # resume: a fresh pipeline over the same workdir recomputes nothing
-    pipe2 = KGPipeline(spark, wd)
+    pipe2 = KGPipeline(spark, wd, ttl_path=onto_ttl)
     out2 = pipe2.run(corpus)
     assert all(step.startswith("resume:") for step in pipe2.staged.log)
     assert out2["canonical"].count() == n
@@ -181,7 +212,9 @@ def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path):
     assert back.exceptAll(triples).count() == 0
 
 
-def test_kill_mid_pipeline_resumes_from_last_commit(spark, corpus, tmp_path):
+def test_kill_mid_pipeline_resumes_from_last_commit(
+    spark, corpus, tmp_path, onto_ttl
+):
     """SURVEY §5.3-5: die after stage-2 commit, restart, identical final
     result with no recomputation of committed stages."""
     wd = str(tmp_path / "kgkill")
@@ -191,7 +224,7 @@ def test_kill_mid_pipeline_resumes_from_last_commit(spark, corpus, tmp_path):
     from mhdb_tables2turtles_spark.web.extract import extract_text_col
     from mhdb_tables2turtles_spark.web.mentions import scan_mentions
 
-    dead = KGPipeline(spark, wd)
+    dead = KGPipeline(spark, wd, ttl_path=onto_ttl)
     extracted = dead.staged.stage(
         "extract",
         lambda: corpus.select(
@@ -202,7 +235,7 @@ def test_kill_mid_pipeline_resumes_from_last_commit(spark, corpus, tmp_path):
         "mentions", lambda: scan_mentions(extracted, dead.surfaces)
     )
     # process "dies" here; a fresh run picks up after the last commit
-    pipe = KGPipeline(spark, wd)
+    pipe = KGPipeline(spark, wd, ttl_path=onto_ttl)
     out = pipe.run(corpus)
     assert pipe.staged.log[:2] == ["resume:extract", "resume:mentions"]
     assert [s for s in pipe.staged.log if s.startswith("compute:")] == [
@@ -211,14 +244,16 @@ def test_kill_mid_pipeline_resumes_from_last_commit(spark, corpus, tmp_path):
         "compute:canonical",
     ]
     # identical to a from-scratch run
-    fresh = KGPipeline(spark, str(tmp_path / "kgfresh")).run(corpus)
+    fresh = KGPipeline(
+        spark, str(tmp_path / "kgfresh"), ttl_path=onto_ttl
+    ).run(corpus)
     a = {(r.subject, r.predicate, r.object) for r in out["canonical"].collect()}
     b = {(r.subject, r.predicate, r.object) for r in fresh["canonical"].collect()}
     assert a == b
 
 
-def test_canonicalization_merges_sameas(spark, corpus, tmp_path):
-    pipe = KGPipeline(spark, str(tmp_path / "kg2"))
+def test_canonicalization_merges_sameas(spark, corpus, tmp_path, onto_ttl):
+    pipe = KGPipeline(spark, str(tmp_path / "kg2"), ttl_path=onto_ttl)
     # inject synthetic duplicates: two ontology IRIs declared equivalent
     some = pipe.vocab.limit(2).collect()
     a, b = some[0].entity_iri, some[1].entity_iri
@@ -231,23 +266,22 @@ def test_canonicalization_merges_sameas(spark, corpus, tmp_path):
     assert not (a in objs and b in objs)  # merged to one canonical IRI
 
 
-def test_pipeline_with_ontology_and_turtle(spark, corpus, tmp_path):
-    """P/R vs the reference graph: with include_ontology the canonical
-    triple set contains every reference triple (recall 1.0) and the page
-    triples never collide with reference IRI space (precision on the
-    reference subset 1.0); ttl shards materialize."""
+def test_pipeline_with_ontology_and_turtle(spark, corpus, tmp_path, onto_ttl):
+    """With include_ontology the canonical triple set contains every
+    ontology triple (recall 1.0: the page triples never rewrite ontology
+    IRIs); ttl shards materialize."""
     import os
 
     from mhdb_tables2turtles_spark.sources.golden import load_golden_triples
 
     wd = str(tmp_path / "kg3")
-    pipe = KGPipeline(spark, wd)
+    pipe = KGPipeline(spark, wd, ttl_path=onto_ttl)
     out = pipe.run(corpus, include_ontology=True, write_turtle=True)
     ours = {
         (r.subject, r.predicate, r.object) for r in out["canonical"].collect()
     }
-    golden = load_golden_triples()
-    assert golden <= ours  # recall 1.0 vs reference triples
+    golden = load_golden_triples(onto_ttl)
+    assert golden <= ours  # recall 1.0 vs the ontology triples
     assert os.path.exists(os.path.join(wd, "ttl", "_SUCCESS"))
     # shard contents parse back as subject blocks
     import glob
@@ -494,15 +528,19 @@ def _unambiguous(pipe, spark):
     return pipe
 
 
-def test_update_equals_full_rebuild(spark, tmp_path):
+def test_update_equals_full_rebuild(spark, tmp_path, onto_ttl):
     """run(A) + update(B) must equal run(A ∪ B) triple-for-triple,
     including the incremental canonicalization (disjoint equivalence
     batches E1 at base, E2 at update, vs E1 ∪ E2 from scratch)."""
-    full_corpus = build_corpus(spark, n_pages=48, seed=7, partitions=4)
+    full_corpus = build_corpus(
+        spark, n_pages=48, seed=7, partitions=4, ttl_path=onto_ttl
+    )
     half = F.col("url").substr(-1, 1).isin(*"01234")
     pages_a, pages_b = full_corpus.filter(half), full_corpus.filter(~half)
 
-    pipe = _unambiguous(KGPipeline(spark, str(tmp_path / "kg_inc")), spark)
+    pipe = _unambiguous(
+        KGPipeline(spark, str(tmp_path / "kg_inc"), ttl_path=onto_ttl), spark
+    )
     iris = [r.entity_iri for r in pipe.vocab.limit(3).collect()]
     e1 = spark.createDataFrame([(iris[0], iris[1])], ["src", "dst"])
     e2 = spark.createDataFrame([(iris[1], iris[2])], ["src", "dst"])
@@ -511,7 +549,7 @@ def test_update_equals_full_rebuild(spark, tmp_path):
     out = pipe.update(pages_b, "crawl_b", extra_equiv_edges=e2)
 
     fresh = _unambiguous(
-        KGPipeline(spark, str(tmp_path / "kg_full")), spark
+        KGPipeline(spark, str(tmp_path / "kg_full"), ttl_path=onto_ttl), spark
     ).run(
         full_corpus,
         extra_equiv_edges=e1.unionAll(e2),
@@ -527,20 +565,22 @@ def test_update_equals_full_rebuild(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_update_resumes_and_is_idempotent(spark, tmp_path):
+def test_update_resumes_and_is_idempotent(spark, tmp_path, onto_ttl):
     wd = str(tmp_path / "kg_inc2")
-    corpus = build_corpus(spark, n_pages=30, seed=3, partitions=2)
+    corpus = build_corpus(
+        spark, n_pages=30, seed=3, partitions=2, ttl_path=onto_ttl
+    )
     a = corpus.limit(20)
     b = corpus.subtract(a)
 
-    pipe = KGPipeline(spark, wd)
+    pipe = KGPipeline(spark, wd, ttl_path=onto_ttl)
     pipe.run(a, include_ontology=True)
     first = pipe.update(b, "b1")
     n1 = first["canonical"].count()
 
     # re-applying the same batch: every stage resumes, nothing recomputes,
     # identical output (the incremental_stage lineage marks b1 done)
-    pipe2 = KGPipeline(spark, wd)
+    pipe2 = KGPipeline(spark, wd, ttl_path=onto_ttl)
     again = pipe2.update(b, "b1")
     logs = pipe2.staged.log
     assert not any(s.startswith("compute:") for s in logs), logs
@@ -548,23 +588,27 @@ def test_update_resumes_and_is_idempotent(spark, tmp_path):
     assert pipe2._epochs() == ["b1"]
 
 
-def test_update_requires_base_run(spark, tmp_path):
+def test_update_requires_base_run(spark, tmp_path, onto_ttl):
     import pytest as _pytest
 
-    pipe = KGPipeline(spark, str(tmp_path / "kg_inc3"))
-    pages = build_corpus(spark, n_pages=5, seed=1, partitions=1)
+    pipe = KGPipeline(spark, str(tmp_path / "kg_inc3"), ttl_path=onto_ttl)
+    pages = build_corpus(
+        spark, n_pages=5, seed=1, partitions=1, ttl_path=onto_ttl
+    )
     with _pytest.raises(RuntimeError, match="run\\(\\) the base crawl"):
         pipe.update(pages, "x")
 
 
-def test_canonical_asof_time_travel(spark, tmp_path):
-    corpus = build_corpus(spark, n_pages=24, seed=5, partitions=2)
+def test_canonical_asof_time_travel(spark, tmp_path, onto_ttl):
+    corpus = build_corpus(
+        spark, n_pages=24, seed=5, partitions=2, ttl_path=onto_ttl
+    )
     third = F.col("url").substr(-1, 1)
     a = corpus.filter(third.isin(*"0123"))
     b = corpus.filter(third.isin(*"456"))
     c = corpus.filter(third.isin(*"789"))
 
-    pipe = KGPipeline(spark, str(tmp_path / "kg_tt"))
+    pipe = KGPipeline(spark, str(tmp_path / "kg_tt"), ttl_path=onto_ttl)
     base = pipe.run(a)["canonical"].count()
     n1 = pipe.update(b, "e1")["canonical"].count()
     n2 = pipe.update(c, "e2")["canonical"].count()
