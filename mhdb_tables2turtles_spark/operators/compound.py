@@ -19,12 +19,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from mhdb_tables2turtles_spark.functions import udfs
 
-__all__ = ["Fragment", "compound_columns", "fragment_side_triples", "DISORDER_FRAGMENTS"]
+__all__ = ["Fragment", "compound_columns", "fragment_rows", "DISORDER_FRAGMENTS"]
 
 
 @dataclass(frozen=True)
@@ -77,29 +77,21 @@ def compound_columns(
     return label, udfs.iri(seed, "PascalCase")
 
 
-def fragment_side_triples(
-    df: DataFrame,
-    subject: Column,
-    fragments: Sequence[Fragment] = DISORDER_FRAGMENTS,
-) -> DataFrame:
-    """Side triples for every present fragment with a predicate."""
-    parts = []
-    for fr in fragments:
+def fragment_rows(
+    first_rank: int, fragments: Sequence[Fragment] = DISORDER_FRAGMENTS
+) -> list[tuple]:
+    """:func:`operators.triples.emit_rows` tuples for the side triple of
+    every present fragment with a predicate (fragment columns hold null
+    when absent, as for :func:`compound_columns`); ranks count up from
+    ``first_rank`` in fragment order."""
+    rows = []
+    for rank, fr in enumerate(fragments, first_rank):
         if not fr.predicate:
             continue
-        src = df.filter(F.col(fr.column).isNotNull())
+        col = F.col(fr.column)
         if fr.raw_prefix is not None:
-            obj = F.concat(F.lit(fr.raw_prefix), F.col(fr.column).cast("string"))
+            obj = F.concat(F.lit(fr.raw_prefix), col.cast("string"))
         else:
-            obj = udfs.iri(F.col(fr.column), fr.style)
-        parts.append(
-            src.select(
-                subject.alias("subject"),
-                F.lit(fr.predicate).alias("predicate"),
-                obj.alias("object"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+            obj = udfs.iri(col, fr.style)
+        rows.append((rank, fr.predicate, obj, col.isNotNull()))
+    return rows

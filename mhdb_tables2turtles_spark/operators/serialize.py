@@ -11,9 +11,14 @@ driver header lines /root/reference/mhdb/create_mhdb:390-396):
   ``owl:Ontology`` version block.
 
 Where the reference's order is dict-insertion + Python-set hash order
-(nondeterministic per run), ours is fully deterministic: blocks and pairs
-sort by the carried ``(sheet_rank, row_id, pred_rank)`` first-emission
-keys.  Equivalence with the reference is judged as set-of-triples P/R.
+(nondeterministic per run), ours is a total order over the triple set:
+blocks sort by their first-emission ``(sheet_rank, row_id, pred_rank)``
+key, ties (several subjects minted by one emission, e.g. the response
+options of one question) broken by the block text, which starts with
+its unique subject; pairs sort by the same key, then object and
+predicate.  The bytes depend only on the deduped triples and their
+order keys, never on the plan that produced them.  Equivalence with the
+reference is judged as set-of-triples P/R.
 
 Scale path: the body is computed distributed (groupBy subject ->
 sort_array(collect_list) -> concat); small outputs collect via
@@ -81,6 +86,11 @@ def owl_profile(triples: DataFrame) -> DataFrame:
     )
 
 
+# total block order: first-emission key, then the block text (its
+# leading subject is unique) for subjects that share a key
+_BLOCK_KEY = ("block_order", "block")
+
+
 def subject_blocks(triples: DataFrame) -> DataFrame:
     """Triples -> one rendered Turtle block per subject with a stable
     ``block_order`` struct for global ordering."""
@@ -129,7 +139,7 @@ def render_body(triples: DataFrame) -> str:
 
     At web scale use :func:`write_body_shards` instead.
     """
-    rows = subject_blocks(triples).orderBy("block_order").select("block")
+    rows = subject_blocks(triples).orderBy(*_BLOCK_KEY).select("block")
     return "\n\n".join(r.block for r in rows.toLocalIterator())
 
 
@@ -138,9 +148,9 @@ def write_body_shards(triples: DataFrame, path: str, shards: int = 0) -> None:
     blocks separated by a blank line when concatenated)."""
     blocks = subject_blocks(triples)
     if shards:
-        blocks = blocks.repartitionByRange(shards, "block_order")
+        blocks = blocks.repartitionByRange(shards, *_BLOCK_KEY)
     (
-        blocks.sortWithinPartitions("block_order")
+        blocks.sortWithinPartitions(*_BLOCK_KEY)
         .select(F.concat(F.col("block"), F.lit("\n")).alias("value"))
         .write.mode("overwrite")
         .text(path)

@@ -23,7 +23,7 @@ Python-set hash order).
 from __future__ import annotations
 
 from functools import reduce
-from typing import Iterable
+from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,6 +39,45 @@ EXCLUDED_TOKENS = ["EmptyValue", "", "NaN", "NAN", "nan"]
 def exclude_filter(col: F.Column) -> F.Column:
     """Predicate: value is present and not a null-ish sentinel token."""
     return col.isNotNull() & ~F.trim(col).isin(EXCLUDED_TOKENS)
+
+
+def present(col: F.Column) -> F.Column:
+    """``col`` where :func:`exclude_filter` holds, else null."""
+    return F.when(exclude_filter(col), col)
+
+
+def emit_rows(df: DataFrame, sheet_rank: int, rows: Sequence[tuple]) -> DataFrame:
+    """Every triple a row of ``df`` emits, in one projection.
+
+    ``rows`` holds ``(pred_rank, predicate, object, when[, subject])``
+    tuples: each input row yields one triple per tuple whose ``when``
+    holds.  ``predicate`` is a Column or a constant string; ``subject``
+    defaults to the ``__subject`` column.  The tuples compile to
+    ``inline(filter(array(when(when, struct(s, p, o, pred_rank)), ...),
+    notnull))``, so ``df`` is scanned once however many predicates it
+    emits.
+
+    Spark evaluates the value of a ``CASE WHEN`` only where its condition
+    holds, so a cast guarded by ``when`` never sees an absent cell (ANSI
+    casts raise on sentinels like ``"EmptyValue"``).  Pandas UDFs are the
+    exception: they run on every row of ``df``.
+    """
+    cells = []
+    for pred_rank, predicate, obj, when, *subject in rows:
+        pred = F.lit(predicate) if isinstance(predicate, str) else predicate
+        subj = subject[0] if subject else F.col("__subject")
+        triple = F.struct(
+            subj.alias("subject"),
+            pred.alias("predicate"),
+            obj.alias("object"),
+            F.lit(pred_rank).alias("pred_rank"),
+        )
+        cells.append(F.when(when, triple))
+    return df.select(
+        "row_id", F.inline(F.filter(F.array(*cells), lambda c: c.isNotNull()))
+    ).select(
+        *TRIPLE_COLS, F.lit(sheet_rank).alias("sheet_rank"), "row_id", "pred_rank"
+    )
 
 
 def union_triples(parts: Iterable[DataFrame]) -> DataFrame:

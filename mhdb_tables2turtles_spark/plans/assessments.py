@@ -47,7 +47,9 @@ from pyspark.sql import functions as F
 
 from mhdb_tables2turtles_spark.functions import udfs
 from mhdb_tables2turtles_spark.operators.triples import (
+    emit_rows,
     exclude_filter,
+    present,
     union_triples,
 )
 from mhdb_tables2turtles_spark.plans.cogatlas import assertion_triples
@@ -146,10 +148,6 @@ ASSESSMENTS_SPECS = (
 _QUOTED_OPT = r'[-+]?[0-9]+=".*?"'
 
 
-def _nz(c: F.Column) -> F.Column:
-    return F.when(exclude_filter(c), c)
-
-
 def question_triples(
     tables: Mapping[str, DataFrame], sheet_rank: int
 ) -> DataFrame:
@@ -182,109 +180,77 @@ def question_triples(
     # instruction cells are stripped before every presence/equality check
     for c in ("paper_instructions_preamble", "paper_instructions",
               "digital_instructions_preamble", "digital_instructions"):
-        q = q.withColumn(c, _nz(F.trim(F.col(c))))
-    q = q.localCheckpoint(eager=False)  # reused by ~15 selects below
-
-    def part(df, pred: str, obj: F.Column, rank: int, subj=None):
-        return df.select(
-            (F.col("__subject") if subj is None else subj).alias("subject"),
-            F.lit(pred).alias("predicate"),
-            obj.alias("object"),
-            F.lit(sheet_rank).alias("sheet_rank"),
-            F.col("row_id").alias("row_id"),
-            F.lit(rank).alias("pred_rank"),
-        )
+        q = q.withColumn(c, present(F.trim(F.col(c))))
+    # W2 input: the response-option cell, edge dashes and newlines
+    # stripped, and the rdf:Seq IRI minted from it
+    q = q.withColumn(
+        "__ro",
+        F.regexp_replace(
+            F.regexp_replace(present(F.col("response_options")), r"^-+|-+$", ""),
+            r"\n", "",
+        ),
+    ).withColumn("__ro_iri", udfs.iri(F.col("__ro"), "delimited"))
+    q = q.localCheckpoint(eager=False)  # read by the three passes below
 
     qlabel = udfs.lang_literal(F.col("question"))
-    parts = [
-        part(q, "a", F.lit(":Question"), 0),
-        part(q, "rdfs:label", qlabel, 1),
-        part(q, ":hasQuestionText", qlabel, 2),
-        part(q, ":isReferencedBy", udfs.iri(F.col("__qtitle"), "delimited"), 3),
+    always = F.lit(True)
+    rows = [
+        (0, "a", F.lit(":Question"), always),
+        (1, "rdfs:label", qlabel, always),
+        (2, ":hasQuestionText", qlabel, always),
+        (3, ":isReferencedBy", udfs.iri(F.col("__qtitle"), "delimited"), always),
     ]
 
     # instructions: digital unconditional; paper only when different
     # (ingest.py:2153-2196).  NB the reference emits :hasInstructions as a
     # *literal* but :hasPaperInstructions as an IRI — faithful here.
-    dip = q.filter(F.col("digital_instructions_preamble").isNotNull())
-    dip_iri = udfs.iri(F.col("digital_instructions_preamble"), "delimited")
-    dip_lit = udfs.lang_literal(F.col("digital_instructions_preamble"))
-    parts += [
-        part(dip, ":hasInstructionsPreamble", dip_iri, 4),
-        part(dip, ":hasInstructionsPreambleText", dip_lit, 5, subj=dip_iri),
-    ]
-    di = q.filter(F.col("digital_instructions").isNotNull())
-    di_iri = udfs.iri(F.col("digital_instructions"), "delimited")
-    di_lit = udfs.lang_literal(F.col("digital_instructions"))
-    parts += [
-        part(di, ":hasInstructions", di_lit, 6),
-        part(di, ":hasInstructionsText", di_lit, 7, subj=di_iri),
-    ]
-    pip = q.filter(
-        F.col("paper_instructions_preamble").isNotNull()
-        & (
-            F.col("digital_instructions_preamble").isNull()
-            | (F.col("paper_instructions_preamble")
-               != F.col("digital_instructions_preamble"))
-        )
-    )
-    pip_iri = udfs.iri(F.col("paper_instructions_preamble"), "delimited")
-    pip_lit = udfs.lang_literal(F.col("paper_instructions_preamble"))
-    parts += [
-        part(pip, ":hasPaperInstructionsPreamble", pip_iri, 8),
-        part(pip, ":hasPaperInstructionsPreambleText", pip_lit, 9, subj=pip_iri),
-    ]
-    pi = q.filter(
-        F.col("paper_instructions").isNotNull()
-        & (
-            F.col("digital_instructions").isNull()
-            | (F.col("paper_instructions") != F.col("digital_instructions"))
-        )
-    )
-    pi_iri = udfs.iri(F.col("paper_instructions"), "delimited")
-    pi_lit = udfs.lang_literal(F.col("paper_instructions"))
-    parts += [
-        part(pi, ":hasPaperInstructions", pi_iri, 10),
-        part(pi, ":hasPaperInstructionsText", pi_lit, 11, subj=pi_iri),
+    dip = F.col("digital_instructions_preamble")
+    di = F.col("digital_instructions")
+    pip = F.col("paper_instructions_preamble")
+    pi = F.col("paper_instructions")
+    dip_iri = udfs.iri(dip, "delimited")
+    di_lit = udfs.lang_literal(di)
+    pip_iri = udfs.iri(pip, "delimited")
+    pi_iri = udfs.iri(pi, "delimited")
+    has_pip = pip.isNotNull() & (dip.isNull() | (pip != dip))
+    has_pi = pi.isNotNull() & (di.isNull() | (pi != di))
+    rows += [
+        (4, ":hasInstructionsPreamble", dip_iri, dip.isNotNull()),
+        (5, ":hasInstructionsPreambleText", udfs.lang_literal(dip),
+         dip.isNotNull(), dip_iri),
+        (6, ":hasInstructions", di_lit, di.isNotNull()),
+        (7, ":hasInstructionsText", di_lit, di.isNotNull(),
+         udfs.iri(di, "delimited")),
+        (8, ":hasPaperInstructionsPreamble", pip_iri, has_pip),
+        (9, ":hasPaperInstructionsPreambleText", udfs.lang_literal(pip),
+         has_pip, pip_iri),
+        (10, ":hasPaperInstructions", pi_iri, has_pi),
+        (11, ":hasPaperInstructionsText", udfs.lang_literal(pi), has_pi, pi_iri),
     ]
 
     # W2: response options -> rdf:Seq (ingest.py:2199-2239)
-    ro = q.filter(exclude_filter(F.col("response_options"))).withColumn(
-        "__ro",
-        F.regexp_replace(
-            F.regexp_replace(F.col("response_options"), r"^-+|-+$", ""),
-            r"\n", "",
-        ),
-    )
-    ro = ro.withColumn("__ro_iri", udfs.iri(F.col("__ro"), "delimited"))
-    parts += [
-        part(ro, ":hasResponseOptions", F.col("__ro_iri"), 12),
-        part(ro, "a", F.lit("rdf:Seq"), 13, subj=F.col("__ro_iri")),
+    ro = F.col("__ro")
+    ro_iri = F.col("__ro_iri")
+    rows += [
+        (12, ":hasResponseOptions", ro_iri, ro.isNotNull()),
+        (13, "a", F.lit("rdf:Seq"), ro.isNotNull(), ro_iri),
     ]
-    opts = ro.select(
+    opts = q.select(
         "row_id",
         "__ro_iri",
         F.posexplode(
             F.when(
-                F.col("__ro").contains('"'),
-                F.regexp_extract_all("__ro", F.lit(_QUOTED_OPT), 0),
-            ).otherwise(F.split("__ro", ","))
+                ro.contains('"'), F.regexp_extract_all(ro, F.lit(_QUOTED_OPT), 0)
+            ).otherwise(F.split(ro, ","))
         ).alias("__pos", "__opt"),
-    ).withColumn(
-        "__resp", F.trim(F.split("__opt", "=").getItem(1))
-    ).filter(exclude_filter(F.col("__resp")))
-    resp_iri = udfs.iri(F.col("__resp"), "delimited")
-    parts += [
-        part(opts, ":hasResponseOptionText",
-             udfs.lang_literal(F.col("__resp")), 14, subj=resp_iri),
-        opts.select(
-            F.col("__ro_iri").alias("subject"),
-            F.format_string("rdf:_%s", F.col("__pos") + 1).alias("predicate"),
-            resp_iri.alias("object"),
-            F.lit(sheet_rank).alias("sheet_rank"),
-            F.col("row_id").alias("row_id"),
-            F.lit(15).alias("pred_rank"),
-        ),
+    ).withColumn("__resp", present(F.trim(F.split("__opt", "=").getItem(1))))
+    resp = F.col("__resp")
+    resp_iri = udfs.iri(resp, "delimited")
+    opt_rows = [
+        (14, ":hasResponseOptionText", udfs.lang_literal(resp),
+         resp.isNotNull(), resp_iri),
+        (15, F.format_string("rdf:_%s", F.col("__pos") + 1), resp_iri,
+         resp.isNotNull(), ro_iri),
     ]
 
     # response-type FK (ingest.py:2241-2255): csv-int against the
@@ -298,18 +264,20 @@ def question_triples(
         .select(
             "row_id",
             "__subject",
-            F.explode(
-                _fk_elements(F.col("indices_response_type"))
-            ).alias("__fk"),
+            F.explode(_fk_elements(F.col("indices_response_type"))).alias("__fk"),
         )
         .join(F.broadcast(rt_dim), F.col("__fk") == F.col("__rtidx"))
-        .filter(exclude_filter(F.col("__rtval")))
     )
-    parts.append(
-        part(rt, ":hasResponseType", udfs.iri(F.col("__rtval"), "PascalCase"), 16)
-    )
+    rtval = present(F.col("__rtval"))
+    rt_rows = [
+        (16, ":hasResponseType", udfs.iri(rtval, "PascalCase"), rtval.isNotNull()),
+    ]
 
-    return union_triples(parts)
+    return union_triples([
+        emit_rows(q, sheet_rank, rows),
+        emit_rows(opts, sheet_rank, opt_rows),
+        emit_rows(rt, sheet_rank, rt_rows),
+    ])
 
 
 def _assertion_tables(tables: Mapping[str, DataFrame]) -> dict:

@@ -112,5 +112,3 @@ CHILLS_SPECS = (
     ),
 )
 # fmt: on
-
-SHEET_NAMES = tuple(s.table for s in CHILLS_SPECS)

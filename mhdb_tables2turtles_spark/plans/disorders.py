@@ -7,7 +7,9 @@ each present attribute appends a display fragment to ``rdfs:label`` and
 an IRI-seed fragment to the subject IRI, plus a side triple
 (ingest.py:634-736).  Here that is broadcast FK resolution into columns,
 one ``concat``/``when`` expression pair (:mod:`operators.compound`), and
-a union of side-triple selects — all row-local after the tiny dim joins.
+one ``emit_rows`` pass for the side triples and category edges plus one
+for the split ``equivalentClasses`` — all row-local after the tiny dim
+joins.
 
 Deliberate deviations from reference *bugs* (documented, not reproduced):
 
@@ -30,9 +32,12 @@ from mhdb_tables2turtles_spark.functions import udfs
 from mhdb_tables2turtles_spark.operators.compound import (
     DISORDER_FRAGMENTS,
     compound_columns,
+    fragment_rows,
 )
 from mhdb_tables2turtles_spark.operators.triples import (
+    emit_rows,
     exclude_filter,
+    present,
     union_triples,
 )
 from mhdb_tables2turtles_spark.plans.common import classes_spec, properties_spec
@@ -136,12 +141,6 @@ _RESOLVE = (
 )
 
 
-def _nz(name: str) -> F.Column:
-    """Sentinel-aware presence normalization: excluded cells -> null."""
-    c = F.col(name)
-    return F.when(exclude_filter(c), c)
-
-
 def disorder_rows_triples(
     tables: Mapping[str, DataFrame], sheet_rank: int
 ) -> DataFrame:
@@ -167,83 +166,53 @@ def disorder_rows_triples(
     for c in frag_cols | {"category", "subcategory", "subsubcategory",
                           "subsubsubcategory", "equivalentClasses",
                           "subClassOf", "note"}:
-        d = d.withColumn(c, _nz(c))
+        d = d.withColumn(c, present(F.col(c)))
 
     label, subject = compound_columns(F.col("disorder"), DISORDER_FRAGMENTS)
     d = d.withColumn("__label", label).withColumn("__subject", subject)
 
-    def part(df, pred, obj, rank, subj=F.col("__subject")):
-        return df.select(
-            subj.alias("subject"),
-            pred.alias("predicate") if not isinstance(pred, str) else F.lit(pred).alias("predicate"),
-            obj.alias("object"),
-            F.lit(sheet_rank).alias("sheet_rank"),
-            F.col("row_id").alias("row_id"),
-            F.lit(rank).alias("pred_rank"),
-        )
-
-    parts = []
-    # equivalentClasses (split raw), subClassOf, note — ingest.py:641-658
-    eq = (
-        d.filter(F.col("equivalentClasses").isNotNull())
-        .withColumn(
-            "__eq",
-            F.explode(
-                F.filter(
-                    F.split("equivalentClasses", ","), lambda x: F.length(x) > 0
-                )
-            ),
-        )
-        .withColumn("__eq", F.trim("__eq"))
-        .filter(exclude_filter(F.col("__eq")))
+    # equivalentClasses (split raw) — ingest.py:641-658
+    eq = d.select(
+        "__subject", "row_id",
+        F.explode(F.split("equivalentClasses", ",")).alias("__eq"),
     )
-    parts.append(part(eq, "rdfs:equivalentClass", F.col("__eq"), 0))
-    sub = d.filter(F.col("subClassOf").isNotNull())
-    parts.append(
-        part(sub, "rdfs:subClassOf", udfs.iri(F.col("subClassOf"), "delimited"), 1)
-    )
-    note = d.filter(F.col("note").isNotNull())
-    parts.append(part(note, ":hasNote", udfs.lang_literal(F.col("note")), 2))
-
-    # fragment side triples, in reference append order — ingest.py:658-736
-    rank = 3
-    for fr in DISORDER_FRAGMENTS:
-        src = d.filter(F.col(fr.column).isNotNull())
-        if fr.raw_prefix is not None:
-            obj = F.concat(F.lit(fr.raw_prefix), F.col(fr.column).cast("string"))
-        else:
-            obj = udfs.iri(F.col(fr.column), fr.style)
-        parts.append(part(src, fr.predicate, obj, rank))
-        rank += 1
+    eq_iri = present(F.trim(F.col("__eq")))
+    parts = [
+        emit_rows(eq, sheet_rank, [
+            (0, "rdfs:equivalentClass", eq_iri, eq_iri.isNotNull()),
+        ])
+    ]
 
     # category-hierarchy subClassOf: deepest present level wins; fallback
     # :Disorder — ingest.py:739-831
-    cat = udfs.iri(F.col("category"), "PascalCase")
-    sub_ = udfs.iri(F.col("subcategory"), "PascalCase")
-    ssub = udfs.iri(F.col("subsubcategory"), "PascalCase")
-    sssub = udfs.iri(F.col("subsubsubcategory"), "PascalCase")
+    levels = ("category", "subcategory", "subsubcategory", "subsubsubcategory")
+    has = {c: F.col(c).isNotNull() for c in levels}
+    cat, sub, ssub, sssub = (udfs.iri(F.col(c), "PascalCase") for c in levels)
     deepest = (
-        F.when(F.col("subsubsubcategory").isNotNull(), sssub)
-        .when(F.col("subsubcategory").isNotNull(), ssub)
-        .when(F.col("subcategory").isNotNull(), sub_)
-        .when(F.col("category").isNotNull(), cat)
+        F.when(has["subsubsubcategory"], sssub)
+        .when(has["subsubcategory"], ssub)
+        .when(has["subcategory"], sub)
+        .when(has["category"], cat)
         .otherwise(F.lit(":Disorder"))
     )
-    parts.append(part(d, "rdfs:subClassOf", deepest, rank))
-    rank += 1
-
-    # chain edges between category levels (subjects are the category IRIs)
-    lvl3 = d.filter(F.col("subsubsubcategory").isNotNull())
-    parts.append(part(lvl3, "rdfs:subClassOf", ssub, rank, subj=sssub))
-    lvl2 = d.filter(F.col("subsubcategory").isNotNull())
-    parts.append(part(lvl2, "rdfs:subClassOf", sub_, rank + 1, subj=ssub))
-    lvl1 = d.filter(F.col("subcategory").isNotNull())
-    parts.append(part(lvl1, "rdfs:subClassOf", cat, rank + 2, subj=sub_))
-    rank += 3
-
-    # compound display label — appended last (ingest.py:833-835)
-    parts.append(part(d, "rdfs:label", udfs.lang_literal(F.col("__label")), rank))
-
+    rank = 3 + len(DISORDER_FRAGMENTS)
+    always = F.lit(True)
+    rows = [
+        # subClassOf, note — ingest.py:641-658
+        (1, "rdfs:subClassOf", udfs.iri(F.col("subClassOf"), "delimited"),
+         F.col("subClassOf").isNotNull()),
+        (2, ":hasNote", udfs.lang_literal(F.col("note")), F.col("note").isNotNull()),
+        # fragment side triples, in reference append order — ingest.py:658-736
+        *fragment_rows(3),
+        (rank, "rdfs:subClassOf", deepest, always),
+        # chain edges between category levels (subjects are the category IRIs)
+        (rank + 1, "rdfs:subClassOf", ssub, has["subsubsubcategory"], sssub),
+        (rank + 2, "rdfs:subClassOf", sub, has["subsubcategory"], ssub),
+        (rank + 3, "rdfs:subClassOf", cat, has["subcategory"], sub),
+        # compound display label — appended last (ingest.py:833-835)
+        (rank + 4, "rdfs:label", udfs.lang_literal(F.col("__label")), always),
+    ]
+    parts.append(emit_rows(d, sheet_rank, rows))
     return union_triples(parts)
 
 

@@ -54,5 +54,3 @@ MEASURES_SPECS = (
     ),
 )
 # fmt: on
-
-MEASURES_SHEETS = tuple(s.table for s in MEASURES_SPECS)

@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 
 from mhdb_tables2turtles_spark.functions import udfs
 from mhdb_tables2turtles_spark.operators.triples import (
-    exclude_filter,
+    emit_rows,
+    present,
     union_triples,
 )
 from mhdb_tables2turtles_spark.plans.common import classes_spec, properties_spec
@@ -157,17 +158,12 @@ RESOURCES_SPECS = (
 # fmt: on
 
 
-def _nz(name: str) -> F.Column:
-    c = F.col(name)
-    return F.when(exclude_filter(c), c)
-
-
 def groups_composite_dim(groups: DataFrame) -> DataFrame:
     """(index, group_org): the value ``projects.indices_group`` resolves
     to — group, organization, or ``group + "_" + organization``
     (ingest.py:1543-1553)."""
-    g = _nz("group")
-    o = _nz("organization")
+    g = present(F.col("group"))
+    o = present(F.col("organization"))
     return groups.select(
         F.col("index"),
         F.when(g.isNotNull() & o.isNotNull(), F.concat(g, F.lit("_"), o))
@@ -183,14 +179,16 @@ def groups_triples(tables: Mapping[str, DataFrame], sheet_rank: int) -> DataFram
     Subject = group IRI, organization IRI, or composite group_org IRI;
     per-row side triples declare the organization and member entities.
     """
-    g0 = tables["groups"]
-    g = g0.select(
+    g = tables["groups"].select(
         "row_id",
-        *[_nz(c).alias(c) for c in ("group", "organization", "link",
-                                    "abbreviation", "member")],
+        *[present(F.col(c)).alias(c) for c in ("group", "organization", "link",
+                                               "abbreviation", "member")],
     )
     grp = F.col("group")
     org = F.col("organization")
+    link = F.col("link")
+    abbr = F.col("abbreviation")
+    member = F.col("member")
     subject = F.when(
         grp.isNotNull() & org.isNotNull(),
         udfs.iri(F.concat(grp, F.lit("_"), org), "delimited"),
@@ -199,47 +197,23 @@ def groups_triples(tables: Mapping[str, DataFrame], sheet_rank: int) -> DataFram
     )
     g = g.withColumn("__subject", subject).filter(F.col("__subject").isNotNull())
 
-    def part(df, pred: str, obj: F.Column, rank: int, subj=None):
-        return df.select(
-            (F.col("__subject") if subj is None else subj).alias("subject"),
-            F.lit(pred).alias("predicate"),
-            obj.alias("object"),
-            F.lit(sheet_rank).alias("sheet_rank"),
-            F.col("row_id").alias("row_id"),
-            F.lit(rank).alias("pred_rank"),
-        )
-
-    has_grp = g.filter(grp.isNotNull())
-    has_org = g.filter(org.isNotNull())
-    parts = [
+    org_iri = udfs.iri(org, "delimited")
+    member_iri = udfs.iri(member, "delimited")
+    return emit_rows(g, sheet_rank, [
         # group typing/label attach to the (possibly composite) subject
-        part(has_grp, "a", F.lit(":Group"), 0),
-        part(has_grp, "rdfs:label", udfs.lang_literal(grp), 1),
+        (0, "a", F.lit(":Group"), grp.isNotNull()),
+        (1, "rdfs:label", udfs.lang_literal(grp), grp.isNotNull()),
         # organization entity declared under its own IRI
-        part(has_org, "a", F.lit(":Organization"), 2, subj=udfs.iri(org, "delimited")),
-        part(has_org, "rdfs:label", udfs.lang_literal(org), 3, subj=udfs.iri(org, "delimited")),
-        part(
-            g.filter(grp.isNotNull() & org.isNotNull()),
-            ":isGroupMemberOf", udfs.iri(org, "delimited"), 4,
-        ),
-        part(
-            g.filter(F.col("link").isNotNull()),
-            ":hasWebsite",
-            F.format_string('"%s"^^xsd:anyURI', F.trim(F.col("link"))), 5,
-        ),
-        part(
-            g.filter(F.col("abbreviation").isNotNull()),
-            ":hasAbbreviation", udfs.iri(F.col("abbreviation"), "delimited"), 6,
-        ),
-    ]
-    has_member = g.filter(F.col("member").isNotNull())
-    member_iri = udfs.iri(F.col("member"), "delimited")
-    parts += [
-        part(has_member, "a", F.lit(":Person"), 7, subj=member_iri),
-        part(has_member, ":hasName", udfs.lang_literal(F.col("member")), 8, subj=member_iri),
-        part(has_member, ":hasMember", member_iri, 9),
-    ]
-    return union_triples(parts)
+        (2, "a", F.lit(":Organization"), org.isNotNull(), org_iri),
+        (3, "rdfs:label", udfs.lang_literal(org), org.isNotNull(), org_iri),
+        (4, ":isGroupMemberOf", org_iri, grp.isNotNull() & org.isNotNull()),
+        (5, ":hasWebsite", F.format_string('"%s"^^xsd:anyURI', F.trim(link)),
+         link.isNotNull()),
+        (6, ":hasAbbreviation", udfs.iri(abbr, "delimited"), abbr.isNotNull()),
+        (7, "a", F.lit(":Person"), member.isNotNull(), member_iri),
+        (8, ":hasName", udfs.lang_literal(member), member.isNotNull(), member_iri),
+        (9, ":hasMember", member_iri, member.isNotNull()),
+    ])
 
 
 def resources_triples(tables: Mapping[str, DataFrame]) -> DataFrame:

@@ -24,7 +24,7 @@ Input resolution per workbook:
 from __future__ import annotations
 
 import os
-from typing import Callable, Mapping
+from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,67 +33,35 @@ from mhdb_tables2turtles_spark.operators.triples import (
     dedup_triples,
     filter_valid,
 )
+from mhdb_tables2turtles_spark.plans.assessments import assessments_triples
+from mhdb_tables2turtles_spark.plans.chills import CHILLS_SPECS
+from mhdb_tables2turtles_spark.plans.disorders import disorders_triples
+from mhdb_tables2turtles_spark.plans.measures import MEASURES_SPECS
+from mhdb_tables2turtles_spark.plans.resources import resources_triples
 from mhdb_tables2turtles_spark.plans.sheetspec import workbook_triples
+from mhdb_tables2turtles_spark.plans.states import STATES_SPECS
+from mhdb_tables2turtles_spark.sources import workbooks as wb
+from mhdb_tables2turtles_spark.sources.golden import (
+    fixture_spark_tables,
+    load_golden_triples,
+    reverse_fixture,
+)
 
 __all__ = ["WORKBOOKS", "load_workbook_tables", "build_workbook", "run_all"]
-
-
-def _chills_frames():
-    from mhdb_tables2turtles_spark.sources.golden import (
-        load_golden_triples,
-        reverse_fixture,
-    )
-
-    return reverse_fixture(load_golden_triples())
-
-
-def _chills_triples(tables: Mapping[str, DataFrame]) -> DataFrame:
-    from mhdb_tables2turtles_spark.plans.chills import CHILLS_SPECS
-
-    return workbook_triples(tables, CHILLS_SPECS)
-
-
-def _states_triples(tables: Mapping[str, DataFrame]) -> DataFrame:
-    from mhdb_tables2turtles_spark.plans.states import STATES_SPECS
-
-    return workbook_triples(tables, STATES_SPECS)
-
-
-def _measures_triples(tables: Mapping[str, DataFrame]) -> DataFrame:
-    from mhdb_tables2turtles_spark.plans.measures import MEASURES_SPECS
-
-    return workbook_triples(tables, MEASURES_SPECS)
-
-
-def _frames_fn(name: str):
-    from mhdb_tables2turtles_spark.sources import workbooks as wb
-
-    return getattr(wb, f"{name}_frames")
-
-
-def _plan_fn(name: str) -> Callable[[Mapping[str, DataFrame]], DataFrame]:
-    if name == "disorders":
-        from mhdb_tables2turtles_spark.plans.disorders import disorders_triples
-
-        return disorders_triples
-    if name == "resources":
-        from mhdb_tables2turtles_spark.plans.resources import resources_triples
-
-        return resources_triples
-    from mhdb_tables2turtles_spark.plans.assessments import assessments_triples
-
-    return assessments_triples
 
 
 # name -> (triples builder, fixture frames builder); insertion order is
 # the reference driver's dispatch order (create_mhdb:175-218)
 WORKBOOKS: dict[str, tuple] = {
-    "states": (_states_triples, lambda: _frames_fn("states")()),
-    "disorders": (lambda t: _plan_fn("disorders")(t), lambda: _frames_fn("disorders")()),
-    "resources": (lambda t: _plan_fn("resources")(t), lambda: _frames_fn("resources")()),
-    "assessments": (lambda t: _plan_fn("assessments")(t), lambda: _frames_fn("assessments")()),
-    "measures": (_measures_triples, lambda: _frames_fn("measures")()),
-    "chills": (_chills_triples, _chills_frames),
+    "states": (lambda t: workbook_triples(t, STATES_SPECS), wb.states_frames),
+    "disorders": (disorders_triples, wb.disorders_frames),
+    "resources": (resources_triples, wb.resources_frames),
+    "assessments": (assessments_triples, wb.assessments_frames),
+    "measures": (lambda t: workbook_triples(t, MEASURES_SPECS), wb.measures_frames),
+    "chills": (
+        lambda t: workbook_triples(t, CHILLS_SPECS),
+        lambda: reverse_fixture(load_golden_triples()),
+    ),
 }
 
 
@@ -119,14 +87,8 @@ def load_workbook_tables(
         return tables
     frames = WORKBOOKS[name][1]()
     if name == "chills":
-        from mhdb_tables2turtles_spark.sources.golden import (
-            fixture_spark_tables,
-        )
-
         return fixture_spark_tables(spark, frames)
-    from mhdb_tables2turtles_spark.sources.workbooks import spark_tables
-
-    return spark_tables(spark, frames)
+    return wb.spark_tables(spark, frames)
 
 
 def build_workbook(

@@ -10,9 +10,17 @@ generic compiler over a declarative :class:`SheetSpec`.
 Dataflow per sheet (all built-in DataFrame ops; Python only in the
 label/IRI pandas UDFs):
 
-    scan -> filter(required subject) -> per-emitter select
-         -> FK families: explode(split(fk, ',')) -> broadcast equi-join
-         -> unionByName -> (caller) dedup_triples
+    scan -> filter(required subject) -> mint __subject
+      +-> one emit_rows pass: type, label, Constant, CodeMap, non-split
+      |   Literal/IriRef and every absent-cell default, as
+      |   inline(array(when(cond, struct(s, p, o, rank)), ...))
+      +-> per split emitter: explode(split(cell, ',')) -> emit_rows
+      +-> per FK emitter: explode(fk elements) -> broadcast equi-join
+      |   -> emit_rows
+      -> unionByName -> (caller) dedup_triples
+
+A sheet therefore scans its table 1 + (split emitters) + (FK emitters)
+times, plus one scan of each FK's dimension.
 
 Every dimension sheet is tiny relative to the fact table, so FK joins are
 ``broadcast()`` -- no shuffle.  The reference instead re-scans the
@@ -30,7 +38,9 @@ from pyspark.sql import functions as F
 
 from mhdb_tables2turtles_spark.functions import udfs
 from mhdb_tables2turtles_spark.operators.triples import (
+    emit_rows,
     exclude_filter,
+    present,
     union_triples,
 )
 
@@ -144,23 +154,31 @@ class SheetSpec:
     emitters: Sequence = field(default_factory=tuple)
 
 
-def _literal_expr(lit: Literal) -> F.Column:
-    col = F.col(lit.column)
+def _literal_expr(lit: Literal, col: F.Column) -> F.Column:
     if lit.kind == "lang":
         return udfs.lang_literal(col, lit.lang)
     if lit.kind == "anyURI":
         return F.format_string('"%s"^^xsd:anyURI', F.trim(col))
     if lit.kind == "gyear":
-        return F.format_string(
-            '"%s"^^xsd:gyear', F.col(lit.column).cast("double").cast("long")
-        )
+        return F.format_string('"%s"^^xsd:gyear', col.cast("double").cast("long"))
     if lit.kind in ("int", "nonNegativeInteger", "decimal"):
-        val = F.col(lit.column)
-        val = val.cast("double").cast("long") if lit.int_cast else val
+        val = col.cast("double").cast("long") if lit.int_cast else col
         return F.format_string(f'"%s"^^xsd:{lit.kind}', val.cast("string"))
     if lit.kind == "string":
         return F.format_string('"%s"^^xsd:string', col)
     raise ValueError(f"unknown literal kind: {lit.kind!r}")
+
+
+def _object(em: Literal | IriRef, col: F.Column) -> F.Column:
+    """The object a Literal/IriRef cell (or split element) emits."""
+    if isinstance(em, Literal):
+        return _literal_expr(em, col)
+    return col if em.raw else udfs.iri(col, em.style)
+
+
+def _code(col: F.Column) -> F.Column:
+    """Int code of a present cell; null (never a failed cast) otherwise."""
+    return present(col).cast("double").cast("long")
 
 
 def _fk_elements(col: F.Column) -> F.Column:
@@ -175,6 +193,56 @@ def _fk_elements(col: F.Column) -> F.Column:
         ),
         lambda x: x.cast("double").cast("long"),
     )
+
+
+def _split_pass(
+    base: DataFrame, em: Literal | IriRef, rank: int, sheet_rank: int
+) -> DataFrame:
+    """One triple per non-empty comma-separated element of the cell."""
+    elems = base.select(
+        "__subject", ROW_ID, F.explode(F.split(F.col(em.column), ",")).alias("__e")
+    )
+    elem = present(F.trim(F.col("__e")))
+    return emit_rows(
+        elems, sheet_rank, [(rank, em.predicate, _object(em, elem), elem.isNotNull())]
+    )
+
+
+def _fk_pass(
+    tables: Mapping[str, DataFrame], base: DataFrame, em: ForeignKey,
+    rank: int, sheet_rank: int,
+) -> DataFrame:
+    """One triple per FK element that resolves to a present dimension
+    value (broadcast equi-join)."""
+    fact_cols = ["__subject", ROW_ID]
+    if em.pred_code_column:
+        fact_cols.append(em.pred_code_column)
+    fact = base.filter(exclude_filter(F.col(em.column))).select(
+        *fact_cols, F.explode(_fk_elements(F.col(em.column))).alias("__fk")
+    )
+    dim = tables[em.dim].select(
+        F.col("index").cast("long").alias("__idx"),
+        F.col(em.dim_value).alias("__val"),
+    )
+    joined = fact.join(F.broadcast(dim), fact["__fk"] == dim["__idx"], "inner")
+    val = present(F.col("__val"))
+    if em.truncate:
+        val = F.substring(val, 1, em.truncate)
+    obj = udfs.iri(val, em.style)
+    if em.obj_prefix:
+        obj = F.concat(F.lit(em.obj_prefix), obj)
+    pred = em.predicate
+    if em.pred_code_column:
+        code = _code(F.col(em.pred_code_column))
+        pred = F.lit(em.pred_default or em.predicate)
+        for c, p in reversed(tuple(em.pred_map)):
+            pred = F.when(code == c, F.lit(p)).otherwise(pred)
+    when = val.isNotNull()
+    if em.reverse:
+        row = (rank, pred, F.col("__subject"), when, obj)
+    else:
+        row = (rank, pred, obj, when)
+    return emit_rows(joined, sheet_rank, [row])
 
 
 def sheet_triples(
@@ -195,134 +263,55 @@ def sheet_triples(
         "__subject", udfs.iri(subj, spec.subject_style)
     )
 
-    def part(obj_expr: F.Column, predicate, rank: int, src=None, subj=None):
-        src_df = base if src is None else src
-        pred = F.lit(predicate) if isinstance(predicate, str) else predicate
-        subj = F.col("__subject") if subj is None else subj
-        return src_df.select(
-            subj.alias("subject"),
-            pred.alias("predicate"),
-            obj_expr.alias("object"),
-            F.lit(sheet_rank).alias("sheet_rank"),
-            F.col(ROW_ID).alias("row_id"),
-            F.lit(rank).alias("pred_rank"),
-        )
-
-    parts = []
+    always = F.lit(True)
+    rows = []  # row-local emitters: one emit_rows pass over base
+    passes = []  # split and FK emitters: one pass each
     rank = 0
     if spec.rdf_type:
-        parts.append(part(F.lit(spec.rdf_type), spec.type_predicate, rank))
+        rows.append((rank, spec.type_predicate, F.lit(spec.rdf_type), always))
         rank += 1
     if spec.label_predicate:
         label_src = F.trim(F.col(spec.label_column or spec.subject_column))
         if spec.subject_truncate and not spec.label_column:
             label_src = F.substring(label_src, 1, spec.subject_truncate)
-        parts.append(
-            part(udfs.lang_literal(label_src), spec.label_predicate, rank)
+        rows.append(
+            (rank, spec.label_predicate, udfs.lang_literal(label_src), always)
         )
         rank += 1
 
     for em in spec.emitters:
         if isinstance(em, Constant):
-            parts.append(part(F.lit(em.object), em.predicate, rank))
+            rows.append((rank, em.predicate, F.lit(em.object), always))
         elif isinstance(em, CodeMap):
-            src = base.filter(exclude_filter(F.col(em.column)))
-            code = F.col(em.column).cast("double").cast("long")
+            # `default` is for present, unmapped codes -- not absent cells
+            cell = F.col(em.column)
             obj = F.lit(em.default)
             for c, o in reversed(tuple(em.mapping)):
-                obj = F.when(code == c, F.lit(o)).otherwise(obj)
-            src = src.withColumn("__cm", obj).filter(F.col("__cm").isNotNull())
-            parts.append(part(F.col("__cm"), em.predicate, rank, src))
-        elif isinstance(em, Literal):
-            if em.split:
-                src = (
-                    base.filter(exclude_filter(F.col(em.column)))
-                    .withColumn(
-                        "__elem",
-                        F.explode(F.split(F.col(em.column), ",")),
-                    )
-                    .withColumn("__elem", F.trim("__elem"))
-                    .filter(exclude_filter(F.col("__elem")))
-                )
-                lit = Literal("__elem", em.predicate, em.kind, em.lang)
-                parts.append(part(_literal_expr(lit), em.predicate, rank, src))
-            else:
-                src = base.filter(exclude_filter(F.col(em.column)))
-                parts.append(part(_literal_expr(em), em.predicate, rank, src))
-        elif isinstance(em, IriRef):
-            if em.default is not None:
-                absent = base.filter(~exclude_filter(F.col(em.column)))
-                parts.append(part(F.lit(em.default), em.predicate, rank, absent))
-            if em.split:
-                src = (
-                    base.filter(exclude_filter(F.col(em.column)))
-                    .withColumn(
-                        "__elem",
-                        F.explode(
-                            F.filter(
-                                F.split(F.col(em.column), ","),
-                                lambda x: F.length(x) > 0,
-                            )
-                        ),
-                    )
-                    .withColumn("__elem", F.trim("__elem"))
-                    .filter(exclude_filter(F.col("__elem")))
-                )
-                obj = (
-                    F.col("__elem")
-                    if em.raw
-                    else udfs.iri(F.col("__elem"), em.style)
-                )
-                parts.append(part(obj, em.predicate, rank, src))
-            else:
-                src = base.filter(exclude_filter(F.col(em.column)))
-                obj = (
-                    F.col(em.column)
-                    if em.raw
-                    else udfs.iri(F.col(em.column), em.style)
-                )
-                parts.append(part(obj, em.predicate, rank, src))
-        elif isinstance(em, ForeignKey):
-            if em.default is not None:
-                absent = base.filter(~exclude_filter(F.col(em.column)))
-                parts.append(part(F.lit(em.default), em.predicate, rank, absent))
-            fact_cols = ["__subject", ROW_ID]
-            if em.pred_code_column:
-                fact_cols.append(em.pred_code_column)
-            fact = base.filter(exclude_filter(F.col(em.column))).select(
-                *fact_cols,
-                F.explode(_fk_elements(F.col(em.column))).alias("__fk"),
+                obj = F.when(_code(cell) == c, F.lit(o)).otherwise(obj)
+            rows.append(
+                (rank, em.predicate, obj, exclude_filter(cell) & obj.isNotNull())
             )
-            dim = tables[em.dim].select(
-                F.col("index").cast("long").alias("__idx"),
-                F.col(em.dim_value).alias("__val"),
-            )
-            joined = fact.join(
-                F.broadcast(dim), fact["__fk"] == dim["__idx"], "inner"
-            ).filter(exclude_filter(F.col("__val")))
-            val = F.col("__val")
-            if em.truncate:
-                val = F.substring(val, 1, em.truncate)
-            obj = udfs.iri(val, em.style)
-            if em.obj_prefix:
-                obj = F.concat(F.lit(em.obj_prefix), obj)
-            pred = em.predicate
-            if em.pred_code_column:
-                code = F.col(em.pred_code_column).cast("double").cast("long")
-                pred = F.lit(em.pred_default or em.predicate)
-                for c, p in reversed(tuple(em.pred_map)):
-                    pred = F.when(code == c, F.lit(p)).otherwise(pred)
-            if em.reverse:
-                parts.append(
-                    part(F.col("__subject"), pred, rank, joined, subj=obj)
+        elif isinstance(em, (Literal, IriRef, ForeignKey)):
+            cell = F.col(em.column)
+            if not isinstance(em, Literal) and em.default is not None:
+                # the absent-cell default
+                rows.append(
+                    (rank, em.predicate, F.lit(em.default), ~exclude_filter(cell))
                 )
+            if isinstance(em, ForeignKey):
+                passes.append(_fk_pass(tables, base, em, rank, sheet_rank))
+            elif em.split:
+                passes.append(_split_pass(base, em, rank, sheet_rank))
             else:
-                parts.append(part(obj, pred, rank, joined))
+                obj = _object(em, present(cell))
+                rows.append((rank, em.predicate, obj, exclude_filter(cell)))
         else:
             raise TypeError(f"unknown emitter: {em!r}")
         rank += 1
 
-    return union_triples(parts)
+    if rows:
+        passes.insert(0, emit_rows(base, sheet_rank, rows))
+    return union_triples(passes)
 
 
 def workbook_triples(

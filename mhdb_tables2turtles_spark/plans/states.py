@@ -40,5 +40,3 @@ STATES_SPECS = (
     ),
 )
 # fmt: on
-
-STATES_SHEETS = tuple(s.table for s in STATES_SPECS)

@@ -7,8 +7,9 @@ from pyspark.sql import functions as F
 from mhdb_tables2turtles_spark.functions.strings import format_iri
 from mhdb_tables2turtles_spark.operators.compound import (
     compound_columns,
-    fragment_side_triples,
+    fragment_rows,
 )
+from mhdb_tables2turtles_spark.operators.triples import emit_rows
 
 
 def _row(spark, **over):
@@ -55,14 +56,16 @@ def test_absent_fragments_are_skipped(spark):
 
 
 def test_side_triples(spark):
-    df = _row(spark)
     _, iri = compound_columns(F.col("disorder"))
+    df = _row(spark).withColumn("__subject", iri).withColumn("row_id", F.lit(0))
     triples = {
-        (r.subject, r.predicate, r.object)
-        for r in fragment_side_triples(df, iri).collect()
+        (r.subject, r.predicate, r.object, r.pred_rank)
+        for r in emit_rows(df, 0, fragment_rows(5)).collect()
     }
-    subj = df.select(iri.alias("i")).first().i
-    assert (subj, ":hasICD9Code", "ICD9CM:296.21") in triples
-    assert (subj, ":hasDiagnosticSpecifier", ":WithAnxiousDistress") in triples
-    assert (subj, ":hasSeverity", ":Mild") in triples
-    assert len(triples) == 3
+    subj = df.first()["__subject"]
+    # ranks follow fragment order: ICD9CM is the first, severity the eighth
+    assert triples == {
+        (subj, ":hasICD9Code", "ICD9CM:296.21", 5),
+        (subj, ":hasDiagnosticSpecifier", ":WithAnxiousDistress", 7),
+        (subj, ":hasSeverity", ":Mild", 12),
+    }

@@ -5,11 +5,15 @@ Each test feeds the same deterministic fixture frames to (a) the
 reference's ``ingest_*`` function (run unmodified via a fake-ExcelFile
 shim, with ``np.int`` restored for numpy>=1.24) and (b) our SheetSpec
 plan, then asserts the two triple sets are identical — P = R = 1.0, a
-stricter gate than the BASELINE P/R >= 0.95 target.
+stricter gate than the BASELINE P/R >= 0.95 target.  Those tests skip
+where the reference checkout is absent; the snapshot, emitter edge-case
+and plan-shape tests below need nothing outside the repo.
 """
 
 from __future__ import annotations
 
+import difflib
+import os
 import sys
 
 import numpy as np
@@ -34,7 +38,10 @@ def reference_ingest():
         np.int = int  # removed alias; the 2020 reference predates numpy 1.24
     if REFERENCE not in sys.path:
         sys.path.insert(0, REFERENCE)
-    import mhdb.ingest as ingest
+    try:
+        import mhdb.ingest as ingest
+    except ImportError:
+        pytest.skip(f"needs the reference checkout at {REFERENCE}")
 
     return ingest
 
@@ -231,3 +238,191 @@ def test_measures_matches_reference(spark, reference_ingest):
     )
     got = plan_set(spark, frames, MEASURES_SPECS)
     assert_equal_sets(got, want)
+
+
+# ------------------------------------------- in-repo snapshots and shape
+
+SNAPSHOTS = os.path.join(os.path.dirname(__file__), "data", "workbooks")
+FIXTURE_WORKBOOKS = ("states", "disorders", "resources", "assessments", "measures")
+
+
+@pytest.fixture(scope="module")
+def ontologies(spark):
+    from mhdb_tables2turtles_spark.plans.runner import load_workbook_tables
+
+    return load_workbook_tables(spark, "resources")["ontologies"].localCheckpoint()
+
+
+def render_fixture(spark, name: str, ontologies) -> str:
+    """One fixture workbook as Turtle, rendered the way the workbooks
+    benchmark renders it."""
+    from mhdb_tables2turtles_spark.operators.serialize import render_document
+    from mhdb_tables2turtles_spark.plans.runner import build_workbook
+
+    triples = build_workbook(spark, name).localCheckpoint()
+    return render_document(
+        triples, f"http://www.purl.org/mentalhealth/{name}", "0.1.0",
+        name, f"{name} workbook", prefix_table=ontologies,
+    )
+
+
+@pytest.mark.parametrize("name", FIXTURE_WORKBOOKS)
+def test_workbook_snapshot(spark, ontologies, name):
+    """Byte-for-byte guard on plan output that needs no reference
+    checkout: each fixture workbook renders exactly its committed
+    ``tests/data/workbooks/<name>.ttl``."""
+    with open(os.path.join(SNAPSHOTS, f"{name}.ttl"), encoding="utf-8") as f:
+        want = f.read()
+    got = render_fixture(spark, name, ontologies)
+    if got != want:
+        diff = difflib.unified_diff(
+            want.splitlines(), got.splitlines(), "snapshot", "rendered",
+            lineterm="", n=1,
+        )
+        pytest.fail("\n".join(list(diff)[:40]))
+
+
+def _edge_tables(spark):
+    """One sheet whose optional cells are present, sentinel or null, plus
+    the two dimensions its foreign keys resolve against."""
+    cols = ("name", "code", "num", "year", "aliases", "refs", "broader",
+            "parent", "owner", "tags", "tag_kind")
+    schema = "index long, row_id long, " + ", ".join(f"{c} string" for c in cols)
+    E, N = "EmptyValue", None
+    rows = [
+        (0, 0, "Alpha Item", "1", "12.0", "1999", "First, Premier",
+         "beta thing, gamma", "Big Thing", "1", "0", "0,1", "1"),
+        (1, 1, "Beta", E, "nan", E, E, E, "nan", E, "nan", E, E),
+        (2, 2, "Gamma", N, N, N, N, N, N, N, N, N, N),
+        (3, 3, "Delta", "7", "3", "2001.0", " , Second,, nan", ", delta one,,",
+         "  ", "5", "1", "1", N),
+        (4, 4, E, "2", "1", "1990", "x", "y", "z", "0", "0", "0", "1"),
+        (5, 5, N, "2", "1", "1990", "x", "y", "z", "0", "0", "0", "1"),
+        (6, 6, "Epsilon", "2.0", "0", "1987", N, "zeta", N, "0, 3", N, "2,0", "9"),
+    ]
+    return {
+        "items": spark.createDataFrame(rows, schema),
+        "owners": spark.createDataFrame(
+            [(0, 0, "Org One"), (1, 1, "Org Two")],
+            "index long, row_id long, owner string",
+        ),
+        "tags": spark.createDataFrame(
+            [(0, 0, "red"), (1, 1, "Blue Green"), (2, 2, E)],
+            "index long, row_id long, tag string",
+        ),
+    }
+
+
+def _edge_spec():
+    from mhdb_tables2turtles_spark.plans.sheetspec import (
+        CodeMap,
+        Constant,
+        ForeignKey,
+        IriRef,
+        Literal,
+        SheetSpec,
+    )
+
+    return SheetSpec(
+        table="items", subject_column="name", rdf_type=":Item",
+        emitters=(
+            Constant("rdfs:subClassOf", ":Thing"),
+            CodeMap("code", ":hasKind", ((1, ":One"), (2, ":Two")), default=":Other"),
+            Literal("num", ":hasCount", "nonNegativeInteger", int_cast=True),
+            Literal("year", ":hasYear", "gyear"),
+            Literal("aliases", "rdfs:label", split=True),
+            IriRef("refs", ":seeAlso", split=True, raw=False),
+            IriRef("broader", "rdfs:subClassOf", raw=False, default=":Root"),
+            ForeignKey("parent", "items", "name", ":hasParent", default=":NoParent"),
+            ForeignKey("owner", "owners", "owner", ":owns", reverse=True),
+            ForeignKey("tags", "tags", "tag", ":tagged", obj_prefix="ex",
+                       pred_code_column="tag_kind",
+                       pred_map=((1, ":primaryTag"),), pred_default=":otherTag"),
+        ),
+    )
+
+
+# sheet_triples(_edge_tables(spark), _edge_spec(), 3), sorted
+EDGE_TRIPLES = [
+    (':AlphaItem', ':hasCount', '"12"^^xsd:nonNegativeInteger', 3, 0, 4),
+    (':AlphaItem', ':hasKind', ':One', 3, 0, 3),
+    (':AlphaItem', ':hasParent', ':Beta', 3, 0, 9),
+    (':AlphaItem', ':hasYear', '"1999"^^xsd:gyear', 3, 0, 5),
+    (':AlphaItem', ':primaryTag', 'ex:BlueGreen', 3, 0, 11),
+    (':AlphaItem', ':primaryTag', 'ex:Red', 3, 0, 11),
+    (':AlphaItem', ':seeAlso', ':beta_thing', 3, 0, 7),
+    (':AlphaItem', ':seeAlso', ':gamma', 3, 0, 7),
+    (':AlphaItem', 'a', ':Item', 3, 0, 0),
+    (':AlphaItem', 'rdfs:label', '"""Alpha Item"""@en', 3, 0, 1),
+    (':AlphaItem', 'rdfs:label', '"""First"""@en', 3, 0, 6),
+    (':AlphaItem', 'rdfs:label', '"""Premier"""@en', 3, 0, 6),
+    (':AlphaItem', 'rdfs:subClassOf', ':Big_Thing', 3, 0, 8),
+    (':AlphaItem', 'rdfs:subClassOf', ':Thing', 3, 0, 2),
+    (':Beta', ':hasParent', ':NoParent', 3, 1, 9),
+    (':Beta', 'a', ':Item', 3, 1, 0),
+    (':Beta', 'rdfs:label', '"""Beta"""@en', 3, 1, 1),
+    (':Beta', 'rdfs:subClassOf', ':Root', 3, 1, 8),
+    (':Beta', 'rdfs:subClassOf', ':Thing', 3, 1, 2),
+    (':Delta', ':hasCount', '"3"^^xsd:nonNegativeInteger', 3, 3, 4),
+    (':Delta', ':hasKind', ':Other', 3, 3, 3),
+    (':Delta', ':hasYear', '"2001"^^xsd:gyear', 3, 3, 5),
+    (':Delta', ':otherTag', 'ex:BlueGreen', 3, 3, 11),
+    (':Delta', ':seeAlso', ':delta_one', 3, 3, 7),
+    (':Delta', 'a', ':Item', 3, 3, 0),
+    (':Delta', 'rdfs:label', '"""Delta"""@en', 3, 3, 1),
+    (':Delta', 'rdfs:label', '"""Second"""@en', 3, 3, 6),
+    (':Delta', 'rdfs:subClassOf', ':Root', 3, 3, 8),
+    (':Delta', 'rdfs:subClassOf', ':Thing', 3, 3, 2),
+    (':Epsilon', ':hasCount', '"0"^^xsd:nonNegativeInteger', 3, 6, 4),
+    (':Epsilon', ':hasKind', ':Two', 3, 6, 3),
+    (':Epsilon', ':hasParent', ':AlphaItem', 3, 6, 9),
+    (':Epsilon', ':hasParent', ':Delta', 3, 6, 9),
+    (':Epsilon', ':hasYear', '"1987"^^xsd:gyear', 3, 6, 5),
+    (':Epsilon', ':otherTag', 'ex:Red', 3, 6, 11),
+    (':Epsilon', ':seeAlso', ':zeta', 3, 6, 7),
+    (':Epsilon', 'a', ':Item', 3, 6, 0),
+    (':Epsilon', 'rdfs:label', '"""Epsilon"""@en', 3, 6, 1),
+    (':Epsilon', 'rdfs:subClassOf', ':Root', 3, 6, 8),
+    (':Epsilon', 'rdfs:subClassOf', ':Thing', 3, 6, 2),
+    (':Gamma', ':hasParent', ':NoParent', 3, 2, 9),
+    (':Gamma', 'a', ':Item', 3, 2, 0),
+    (':Gamma', 'rdfs:label', '"""Gamma"""@en', 3, 2, 1),
+    (':Gamma', 'rdfs:subClassOf', ':Root', 3, 2, 8),
+    (':Gamma', 'rdfs:subClassOf', ':Thing', 3, 2, 2),
+    (':OrgOne', ':owns', ':AlphaItem', 3, 0, 10),
+    (':OrgTwo', ':owns', ':Delta', 3, 3, 10),
+]
+
+
+def test_emitter_edge_cases(spark):
+    """Every emitter kind over present, sentinel and null cells: the
+    compiler's output rows, order keys included.  Absent-cell defaults
+    (IriRef/ForeignKey ``default``) fire only on absent cells;
+    ``CodeMap.default`` only on present, unmapped codes."""
+    from mhdb_tables2turtles_spark.plans.sheetspec import sheet_triples
+
+    t = sheet_triples(_edge_tables(spark), _edge_spec(), 3)
+    got = sorted(
+        (r.subject, r.predicate, r.object, r.sheet_rank, r.row_id, r.pred_rank)
+        for r in t.collect()
+    )
+    assert got == sorted(EDGE_TRIPLES)
+
+
+def test_states_plan_is_one_pass_per_sheet(spark):
+    """The states build scans each sheet once for all its row-local
+    emitters, once per split emitter and twice (fact + dimension) per
+    foreign key."""
+    from mhdb_tables2turtles_spark.plans.runner import build_workbook
+    from mhdb_tables2turtles_spark.plans.sheetspec import ForeignKey
+    from mhdb_tables2turtles_spark.plans.states import STATES_SPECS
+
+    want = sum(
+        1
+        + sum(getattr(em, "split", False) for em in spec.emitters)
+        + 2 * sum(isinstance(em, ForeignKey) for em in spec.emitters)
+        for spec in STATES_SPECS
+    )
+    assert want == 9
+    plan = build_workbook(spark, "states")._jdf.queryExecution().optimizedPlan()
+    assert plan.collectLeaves().size() == want
