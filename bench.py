@@ -1,11 +1,14 @@
 #!/usr/bin/env python3
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+"""Catalog benchmark: one timed pass over ``BENCH_QUERIES`` at
+$SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS], plus the host link
+graph (``web.linkgraph.host_pagerank``), which no other harness times.
 
-Also times the end-to-end web KG pipeline (synthesized corpus, fresh
-workdir, corpus materialization untimed) and reports pages/sec — the
-north-rule throughput metric.  Scaling evidence across parallelism
-levels lives in scripts/scaling_bench.py (writes BENCH/BASELINE.md).
+Prints the full summary, then a compact JSON line that ends stdout;
+the full per-query record also goes to the untracked
+``BENCH/last_bench.json``.  Pipeline and update throughput are
+perfbench's ``crawl_build`` and ``recrawl`` workloads
+(``python3 perfbench/run.py --workload crawl_build``); scaling across
+parallelism levels is ``scripts/scaling_bench.py``.
 """
 
 from __future__ import annotations
@@ -16,6 +19,9 @@ import shutil
 import sys
 import tempfile
 import time
+
+# synthetic pages behind the link graph
+LINK_GRAPH_PAGES = 3000
 
 
 def build_spark(cpus: int):
@@ -144,45 +150,10 @@ BENCH_QUERIES = (
 )
 
 
-def time_incremental_update(
-    spark, n_base: int, n_batch: int, partitions: int
-) -> dict:
-    """Cost of one incremental re-crawl epoch (KGPipeline.update) on top
-    of a committed base crawl — the O(increment) evidence: the timed
-    section processes only ``n_batch`` pages + the touched-component
-    merge, never the accumulated graph."""
-    from mhdb_tables2turtles_spark.web.pipeline import KGPipeline, build_corpus
-
-    tmp = tempfile.mkdtemp(prefix="bench_upd_")
-    try:
-        corpus_path = os.path.join(tmp, "corpus")
-        build_corpus(
-            spark, n_base + n_batch, seed=42, partitions=partitions
-        ).write.mode("overwrite").parquet(corpus_path)
-        pages = spark.read.parquet(corpus_path)
-        import pyspark.sql.functions as F
-
-        split = F.xxhash64("url") % (n_base + n_batch) < n_base
-        pipe = KGPipeline(spark, os.path.join(tmp, "work"))
-        pipe.run(pages.filter(split))  # base crawl, untimed
-        batch = pages.filter(~split)
-        n_b = batch.count()
-        t0 = time.time()
-        out = pipe.update(batch, "bench-epoch")
-        out["canonical"].count()
-        elapsed = time.time() - t0
-        return {
-            "update_sec": round(elapsed, 2),
-            "update_pages_per_sec": round(n_b / elapsed, 1),
-            "update_batch_pages": n_b,
-        }
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def time_link_graph(spark, n_pages: int, partitions: int) -> float:
+def time_link_graph(spark, partitions: int) -> float:
     """Host-level link-graph build + directed PageRank over a linked
-    synthetic corpus (pre-materialized, generation untimed)."""
+    synthetic corpus of ``LINK_GRAPH_PAGES`` pages (pre-materialized,
+    generation untimed)."""
     from mhdb_tables2turtles_spark.web.linkgraph import host_pagerank
     from mhdb_tables2turtles_spark.web.pages import synthesize_pages
 
@@ -190,7 +161,11 @@ def time_link_graph(spark, n_pages: int, partitions: int) -> float:
     try:
         path = os.path.join(tmp, "corpus")
         synthesize_pages(
-            spark, n_pages, seed=42, partitions=partitions, with_links=True
+            spark,
+            LINK_GRAPH_PAGES,
+            seed=42,
+            partitions=partitions,
+            with_links=True,
         ).write.mode("overwrite").parquet(path)
         pages = spark.read.parquet(path)
         t0 = time.time()
@@ -200,35 +175,9 @@ def time_link_graph(spark, n_pages: int, partitions: int) -> float:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def time_pipeline(spark, n_pages: int, partitions: int) -> dict:
-    """End-to-end KG pipeline over a pre-materialized synthetic corpus;
-    returns elapsed seconds + pages/sec (corpus generation untimed)."""
-    from mhdb_tables2turtles_spark.web.pipeline import KGPipeline, build_corpus
-
-    tmp = tempfile.mkdtemp(prefix="bench_kg_")
-    corpus_path = os.path.join(tmp, "corpus")
-    build_corpus(spark, n_pages, seed=42, partitions=partitions).write.mode(
-        "overwrite"
-    ).parquet(corpus_path)
-    pages = spark.read.parquet(corpus_path)
-
-    t0 = time.time()
-    out = KGPipeline(spark, os.path.join(tmp, "work")).run(pages)
-    n_triples = out["canonical"].count()
-    elapsed = time.time() - t0
-    shutil.rmtree(tmp, ignore_errors=True)
-    return {
-        "pipeline_sec": round(elapsed, 2),
-        "pages_per_sec": round(n_pages / elapsed, 1),
-        "n_pages": n_pages,
-        "n_triples": n_triples,
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    n_pages = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "3000"))
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 
     spark = build_spark(cpus)
@@ -236,113 +185,24 @@ def main() -> None:
 
     from mhdb_tables2turtles_spark.queries import QUERIES
 
-    # one untimed warmup: JVM/codegen warmup, Python-worker spin-up, and
-    # the per-worker Aho-Corasick automaton build (memoized per worker
-    # process) otherwise all land on whichever query runs first —
-    # kg_mentions was absorbing 4-7s of one-time startup
+    # one untimed warmup: JVM/codegen warmup and Python-worker spin-up
+    # otherwise land on whichever query runs first
     QUERIES["kg_mentions"](spark, sf_dir).count()
 
-    # burst-guard methodology (same as scripts/scaling_bench.py): this
-    # box's external tenants cause minutes-long load bursts that inflate
-    # a single measurement 5-50x (e.g. a 0.8s query measured at 61s).
-    # SPARK_GRAFT_BENCH_REPS > 1 runs the WHOLE catalog loop that many
-    # times INTERLEAVED and records each query's minimum — interleaving
-    # matters because a burst outlasts back-to-back reps of one query
-    # but not a full pass over the catalog.  At reps == 1 (the driver's
-    # per-round config) the bounded single-retry guard below still
-    # protects the worst victims.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "1"))
-
-    # History-aware burst threshold: BENCH/query_minima.json keeps the
-    # best quiet-window timing ever recorded per (sf, query) — a
-    # monotone floor across runs.  A query suddenly measuring >2.5x its
-    # floor (and >1.5s absolute) is almost always a burst victim even
-    # when it stays under the 12s absolute guard (observed:
-    # kg_star_join 9.5s during a burst vs a 2.9s quiet-window minimum),
-    # so it gets the same bounded single re-time.  Retries are capped
-    # per run so a build that genuinely got slower costs at most 15
-    # extra timings, not a doubled bench wall-clock.
-    here = os.path.dirname(os.path.abspath(__file__))
-    minima_path = os.path.join(here, "BENCH", "query_minima.json")
-    # Floors are parallelism-specific: a floor recorded at 32 cores
-    # would make most queries trip the 2.5x threshold on a 4-core run
-    # and burn the whole retry budget on non-burst slowness.  Scope the
-    # key by cpu count; bare "<sf>" keys are the legacy 32-core floors.
-    minima_key = sf if cpus == 32 else f"{sf}@c{cpus}"
-    hist: dict[str, float] = {}
-    try:
-        with open(minima_path) as f:
-            hist = {
-                k: float(v)
-                for k, v in json.load(f).get(minima_key, {}).items()
-                if isinstance(v, (int, float))
-            }
-    except (OSError, ValueError):
-        pass
-    retries_left = 15
-
     per_query: dict[str, float] = {}
-    for _ in range(max(reps, 1)):
-        for name in BENCH_QUERIES:
-            t0 = time.time()
-            QUERIES[name](spark, sf_dir).count()
-            dt = round(time.time() - t0, 3)
-            threshold = 12.0
-            if name in hist:
-                threshold = min(12.0, max(1.5, 2.5 * hist[name]))
-            if reps == 1 and dt > threshold and retries_left > 0:
-                # one bounded re-time: genuinely slow queries stay slow
-                # in both runs; burst victims recover
-                retries_left -= 1
-                t0 = time.time()
-                QUERIES[name](spark, sf_dir).count()
-                dt = min(dt, round(time.time() - t0, 3))
-            per_query[name] = min(per_query.get(name, dt), dt)
-    total = sum(per_query.values())
-
-    pipe = time_pipeline(spark, n_pages, partitions=cpus * 2)
-    for _ in range(reps - 1 if reps > 1 else (1 if pipe["pipeline_sec"] > 15 else 0)):
-        # reps > 1: best-of-reps like the catalog; reps == 1: one bounded
-        # re-time when a tenant burst ate the cores (the round-3 pipeline
-        # measures 8.5-10s in quiet windows at the default 3000 pages)
-        again = time_pipeline(spark, n_pages, partitions=cpus * 2)
-        if again["pipeline_sec"] < pipe["pipeline_sec"]:
-            pipe = again
-    total += pipe["pipeline_sec"]
-    per_query["web_kg_pipeline"] = pipe["pipeline_sec"]
-
-    lg = time_link_graph(spark, n_pages, partitions=cpus * 2)
-    for _ in range(reps - 1):
-        lg = min(lg, time_link_graph(spark, n_pages, partitions=cpus * 2))
-    total += lg
-    per_query["web_link_graph"] = lg
-
-    upd = time_incremental_update(
-        spark, n_base=n_pages, n_batch=max(n_pages // 5, 100),
-        partitions=cpus * 2,
-    )
-    for _ in range(reps - 1):
-        again = time_incremental_update(
-            spark, n_base=n_pages, n_batch=max(n_pages // 5, 100),
-            partitions=cpus * 2,
-        )
-        if again["update_sec"] < upd["update_sec"]:
-            upd = again
-    total += upd["update_sec"]
-    per_query["web_kg_update"] = upd["update_sec"]
+    for name in BENCH_QUERIES:
+        t0 = time.time()
+        QUERIES[name](spark, sf_dir).count()
+        per_query[name] = round(time.time() - t0, 3)
+    per_query["web_link_graph"] = time_link_graph(spark, partitions=cpus * 2)
 
     summary = {
         "metric": "bench_total_seconds",
-        "value": round(total, 2),
+        "value": round(sum(per_query.values()), 2),
         "unit": "sec",
         "queries": per_query,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "cpus": cpus,
-        "pages_per_sec": pipe["pages_per_sec"],
-        "pipeline_pages": pipe["n_pages"],
-        "pipeline_triples": pipe["n_triples"],
-        "update_pages_per_sec": upd["update_pages_per_sec"],
-        "update_batch_pages": upd["update_batch_pages"],
     }
     # The driver's tail capture keeps only the LAST ~2000 chars of
     # stdout and json-parses the final line; the full per-query dict
@@ -350,8 +210,9 @@ def main() -> None:
     # So: persist the full summary to disk, print it on an early line
     # for human logs, and END with a compact line that always fits —
     # totals + the slowest queries + a pointer to the full file.
-    # Neither artifact write may sink the run: on a read-only checkout
+    # The artifact write may not sink the run: on a read-only checkout
     # the timings must still reach stdout (the driver's only channel).
+    here = os.path.dirname(os.path.abspath(__file__))
     out_path = os.path.join(here, "BENCH", "last_bench.json")
     try:
         os.makedirs(os.path.dirname(out_path), exist_ok=True)
@@ -359,29 +220,11 @@ def main() -> None:
             json.dump(summary, f)
     except OSError:
         pass
-
-    # fold this run's timings into the per-sf quiet-window floor used
-    # by the burst guard above (monotone min across runs)
-    try:
-        with open(minima_path) as f:
-            all_minima = json.load(f)
-    except (OSError, ValueError):
-        all_minima = {}
-    sf_minima = all_minima.setdefault(minima_key, {})
-    for name, dt in per_query.items():
-        old = sf_minima.get(name)
-        sf_minima[name] = min(old, dt) if isinstance(old, (int, float)) else dt
-    try:
-        with open(minima_path, "w", encoding="utf-8") as f:
-            json.dump(all_minima, f, indent=0, sort_keys=True)
-    except OSError:
-        pass
     print(json.dumps(summary))
     compact = dict(summary)
-    slowest = dict(
+    compact["queries"] = dict(
         sorted(per_query.items(), key=lambda kv: -kv[1])[:12]
     )
-    compact["queries"] = slowest
     compact["n_queries"] = len(per_query)
     compact["queries_path"] = "BENCH/last_bench.json"
     print(json.dumps(compact))

@@ -126,7 +126,10 @@ def run_all(
     through into the literal) is NOT written; its ``validation_error``
     is recorded in the result and the remaining workbooks still build,
     so one bad cell never turns the whole driver run into a crash with
-    no artifacts.
+    no artifacts.  Likewise a workbook whose input file is missing (the
+    chills fixture reads the reference's golden ``chills.ttl``) is
+    skipped with a ``skipped`` reason naming the file; the resources
+    ``ontologies`` sheet, which every header needs, stays required.
 
     ``profile="owl"`` rewrites the reference's nonstandard vocabulary
     (``rdf:Class``/``rdf:Property``/``rdfs:equivalentProperty``) to the
@@ -159,48 +162,55 @@ def run_all(
     )
     out: dict[str, dict] = {}
     for name in WORKBOOKS:
-        # materialize once: the renderer needs three actions over the
-        # triple set (prefix harvest, ordered body, count) and the
-        # workbook plans are deep union-of-join trees — without this each
-        # action recomputes the whole plan (measured 3x the runtime)
-        triples = build_workbook(
-            spark, name, tables_root=tables_root
-        ).localCheckpoint()
-        if profile == "owl":
-            from mhdb_tables2turtles_spark.operators.serialize import (
-                owl_profile,
-            )
-
-            triples = owl_profile(triples)
-        doc = render_document(
-            triples,
-            f"{base_uri}/{name}",
-            version,
-            name,
-            f"mhdb {name} workbook (PySpark plan)",
-            prefix_table=ontologies,
-        )
-        n_pairs = err = None
-        if validate:
-            try:
-                n_pairs = validate_turtle(doc)
-            except TurtleSyntaxError as exc:
-                err = str(exc)
         path = os.path.join(out_dir, f"{name}.ttl")
-        if err is None:
-            tmp = path + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as f:
-                f.write(doc)
-            os.replace(tmp, path)
-        elif os.path.exists(path):
+        info = out[name] = {
+            "path": None,
+            "n_triples": None,
+            "n_pairs_validated": None,
+            "validation_error": None,
+            "skipped": None,
+        }
+        try:
+            tables = load_workbook_tables(spark, name, tables_root)
+        except FileNotFoundError as exc:
+            # a missing input skips this workbook only
+            info["skipped"] = f"input not found: {exc.filename or exc}"
+        else:
+            # materialize once: the renderer needs three actions over the
+            # triple set (prefix harvest, ordered body, count) and the
+            # workbook plans are deep union-of-join trees — without this
+            # each action recomputes the whole plan (measured 3x the
+            # runtime)
+            triples = build_workbook(spark, name, tables).localCheckpoint()
+            if profile == "owl":
+                from mhdb_tables2turtles_spark.operators.serialize import (
+                    owl_profile,
+                )
+
+                triples = owl_profile(triples)
+            doc = render_document(
+                triples,
+                f"{base_uri}/{name}",
+                version,
+                name,
+                f"mhdb {name} workbook (PySpark plan)",
+                prefix_table=ontologies,
+            )
+            info["n_triples"] = triples.count()
+            if validate:
+                try:
+                    info["n_pairs_validated"] = validate_turtle(doc)
+                except TurtleSyntaxError as exc:
+                    info["validation_error"] = str(exc)
+            if info["validation_error"] is None:
+                tmp = path + ".tmp"
+                with open(tmp, "w", encoding="utf-8") as f:
+                    f.write(doc)
+                os.replace(tmp, path)
+                info["path"] = path
+        if info["path"] is None and os.path.exists(path):
             # disk must match the returned path=None: a stale .ttl from
             # an earlier successful run would otherwise be picked up by
             # consumers globbing out_dir
             os.remove(path)
-        out[name] = {
-            "path": path if err is None else None,
-            "n_triples": triples.count(),
-            "n_pairs_validated": n_pairs,
-            "validation_error": err,
-        }
     return out

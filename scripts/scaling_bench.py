@@ -1,14 +1,20 @@
 #!/usr/bin/env python3
 """Scaling evidence: run the identical end-to-end KG pipeline job at two
-parallelism levels (default local[2] vs local[8], N vs 4N cores) on the same input and report
-throughput at both plus scaling efficiency, into BENCH/BASELINE.md.
+parallelism levels (default local[2] vs local[8], N vs 4N cores) and
+print throughput at both plus scaling efficiency as a Markdown report,
+followed by one JSON line.  Nothing is written to the repository.
 
-Sandbox stand-in for the north rule's "N vs 4N executors on a cluster"
-(per driver instruction — no real cluster here).  One JVM per run: each
-measurement executes in a fresh subprocess.
+Single-machine stand-in for the north rule's "N vs 4N executors on a
+cluster".  One JVM per run: each measurement executes in a fresh
+subprocess.
 
-Methodology notes (this sandbox has minutes-long external load/IO noise
-windows — single measurements swing 5-10x):
+The vocabulary is the in-repo ontology (``tests/data/ontology.ttl``, 40
+entities), so the numbers are not comparable with the 32-core
+campaigns in ``BENCH/BASELINE.md``, which used the reference's chills
+vocabulary.
+
+Methodology notes (shared machines have minutes-long external load/IO
+noise windows — single measurements swing 5-10x):
 
 * runs ALTERNATE between the two configs so a noise
   window hits both, and the per-config minimum over all reps is scored;
@@ -21,10 +27,9 @@ windows — single measurements swing 5-10x):
 Weak-scaling mode (``SPARK_GRAFT_SCALE_MODE=weak``): the page count
 scales WITH the core count (4x pages at 4x cores), so per-core work is
 constant — this separates compute scaling from fixed per-stage overhead
-(job scheduling + stage commit), which at 150k fixed pages dominates the
-tens-of-seconds stage times at local[8] and made the round-2 fixed-size
-2-vs-8 numbers unreadable.  Ideal weak scaling = equal elapsed at both
-configs; efficiency = T_N / T_4N.
+(job scheduling + stage commit).  Ideal weak scaling = equal elapsed at
+both configs; efficiency = T_N / T_4N.  Strong mode (the default) runs
+the same input at both configs; efficiency = speedup / (4N / N).
 
 Usage:
     python scripts/scaling_bench.py            # full interleaved run + report
@@ -51,9 +56,7 @@ REPS = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "2"))
 # "strong": same input at both configs.  "weak": pages scale with cores
 # (N_PAGES at min(CONFIGS), proportionally more at the larger config).
 MODE = os.environ.get("SPARK_GRAFT_SCALE_MODE", "strong")
-# append a dated strong-mode section instead of overwriting the curated
-# BENCH/BASELINE.md (weak mode always appends)
-APPEND = os.environ.get("SPARK_GRAFT_SCALE_APPEND", "") == "1"
+ONTOLOGY = os.path.join(REPO, "tests", "data", "ontology.ttl")
 FAST_DIR = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
 
 
@@ -106,14 +109,14 @@ def run_one(cpus: int, corpus_path: str) -> dict:
     spark = build_scale_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
-        build_corpus(spark, n_pages, seed=42, partitions=128).write.mode(
-            "overwrite"
-        ).parquet(corpus_path)
+        build_corpus(
+            spark, n_pages, seed=42, ttl_path=ONTOLOGY, partitions=128
+        ).write.mode("overwrite").parquet(corpus_path)
     pages = spark.read.parquet(corpus_path)
 
     workdir = tempfile.mkdtemp(prefix=f"scale_{cpus}_", dir=FAST_DIR)
     t0 = time.time()
-    pipe = KGPipeline(spark, workdir)
+    pipe = KGPipeline(spark, workdir, ttl_path=ONTOLOGY)
     out = pipe.run(pages)
     n_triples = out["canonical"].count()
     elapsed = time.time() - t0
@@ -178,12 +181,11 @@ def main() -> None:
 
     best = {c: min(rs, key=lambda r: r["elapsed_sec"]) for c, rs in runs.items()}
     lo, hi = min(CONFIGS), max(CONFIGS)
-    r8, r32 = best[lo], best[hi]
-    if MODE == "weak":
-        # constant per-core work: ideal is equal elapsed -> eff = T_N/T_4N
-        eff = r8["elapsed_sec"] / r32["elapsed_sec"]
-    else:
-        eff = (r32["pages_per_sec"] / r8["pages_per_sec"]) / (hi / lo)
+    weak = MODE == "weak"
+    # ideal speedup: equal elapsed under weak scaling (constant per-core
+    # work), hi/lo under strong scaling (same input)
+    ideal = 1 if weak else hi / lo
+    eff = best[lo]["elapsed_sec"] / best[hi]["elapsed_sec"] / ideal
 
     # noise-robust estimator: external load windows pollute individual
     # stages independently, so the sum of per-stage minima across reps
@@ -197,111 +199,68 @@ def main() -> None:
         for c, rs in runs.items()
     }
     qt = {c: sum(stage_min[c].values()) for c in CONFIGS}
-    if MODE == "weak":
-        eff_q = qt[lo] / qt[hi]
-    else:
-        eff_q = (qt[lo] / qt[hi]) / (hi / lo)
+    eff_q = qt[lo] / qt[hi] / ideal
 
-    def fmt_runs(rs):
-        return ", ".join(f"{r['elapsed_sec']}s" for r in rs)
+    heading = (
+        f"Weak scaling: {hi // lo}x pages at {hi // lo}x cores"
+        if weak
+        else f"Strong scaling: {N_PAGES} pages at both configs"
+    )
+    print(
+        f"""
+## {heading} (local[{lo}] vs local[{hi}])
 
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-
-    if MODE == "weak":
-        report = f"""
-## Weak scaling: {hi // lo}x pages at {hi // lo}x cores (local[{lo}] vs local[{hi}])
-
-Per-core work held constant: local[{lo}] processes {r8['n_pages']}
-pages, local[{hi}] processes {r32['n_pages']} pages of the same
-deterministic corpus family (seed 42).  Ideal = equal elapsed time;
-weak-scaling efficiency = T_N / T_4N.  Same interleaved/per-stage-minima
-noise methodology as the strong-scaling runs above.
+End-to-end KG pipeline (extract → mentions → linked → triples →
+canonical, every stage committed) over a pre-materialized synthetic
+corpus (seed 42) built from `tests/data/ontology.ttl`.  Runs alternate
+between configs; each config's best of {REPS} is scored; stage I/O on
+tmpfs.
 
 | config | pages | elapsed (s) | pages/sec | triples | all reps |
 |---|---|---|---|---|---|
-| local[{lo}] (N) | {r8['n_pages']} | {r8['elapsed_sec']} | {r8['pages_per_sec']} | {r8['n_triples']} | {fmt_runs(runs[lo])} |
-| local[{hi}] (4N) | {r32['n_pages']} | {r32['elapsed_sec']} | {r32['pages_per_sec']} | {r32['n_triples']} | {fmt_runs(runs[hi])} |
-
-**Weak-scaling efficiency: best-total {eff:.3f};
-per-stage-minima (noise-robust) {eff_q:.3f}** (target >= 0.8; ideal 1.0).
-
-Per-stage seconds (minimum across reps per config):
-
-| stage | local[{lo}] @ {r8['n_pages']}p | local[{hi}] @ {r32['n_pages']}p |
-|---|---|---|
-""" + "".join(
-            f"| {s} | {stage_min[lo][s]} | {stage_min[hi][s]} |\n"
-            for s in stage_names
-        ) + f"""
-Quiet-window totals: local[{lo}] {qt[lo]:.1f}s ({r8['n_pages']/qt[lo]:.0f} pages/s), local[{hi}] {qt[hi]:.1f}s ({r32['n_pages']/qt[hi]:.0f} pages/s).
-
-Throughput per core: local[{lo}] {r8['pages_per_sec']/lo:.1f} pages/s/core, local[{hi}] {r32['pages_per_sec']/hi:.1f} pages/s/core.
-
-Reproduce: `SPARK_GRAFT_SCALE_MODE=weak SPARK_GRAFT_SCALE_PAGES={N_PAGES} SPARK_GRAFT_SCALE_CONFIGS={lo},{hi} python scripts/scaling_bench.py`.
 """
-        with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "a") as f:
-            f.write(report)
-        print(
-            json.dumps(
-                {"mode": "weak", "efficiency": round(eff, 3), "efficiency_quiet": round(eff_q, 3), "quiet_totals": qt, "local_lo": r8, "local_hi": r32}
-            )
+        + "".join(
+            f"| local[{c}] ({tag}) | {best[c]['n_pages']} |"
+            f" {best[c]['elapsed_sec']} | {best[c]['pages_per_sec']} |"
+            f" {best[c]['n_triples']} |"
+            f" {', '.join(str(r['elapsed_sec']) + 's' for r in runs[c])} |\n"
+            for c, tag in ((lo, "N"), (hi, "4N"))
         )
-        return
-    title = (
-        "\n## Strong scaling re-run (appended)\n\nSame methodology as the"
-        " table at the top of this file, re-measured on the current code.\n"
-        if APPEND
-        else "# BENCH/BASELINE — throughput & scaling evidence\n"
-    )
-    report = title + f"""
-
-End-to-end KG pipeline (extract → mentions → linking → triples →
-canonicalize, every stage committed with manifests + lineage) over the
-same pre-materialized {r8['n_pages']}-page synthetic Common-Crawl-style
-corpus (~5 KB extracted text per page), identical input at both
-parallelism levels — the sandbox stand-in for N vs 4N executors, per
-driver instruction.
-
-Methodology: runs alternate between configs so this sandbox's minutes-long external
-noise windows hit both configs; per-config best of {REPS} is scored;
-stage I/O on tmpfs (compute scaling is what is being evidenced — on a
-real cluster stage I/O is distributed storage, not one local disk).
-
-| config | elapsed (s) | pages/sec | triples | all reps |
-|---|---|---|---|---|
-| local[{lo}] (N) | {r8['elapsed_sec']} | {r8['pages_per_sec']} | {r8['n_triples']} | {fmt_runs(runs[lo])} |
-| local[{hi}] (4N) | {r32['elapsed_sec']} | {r32['pages_per_sec']} | {r32['n_triples']} | {fmt_runs(runs[hi])} |
-
-**Scaling efficiency ({lo} → {hi} cores, ideal {hi}/{lo}x):
-best-total {eff:.3f}; per-stage-minima (noise-robust) {eff_q:.3f}**
-(target >= 0.8 per BASELINE.json north_rule; the per-stage-minima
-estimator sums each stage's fastest rep per config — external noise
-windows hit individual stages of individual runs, so this approximates
-quiet-window capability at each parallelism level)
+        + f"""
+**Scaling efficiency ({lo} → {hi} cores, ideal speedup {ideal:g}x):
+best-total {eff:.3f}; per-stage minima {eff_q:.3f}** (target >= 0.8)
 
 Per-stage seconds (minimum across reps per config):
 
 | stage | local[{lo}] | local[{hi}] |
 |---|---|---|
-""" + "".join(
-        f"| {s} | {stage_min[lo][s]} | {stage_min[hi][s]} |\n"
-        for s in stage_names
-    ) + f"""
-Quiet-window totals: local[{lo}] {qt[lo]:.1f}s ({r8['n_pages']/qt[lo]:.0f} pages/s), local[{hi}] {qt[hi]:.1f}s ({r8['n_pages']/qt[hi]:.0f} pages/s).
-
-Determinism check: both configs produced identical triple counts
-({r8['n_triples']} == {r32['n_triples']}: {r8['n_triples'] == r32['n_triples']}).
-
-Reproduce: `python scripts/scaling_bench.py`
-(`SPARK_GRAFT_SCALE_PAGES`, `SPARK_GRAFT_SCALE_REPS` override size/reps).
 """
-    with open(
-        os.path.join(REPO, "BENCH", "BASELINE.md"), "a" if APPEND else "w"
-    ) as f:
-        f.write(report)
+        + "".join(
+            f"| {s} | {stage_min[lo][s]} | {stage_min[hi][s]} |\n"
+            for s in stage_names
+        )
+        + "".join(
+            f"\nQuiet-window total local[{c}]: {qt[c]:.1f}s"
+            f" ({best[c]['n_pages'] / qt[c]:.0f} pages/s)."
+            for c in (lo, hi)
+        )
+        + f"""
+
+Reproduce: `SPARK_GRAFT_SCALE_MODE={MODE} SPARK_GRAFT_SCALE_PAGES={N_PAGES} \
+SPARK_GRAFT_SCALE_CONFIGS={lo},{hi} SPARK_GRAFT_SCALE_REPS={REPS} \
+python scripts/scaling_bench.py`
+"""
+    )
     print(
         json.dumps(
-            {"efficiency": round(eff, 3), "efficiency_quiet": round(eff_q, 3), "quiet_totals": qt, "local_lo": r8, "local_hi": r32}
+            {
+                "mode": MODE,
+                "efficiency": round(eff, 3),
+                "efficiency_quiet": round(eff_q, 3),
+                "quiet_totals": qt,
+                "local_lo": best[lo],
+                "local_hi": best[hi],
+            }
         )
     )
 

@@ -1,7 +1,10 @@
+import inspect
 import os
 
 import pytest
 from pyspark.sql import SparkSession
+
+from mhdb_tables2turtles_spark.sources.golden import load_golden_triples
 
 
 @pytest.fixture(scope="session")
@@ -29,3 +32,20 @@ def onto_ttl():
 
 def pytest_configure(config):
     config.addinivalue_line("markers", "slow: long-running end-to-end test")
+
+
+# Oracle inputs outside the repo: the library's default golden graph
+# (``<reference checkout>/output/chills.ttl``), the checkout's ``mhdb``
+# module and its Cognitive Atlas CSVs.
+GOLDEN_TTL = inspect.signature(load_golden_triples).parameters["path"].default
+REFERENCE_MODULE = os.path.join(
+    os.path.dirname(os.path.dirname(GOLDEN_TTL)), "mhdb"
+)
+
+
+def requires(path):
+    """Skip marker for a test that reads ``path``, which only exists
+    where the reference checkout does."""
+    return pytest.mark.skipif(
+        not os.path.exists(path), reason=f"needs {path}"
+    )

@@ -7,6 +7,7 @@ resume from committed stages on re-invocation.
 """
 
 import json
+from conftest import GOLDEN_TTL, requires
 
 from mhdb_tables2turtles_spark.__main__ import build_session, main
 
@@ -73,6 +74,7 @@ def test_cli_no_master_flag_defers_to_submitter(spark):
     assert build_session(ns) is spark
 
 
+@requires(GOLDEN_TTL)
 def test_cli_workbooks_run_all(spark, tmp_path, capsys):
     # the reference's run_all driver path: all six workbook plans -> ttl
     out = tmp_path / "ttl"

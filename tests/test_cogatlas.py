@@ -4,9 +4,11 @@ Atlas CSVs (the one reference input that is actually committed)."""
 from __future__ import annotations
 
 import pytest
+from conftest import requires
 from pyspark.sql import functions as F
 
 from mhdb_tables2turtles_spark.plans.cogatlas import (
+    COGATLAS_DIR,
     RELN_PREDICATES,
     assertion_triples,
     load_cogatlas_tables,
@@ -72,6 +74,7 @@ def test_assertion_dispatch_and_asserts_extras(spark):
                    for _, p, _ in triples)
 
 
+@requires(COGATLAS_DIR)
 @pytest.mark.slow
 def test_real_csvs_end_to_end(spark):
     tables = load_cogatlas_tables(spark)

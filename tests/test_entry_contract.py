@@ -98,6 +98,17 @@ def test_entry_smoke(spark):
     assert df.columns == ["subject", "predicate", "object"]
 
 
+def test_bench_queries_are_catalog_names():
+    """bench.py times every BENCH_QUERIES name once: a renamed or
+    duplicated entry would otherwise surface only minutes into a run."""
+    import bench
+    from mhdb_tables2turtles_spark.queries import QUERIES
+
+    names = bench.BENCH_QUERIES
+    assert sorted(set(names) - set(QUERIES)) == []
+    assert len(set(names)) == len(names)
+
+
 def test_staleness_counts_only_value_green_rows(tmp_path):
     """A driver row with rows_match=true but hash_match=false is a
     VALUE BUG, not a green check: the query must keep staleness -1 so

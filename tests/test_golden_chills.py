@@ -9,6 +9,7 @@ triple sets.
 
 import pandas as pd
 import pytest
+from conftest import requires
 
 from mhdb_tables2turtles_spark.operators.triples import (
     dedup_triples,
@@ -22,6 +23,8 @@ from mhdb_tables2turtles_spark.sources.golden import (
 )
 
 GOLDEN = "/root/reference/output/chills.ttl"
+
+pytestmark = requires(GOLDEN)
 
 
 @pytest.fixture(scope="module")

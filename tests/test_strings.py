@@ -6,6 +6,7 @@ plus literal forms visible in /root/reference/output/chills.ttl).
 """
 
 import pytest
+from conftest import REFERENCE_MODULE, requires
 
 from mhdb_tables2turtles_spark.functions.strings import (
     anyuri_literal,
@@ -170,6 +171,7 @@ class TestReification:
         }
 
 
+@requires(REFERENCE_MODULE)
 def test_doi_triples_reference_execution_parity(spark):
     """F12: run the REFERENCE's doi_iri (dead code — its add_if /
     language_string names are undefined; shimmed to evident intent) and

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import GOLDEN_TTL, requires
 
 from mhdb_tables2turtles_spark.operators.validate import (
     TurtleSyntaxError,
@@ -69,6 +70,7 @@ def test_grammar_langtag_vs_directive_tokens():
         validate_turtle(HDR + ':s ex:p "x"@prefix .')
 
 
+@requires(GOLDEN_TTL)
 def test_grammar_accepts_reference_golden_file():
     # the reference's own emitted output must parse (it passed the
     # reference's external `ttl` validator when committed)
@@ -78,6 +80,7 @@ def test_grammar_accepts_reference_golden_file():
 
 # ---------- emitted artifacts ----------
 
+@requires(GOLDEN_TTL)
 def test_run_all_outputs_validate(spark, tmp_path):
     """All six workbook .ttl files pass the strict grammar check (the
     Spark analogue of the reference's validate_turtle_files.sh pass)."""
@@ -147,6 +150,7 @@ def test_run_all_kill_resume(spark, tmp_path, monkeypatch):
         assert a == b, f"{name}.ttl differs after kill/resume"
 
 
+@requires(GOLDEN_TTL)
 def test_web_pipeline_ttl_shards_validate(spark, tmp_path):
     """The web pipeline's sharded Turtle output (header.ttl + part files)
     parses as one concatenated document under the strict grammar."""
@@ -159,6 +163,7 @@ def test_web_pipeline_ttl_shards_validate(spark, tmp_path):
     assert n_pairs > 1600  # ontology included: at least the golden pairs
 
 
+@requires(GOLDEN_TTL)
 def test_owl_profile_vocabulary(spark):
     """profile="owl" maps the reference's nonstandard tokens to the
     write_rdf vocabulary (owl:Class / owl:ObjectProperty /
@@ -228,6 +233,39 @@ def test_run_all_records_validation_error_and_continues(
         assert os.path.exists(res[name]["path"])
 
 
+def test_run_all_skips_workbook_with_missing_input(
+    spark, tmp_path, monkeypatch
+):
+    """A workbook whose input file is missing is skipped with a reason
+    naming the file (and any stale .ttl removed); the others still
+    build."""
+    from mhdb_tables2turtles_spark.plans import runner
+    from mhdb_tables2turtles_spark.sources.golden import (
+        load_golden_triples,
+        reverse_fixture,
+    )
+
+    missing = str(tmp_path / "absent" / "chills.ttl")
+    small = {
+        k: runner.WORKBOOKS[k] for k in ("states", "measures", "resources")
+    }
+    small["chills"] = (
+        runner.WORKBOOKS["chills"][0],
+        lambda: reverse_fixture(load_golden_triples(missing)),
+    )
+    monkeypatch.setattr(runner, "WORKBOOKS", small)
+    out = tmp_path / "ttl"
+    out.mkdir()
+    (out / "chills.ttl").write_text("stale")
+    res = runner.run_all(spark, str(out))
+    for name in ("states", "measures", "resources"):
+        assert res[name]["skipped"] is None
+        assert os.path.exists(res[name]["path"])
+    assert res["chills"]["path"] is None
+    assert missing in res["chills"]["skipped"]
+    assert not (out / "chills.ttl").exists()
+
+
 def test_web_pipeline_raises_on_undeclarable_prefix(spark, tmp_path):
     """The web write path has no separate validation pass, so a triple
     prefix the ontology header cannot declare must fail at header-write
@@ -284,6 +322,7 @@ def test_to_nt_term_shapes():
         to_nt_term("bare-token", pmap, "subject")
 
 
+@requires(GOLDEN_TTL)
 def test_write_ntriples_golden_graph(spark, tmp_path):
     """The reference's own emitted graph serializes to valid N-Triples:
     every line matches the grammar, line count == triple count, and the
@@ -428,6 +467,7 @@ def test_read_ntriples_roundtrip_and_skip(spark, tmp_path):
     assert len(kept) == 2
 
 
+@requires(GOLDEN_TTL)
 def test_read_ntriples_golden_graph_roundtrip(spark, tmp_path):
     """The reference's own emitted graph survives sink -> source: the
     read-back triple set reaches a canonical fixed point whose size
@@ -526,6 +566,7 @@ def test_parse_turtle_surface_terms():
         parse_turtle("ex:a ex:p ex:b .\n")
 
 
+@requires(GOLDEN_TTL)
 def test_parse_turtle_matches_golden_oracle_parser():
     """The grammar-exact collector and the layout-specific oracle parser
     agree on the reference's own emitted document (body triples)."""
@@ -541,6 +582,7 @@ def test_parse_turtle_matches_golden_oracle_parser():
     assert grammar == oracle
 
 
+@requires(GOLDEN_TTL)
 def test_read_turtle_dir_roundtrip(spark, tmp_path):
     """Sink → distributed source round trip: the engine's own sharded
     Turtle output reads back as exactly the canonical triple set."""

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from conftest import GOLDEN_TTL, requires
 from pyspark.sql import functions as F
 
 from mhdb_tables2turtles_spark.web import vocab as vocab_mod
@@ -87,6 +88,7 @@ def test_matcher_for_evicts_least_recently_used():
     assert matcher_for(a) is first
 
 
+@requires(GOLDEN_TTL)
 def test_vocabulary_from_golden():
     vf = vocab_mod.vocabulary_frame()
     assert len(vf) > 300
