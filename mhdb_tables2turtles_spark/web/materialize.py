@@ -10,6 +10,9 @@ recomputes with ``mode=overwrite`` — so a restart resumes from the last
 committed snapshot and never duplicates committed work (north rule:
 "resumable from checkpoint with per-partition lineage + metrics").
 
+A stage equal to another committed stage commits as an *alias*: a
+manifest naming that stage's data, no copy.
+
 On a real cluster, swap ``_write_parquet``/``_read`` for
 ``writeTo(...).createOrReplace()`` on an Iceberg catalog; the manifest
 maps onto Iceberg's own snapshot summary + a lineage table.
@@ -22,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -94,12 +98,39 @@ class StagedPipeline:
         with open(os.path.join(self._path(name), MANIFEST)) as f:
             return json.load(f)
 
+    def _load(self, name: str) -> DataFrame:
+        """Committed data of ``name``, an :meth:`alias` resolved."""
+        data = self.manifest(name).get("data", name)
+        return self.spark.read.parquet(self._path(data)).drop(LINEAGE_COL)
+
+    def _commit(self, path: str, manifest: dict) -> None:
+        tmp = os.path.join(path, MANIFEST + ".tmp")
+        with open(tmp, "w") as f:
+            json.dump(manifest, f, indent=1, sort_keys=True)
+        os.replace(tmp, os.path.join(path, MANIFEST))  # atomic commit point
+
     def read(self, name: str) -> DataFrame:
         """Committed output of ``name`` (raises if not committed)."""
         if not self.is_committed(name):
             raise RuntimeError(f"stage {name!r} has no committed snapshot")
         self.log.append(f"read:{name}")
-        return self.spark.read.parquet(self._path(name)).drop(LINEAGE_COL)
+        return self._load(name)
+
+    def alias(self, name: str, source: str) -> DataFrame:
+        """Commit ``name`` as ``source``'s output, uncopied: its
+        directory (cleared of any uncommitted leftover) holds only a
+        manifest whose ``data`` names ``source``'s parquet."""
+        path = self._path(name)
+        self.log.append(f"compute:{name}")
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        self._commit(path, {
+            "stage": name,
+            "data": source,
+            "rows": self.manifest(source)["rows"],
+            "upstream": [source],
+        })
+        return self._load(name)
 
     def stage(
         self,
@@ -114,14 +145,14 @@ class StagedPipeline:
         with the source partition id as a lineage column, then commits a
         manifest (rows, elapsed seconds, ``upstream`` stage names,
         per-partition row counts) by atomic rename.  Either way the
-        returned DataFrame reads the committed parquet, lineage column
-        dropped."""
+        returned DataFrame reads the committed data (an :meth:`alias`
+        resolved), lineage column dropped."""
         import time as _time
 
         path = self._path(name)
         if self.is_committed(name):
             self.log.append(f"resume:{name}")
-            return self.spark.read.parquet(path).drop(LINEAGE_COL)
+            return self._load(name)
 
         self.log.append(f"compute:{name}")
         t0 = _time.time()
@@ -154,11 +185,8 @@ class StagedPipeline:
             "n_partitions": len(lineage),
         }
         self.log.append(f"done:{name}:{elapsed}s")
-        tmp = os.path.join(path, MANIFEST + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.replace(tmp, path + "/" + MANIFEST)  # atomic commit point
-        return self.spark.read.parquet(path).drop(LINEAGE_COL)
+        self._commit(path, manifest)
+        return self._load(name)
 
     def incremental_stage(
         self,
@@ -247,10 +275,7 @@ class StagedPipeline:
             "null_partition_done": null_done or any(t is None for t in todo),
             "schema": schema_json,
         }
-        tmp = os.path.join(path, MANIFEST + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.replace(tmp, os.path.join(path, MANIFEST))
+        self._commit(path, manifest)
         return _read_committed()
 
     def counters(self) -> dict[str, int]:

@@ -1,18 +1,20 @@
 """End-to-end web-scale KG construction (north rule).
 
-    pages (url, warc_ts, html, text, lang)
-      -> stage extract   : html -> text (byte-identical per url)
-      -> stage mentions  : token-index vocabulary scan
+    pages (url, warc_ts, lang, html)
+      -> stage extract   : the one Python pass per page: html -> text
+                           (byte-identical per url), page IRI, surfaces
+      -> stage mentions  : explode of the surfaces (JVM)
       -> stage linked    : alias candidates + TF-IDF scoring
-      -> stage triples   : (subj, pred, obj) emission
-      -> stage canonical : connected-components rewrite
+      -> stage triples   : per-page entity set ⋈ page IRI, inline (JVM)
+      -> stage canonical : connected-components rewrite; with no
+                           owl:sameAs edge, an alias of triples (no copy)
       -> Turtle shards / triple table
 
 Every stage commits through :class:`materialize.StagedPipeline` (resume +
 lineage + counters).  The ontology side (vocabulary, entity profiles,
-equivalence edges) comes from the reference's own emitted graph, so the
-triple vocabulary matches the reference's IRIs exactly — the P/R metric
-is then a set comparison of `(s, p, o)`.
+equivalence edges) comes from the ontology Turtle file ``ttl_path``, so
+the triple vocabulary matches the ontology's IRIs exactly — the P/R
+metric is then a set comparison of `(s, p, o)`.
 """
 
 from __future__ import annotations
@@ -28,12 +30,11 @@ from mhdb_tables2turtles_spark.web.canonicalize import (
     merge_components,
     rewrite_triples,
 )
-from mhdb_tables2turtles_spark.web.extract import extract_text_col
 from mhdb_tables2turtles_spark.web.linking import link_mentions
 from mhdb_tables2turtles_spark.web.materialize import StagedPipeline
 from mhdb_tables2turtles_spark.web.mentions import (
+    extract_pages,
     page_entity_triples,
-    scan_mentions,
 )
 from mhdb_tables2turtles_spark.web.pages import synthesize_pages
 
@@ -49,11 +50,18 @@ def _equiv_triples(edges: DataFrame) -> DataFrame:
     )
 
 
+def _mentions(extracted: DataFrame) -> DataFrame:
+    """:func:`extract_pages` output -> mentions(url, surface), one row per
+    occurrence."""
+    return extracted.select("url", F.explode("surfaces").alias("surface"))
+
+
 def build_corpus(
     spark: SparkSession,
     n_pages: int,
     seed: int = 42,
-    ttl_path: str = "/root/reference/output/chills.ttl",
+    *,
+    ttl_path: str,
     partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic synthetic Common-Crawl-style corpus seeded with the
@@ -69,7 +77,7 @@ class KGPipeline:
         self,
         spark: SparkSession,
         workdir: str,
-        ttl_path: str = "/root/reference/output/chills.ttl",
+        ttl_path: str,
     ):
         self.spark = spark
         self.staged = StagedPipeline(spark, workdir)
@@ -108,23 +116,14 @@ class KGPipeline:
         staged = self.staged
 
         extracted = staged.stage(
-            "extract",
-            lambda: pages.select(
-                "url",
-                "warc_ts",
-                "lang",
-                extract_text_col(F.col("html")).alias("text"),
-            ),
+            "extract", lambda: extract_pages(pages, self.surfaces)
         )
         # the extract stage is committed at this point, so its manifest
         # row count (== page/url count, urls are unique per page) is free:
         # it feeds the idf corpus size (no extra full scan in token_idf)
-        # and the broadcast-vs-shuffle decision in page_entity_triples
         n_pages = staged.manifest("extract")["rows"]
         mentions = staged.stage(
-            "mentions",
-            lambda: scan_mentions(extracted, self.surfaces),
-            upstream=("extract",),
+            "mentions", lambda: _mentions(extracted), upstream=("extract",)
         )
         linked = staged.stage(
             "linked",
@@ -135,7 +134,7 @@ class KGPipeline:
             upstream=("mentions", "extract"),
         )
         def _triples() -> DataFrame:
-            t = page_entity_triples(linked, n_urls=n_pages)
+            t = page_entity_triples(linked, extracted)
             if include_ontology:
                 t = t.unionByName(self.ontology_triples())
             if extra_equiv_edges is not None:
@@ -148,18 +147,23 @@ class KGPipeline:
                 t = t.unionByName(_equiv_triples(extra_equiv_edges))
             return t
 
-        triples = staged.stage("triples", _triples, upstream=("linked",))
+        triples = staged.stage(
+            "triples", _triples, upstream=("linked", "extract")
+        )
 
-        def _canonical() -> DataFrame:
-            edges = equivalence_edges(triples)
-            if edges.isEmpty():
-                # no merges: the triple stage output is already distinct
-                # per branch — skip the redundant global shuffle
-                return triples
-            comps = connected_components(edges)
-            return rewrite_triples(triples, canonical_mapping(comps))
-
-        canonical = staged.stage("canonical", _canonical, upstream=("triples",))
+        edges = equivalence_edges(triples)
+        if staged.is_committed("canonical") or not edges.isEmpty():
+            canonical = staged.stage(
+                "canonical",
+                lambda: rewrite_triples(
+                    triples, canonical_mapping(connected_components(edges))
+                ),
+                upstream=("triples",),
+            )
+        else:
+            # no merges: canonical IS the triple table — commit a manifest
+            # that names its data instead of rewriting a copy
+            canonical = staged.alias("canonical", "triples")
 
         if write_turtle:
             import os
@@ -289,6 +293,11 @@ class KGPipeline:
         scorer short-circuits) equality is exact — tested both ways in
         test_web_pipeline.
 
+        One KG definition: the batch runs :meth:`run`'s own functions
+        (``extract_pages``, the surfaces explode, ``link_mentions``,
+        ``page_entity_triples``) over ONE in-memory checkpoint of the
+        extracted pages, which all three consumers read.
+
         Resume protocol: the epoch commits ONE stage
         (``<workdir>/epoch_<batch_id>/triples``) — the extract → scan →
         link → triples chain of a re-crawl batch runs as a single
@@ -323,25 +332,14 @@ class KGPipeline:
         )
 
         def _new_triples() -> DataFrame:
-            # one in-memory materialization replaces the four parquet
-            # commits: extracted feeds scan AND link, and n_new (the
-            # per-epoch idf corpus size) needs a count
-            extracted = new_pages.select(
-                "url",
-                "warc_ts",
-                "lang",
-                extract_text_col(F.col("html")).alias("text"),
-            ).localCheckpoint(eager=True)
+            extracted = extract_pages(new_pages, self.surfaces)
+            extracted = extracted.localCheckpoint(eager=True)
             n_new = extracted.count()
             linked = link_mentions(
-                scan_mentions(extracted, self.surfaces), self.vocab,
-                extracted, self.profiles, n_pages=n_new,
+                _mentions(extracted), self.vocab, extracted, self.profiles,
+                n_pages=n_new,
             )
-            # page_entity_triples consumes linked via several branches
-            # (pairs + per-page IRIs); without the old committed-parquet
-            # snapshot each branch would re-run the scan+link chain
-            linked = linked.localCheckpoint(eager=True)
-            t = page_entity_triples(linked, n_urls=n_new)
+            t = page_entity_triples(linked, extracted)
             if extra_equiv_edges is not None:
                 t = t.unionByName(_equiv_triples(extra_equiv_edges))
             return t

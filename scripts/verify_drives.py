@@ -13,7 +13,8 @@ import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -85,10 +86,11 @@ def main() -> None:
     # Drive 3: web KG pipeline + resume
     from mhdb_tables2turtles_spark.web.pipeline import KGPipeline, build_corpus
 
+    onto = os.path.join(REPO, "tests", "data", "ontology.ttl")
     wd = os.path.join(tmp, "work")
-    pages = build_corpus(spark, 400, seed=7, partitions=8)
-    n1 = KGPipeline(spark, wd).run(pages)["canonical"].count()
-    n2 = KGPipeline(spark, wd).run(pages)["canonical"].count()
+    pages = build_corpus(spark, 400, seed=7, ttl_path=onto, partitions=8)
+    n1 = KGPipeline(spark, wd, ttl_path=onto).run(pages)["canonical"].count()
+    n2 = KGPipeline(spark, wd, ttl_path=onto).run(pages)["canonical"].count()
     print(f"pipeline triples: {n1} resume: {n2} match: {n1 == n2}", flush=True)
     assert n1 == n2 and n1 > 0
     shutil.rmtree(tmp, ignore_errors=True)

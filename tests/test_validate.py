@@ -157,8 +157,12 @@ def test_web_pipeline_ttl_shards_validate(spark, tmp_path):
     from mhdb_tables2turtles_spark.web.pipeline import KGPipeline, build_corpus
 
     wd = str(tmp_path / "kg")
-    corpus = build_corpus(spark, n_pages=30, seed=11, partitions=2)
-    KGPipeline(spark, wd).run(corpus, include_ontology=True, write_turtle=True)
+    corpus = build_corpus(
+        spark, n_pages=30, seed=11, ttl_path=GOLDEN_TTL, partitions=2
+    )
+    KGPipeline(spark, wd, ttl_path=GOLDEN_TTL).run(
+        corpus, include_ontology=True, write_turtle=True
+    )
     n_pairs = validate_ttl_dir(os.path.join(wd, "ttl"))
     assert n_pairs > 1600  # ontology included: at least the golden pairs
 
@@ -582,8 +586,7 @@ def test_parse_turtle_matches_golden_oracle_parser():
     assert grammar == oracle
 
 
-@requires(GOLDEN_TTL)
-def test_read_turtle_dir_roundtrip(spark, tmp_path):
+def test_read_turtle_dir_roundtrip(spark, tmp_path, onto_ttl):
     """Sink → distributed source round trip: the engine's own sharded
     Turtle output reads back as exactly the canonical triple set."""
     from mhdb_tables2turtles_spark.sources.turtle import read_turtle_dir
@@ -593,8 +596,8 @@ def test_read_turtle_dir_roundtrip(spark, tmp_path):
     )
 
     wd = str(tmp_path / "kg")
-    pages = build_corpus(spark, n_pages=60, seed=5)
-    pipe = KGPipeline(spark, wd)
+    pages = build_corpus(spark, n_pages=60, seed=5, ttl_path=onto_ttl)
+    pipe = KGPipeline(spark, wd, ttl_path=onto_ttl)
     out = pipe.run(pages, write_turtle=True)
     canonical = out["canonical"]
     back = read_turtle_dir(spark, f"{wd}/ttl")

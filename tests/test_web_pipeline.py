@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from mhdb_tables2turtles_spark.web import vocab as vocab_mod
 from mhdb_tables2turtles_spark.web.canonicalize import connected_components
 from mhdb_tables2turtles_spark.web.extract import extract_text, extract_text_col
-from mhdb_tables2turtles_spark.web.mentions import scan_mentions
+from mhdb_tables2turtles_spark.web.mentions import extract_pages, scan_mentions
 from mhdb_tables2turtles_spark.web.pipeline import KGPipeline, build_corpus
 from mhdb_tables2turtles_spark.web.trie import AhoCorasick
 
@@ -139,6 +139,42 @@ def test_scan_mentions_matches_python(spark, corpus):
     assert got == want
 
 
+def test_extract_pages_matches_pure_kernels(spark, corpus, onto_ttl):
+    """The fused per-page pass equals its three pure parts per url:
+    extract_text, format_iri and scan_mentions' surfaces (null html
+    included)."""
+    from mhdb_tables2turtles_spark.functions.strings import format_iri
+
+    surfaces = tuple(
+        sorted(set(vocab_mod.vocabulary_frame(onto_ttl)["surface"]))
+    )
+    null_page = spark.createDataFrame(
+        [("http://null.example/p", None, None, None, "en")], corpus.schema
+    )
+    pages = corpus.unionByName(null_page)
+    htmls = {
+        r.url: None if r.html is None else bytes(r.html)
+        for r in pages.select("url", "html").collect()
+    }
+    texts = spark.createDataFrame(
+        [(u, extract_text(h)) for u, h in htmls.items()],
+        "url string, text string",
+    )
+    scanned: dict[str, list] = {}
+    for r in scan_mentions(texts, surfaces).collect():
+        scanned.setdefault(r.url, []).append(r.surface)
+
+    fused = {r.url: r for r in extract_pages(pages, surfaces).collect()}
+    assert set(fused) == set(htmls)
+    for url, r in fused.items():
+        assert r.text == extract_text(htmls[url])
+        assert r.subject == format_iri(url)
+        assert sorted(r.surfaces) == sorted(scanned.get(url, []))
+    assert fused["http://null.example/p"].text is None
+    assert fused["http://null.example/p"].surfaces == []
+    assert sum(map(len, scanned.values())) > 0
+
+
 def test_connected_components_basic(spark):
     edges = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("e", "d"), ("f", "e"), ("x", "y")],
@@ -223,18 +259,15 @@ def test_kill_mid_pipeline_resumes_from_last_commit(
     # simulate a job killed after the first two stage commits
     from pyspark.sql import functions as F
 
-    from mhdb_tables2turtles_spark.web.extract import extract_text_col
-    from mhdb_tables2turtles_spark.web.mentions import scan_mentions
-
     dead = KGPipeline(spark, wd, ttl_path=onto_ttl)
     extracted = dead.staged.stage(
-        "extract",
-        lambda: corpus.select(
-            "url", "warc_ts", "lang", extract_text_col(F.col("html")).alias("text")
-        ),
+        "extract", lambda: extract_pages(corpus, dead.surfaces)
     )
     dead.staged.stage(
-        "mentions", lambda: scan_mentions(extracted, dead.surfaces)
+        "mentions",
+        lambda: extracted.select(
+            "url", F.explode("surfaces").alias("surface")
+        ),
     )
     # process "dies" here; a fresh run picks up after the last commit
     pipe = KGPipeline(spark, wd, ttl_path=onto_ttl)
@@ -254,6 +287,53 @@ def test_kill_mid_pipeline_resumes_from_last_commit(
     assert a == b
 
 
+def test_kill_after_triples_computes_only_canonical(
+    spark, corpus, tmp_path, onto_ttl
+):
+    """Die after the triples commit, with a half-written canonical
+    directory left behind: the restart computes canonical alone."""
+    import os
+    import shutil
+
+    wd = str(tmp_path / "kgkill3")
+    full = KGPipeline(spark, wd, ttl_path=onto_ttl).run(corpus)
+    want = sorted(full["canonical"].collect())
+    canonical_dir = os.path.join(wd, "canonical")
+    shutil.rmtree(canonical_dir)
+    os.makedirs(canonical_dir)
+    open(os.path.join(canonical_dir, "part-00000.parquet"), "w").close()
+
+    pipe = KGPipeline(spark, wd, ttl_path=onto_ttl)
+    out = pipe.run(corpus)
+    assert [s for s in pipe.staged.log if s.startswith("compute:")] == [
+        "compute:canonical"
+    ]
+    assert sorted(out["canonical"].collect()) == want
+
+
+def test_no_merge_canonical_is_an_alias(spark, corpus, tmp_path, onto_ttl):
+    """With no owl:sameAs edge, canonical/ holds only its manifest, and
+    every reader of canonical sees the triples table."""
+    import os
+
+    from mhdb_tables2turtles_spark.web.materialize import MANIFEST
+    from mhdb_tables2turtles_spark.web.store import read_triple_store
+
+    wd = str(tmp_path / "kg_alias")
+    pipe = KGPipeline(spark, wd, ttl_path=onto_ttl)
+    out = pipe.run(corpus)
+    assert os.listdir(os.path.join(wd, "canonical")) == [MANIFEST]
+    triples = pipe.staged.read("triples")
+    want = sorted(triples.collect())
+    assert sorted(out["canonical"].collect()) == want
+    assert sorted(pipe.canonical_asof(None).collect()) == want
+    assert pipe.staged.counters()["canonical"] == len(want)
+    store_path = str(tmp_path / "store_alias")
+    pipe.export_store(store_path)
+    back = read_triple_store(spark, store_path).select(*triples.columns)
+    assert sorted(back.collect()) == want
+
+
 def test_canonicalization_merges_sameas(spark, corpus, tmp_path, onto_ttl):
     pipe = KGPipeline(spark, str(tmp_path / "kg2"), ttl_path=onto_ttl)
     # inject synthetic duplicates: two ontology IRIs declared equivalent
@@ -266,6 +346,7 @@ def test_canonicalization_merges_sameas(spark, corpus, tmp_path, onto_ttl):
         for r in out["canonical"].filter(F.col("predicate") == ":mentions").collect()
     }
     assert not (a in objs and b in objs)  # merged to one canonical IRI
+    assert "data" not in pipe.staged.manifest("canonical")  # own parquet
 
 
 def test_pipeline_with_ontology_and_turtle(spark, corpus, tmp_path, onto_ttl):
@@ -358,32 +439,34 @@ def test_token_idf_restriction_is_value_identical(spark):
     assert restricted == {t: full[t] for t in restricted}
 
 
-def test_page_entity_triples_join_strategy_by_scale(spark):
-    """Below BROADCAST_MAX_URLS the IRI side broadcasts; above it the
-    plan degrades to a shuffle equi-join on url — and both physical
-    strategies produce the identical triple set."""
-    from mhdb_tables2turtles_spark.web.mentions import (
-        BROADCAST_MAX_URLS,
-        page_entity_triples,
-    )
+def test_page_entity_triples_runs_no_python(spark):
+    """One grouped JVM pass: the page IRI comes from the extract stage's
+    ``subject`` column, so the executed plan evaluates no Python."""
+    from mhdb_tables2turtles_spark.functions.strings import format_iri
+    from mhdb_tables2turtles_spark.web.mentions import page_entity_triples
 
+    p1, p2 = "http://a.example/p1", "http://b.example/p2"
     linked = spark.createDataFrame(
-        [
-            ("http://a.example/p1", ":Chills"),
-            ("http://a.example/p1", ":Music"),
-            ("http://b.example/p2", ":Chills"),
-        ],
+        [(p1, ":Chills"), (p1, ":Music"), (p2, ":Chills")],
         ["url", "entity_iri"],
     )
-    small = page_entity_triples(linked, n_urls=2)
-    huge = page_entity_triples(linked, n_urls=BROADCAST_MAX_URLS + 1)
-    plan_small = small._jdf.queryExecution().executedPlan().toString()
-    plan_huge = huge._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan_small
-    assert "BroadcastHashJoin" not in plan_huge  # SMJ/shuffled-hash on url
-    a = {(r.subject, r.predicate, r.object) for r in small.collect()}
-    b = {(r.subject, r.predicate, r.object) for r in huge.collect()}
-    assert a == b and len(a) == 7  # 2 decls + 2 urls + 3 mentions
+    pages = spark.createDataFrame(
+        [(u, format_iri(u)) for u in (p1, p2, "http://c.example/unlinked")],
+        ["url", "subject"],
+    )
+    triples = page_entity_triples(linked, pages)
+    s1, s2 = format_iri(p1), format_iri(p2)
+    assert sorted(triples.collect()) == sorted([
+        (s1, "a", ":WebPage"),
+        (s1, ":hasURL", f'"{p1}"^^xsd:anyURI'),
+        (s1, ":mentions", ":Chills"),
+        (s1, ":mentions", ":Music"),
+        (s2, "a", ":WebPage"),
+        (s2, ":hasURL", f'"{p2}"^^xsd:anyURI'),
+        (s2, ":mentions", ":Chills"),
+    ])  # 2 decls + 2 urls + 3 mentions; the unlinked page emits nothing
+    plan = triples._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_token_idf_precomputed_count_is_value_identical(spark):
