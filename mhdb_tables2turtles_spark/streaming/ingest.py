@@ -17,8 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mhdb_tables2turtles_spark.web.extract import extract_text_col
-from mhdb_tables2turtles_spark.web.mentions import scan_mentions
+from mhdb_tables2turtles_spark.web.mentions import extract_pages
 from mhdb_tables2turtles_spark.web.pages import PAGES_SCHEMA
 
 __all__ = [
@@ -42,27 +41,27 @@ def read_page_stream(
     )
 
 
-def stream_triples(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:
-    """Streaming page batch -> (subject, predicate, object, warc_ts).
-
-    Same extraction + Aho-Corasick scan as the batch pipeline — the
-    functions are stateless, so they lift to streams unchanged.  The
-    subject IRI is minted from the url (stream-safe: row-local UDF).
-    """
-    from mhdb_tables2turtles_spark.functions import udfs
-
-    extracted = pages.select(
-        "url", "warc_ts", extract_text_col(F.col("html")).alias("text")
+def _stream_mentions(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:
+    """Page batch -> (subject, surface, warc_ts), one row per occurrence:
+    the batch pipeline's :func:`extract_pages` pass, exploded.  It is
+    row-local, so it lifts to streams unchanged, and ``warc_ts`` rides
+    through it — no stream-stream re-join back to the source (which
+    would hold unbounded join state)."""
+    return extract_pages(pages, surfaces).select(
+        "subject", F.explode("surfaces").alias("surface"), "warc_ts"
     )
-    # warc_ts rides through the scan kernel itself — no stream-stream
-    # re-join back to the source (which would hold unbounded join state)
-    mentions = scan_mentions(extracted, surfaces, passthrough=("warc_ts",))
+
+
+def stream_triples(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:
+    """Streaming page batch -> (subject, predicate, object, warc_ts):
+    one ``:mentions`` triple per page and vocabulary surface found."""
     return (
-        mentions.select(
-            udfs.iri(F.col("url")).alias("subject"),
+        _stream_mentions(pages, surfaces)
+        .select(
+            "subject",
             F.lit(":mentions").alias("predicate"),
             F.col("surface").alias("object"),
-            F.col("warc_ts"),
+            "warc_ts",
         )
         # bounded-state dedup: duplicates only occur within one page's
         # crawl window, so a watermark-scoped dedup is exact here while
@@ -81,12 +80,9 @@ def windowed_mention_rates(
     """Watermarked windowed aggregation: mentions per surface per
     crawl-time window.  Late pages beyond the watermark are dropped —
     bounded state regardless of stream length."""
-    extracted = pages.select(
-        "url", "warc_ts", extract_text_col(F.col("html")).alias("text")
-    )
-    mentions = scan_mentions(extracted, surfaces, passthrough=("warc_ts",))
     return (
-        mentions.withWatermark("warc_ts", watermark)
+        _stream_mentions(pages, surfaces)
+        .withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("w"), F.col("surface"))
         .agg(F.count("*").alias("n_mentions"))
         .select(

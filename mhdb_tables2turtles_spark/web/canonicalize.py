@@ -25,13 +25,14 @@ returning truncated components.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
     "connected_components",
     "merge_components",
     "equivalence_edges",
+    "is_equivalence",
     "canonical_mapping",
 ]
 
@@ -180,14 +181,19 @@ def merge_components(prev: DataFrame, new_edges: DataFrame) -> DataFrame:
     return untouched.unionByName(merged.select("node", "component"))
 
 
-def equivalence_edges(triples: DataFrame) -> DataFrame:
-    """Entity-merge edges from the graph itself: owl:sameAs /
-    rdfs:equivalentClass style predicates whose objects are in-graph IRIs
-    (start with ``:``)."""
+def is_equivalence() -> Column:
+    """True on a triple row that is an entity-merge edge: an owl:sameAs /
+    rdfs:equivalentClass style predicate whose object is an in-graph IRI
+    (starts with ``:``)."""
     eq_preds = ("owl:sameAs", "rdfs:equivalentClass", "rdfs:equivalentProperty")
+    return F.col("predicate").isin(*eq_preds) & F.col("object").startswith(":")
+
+
+def equivalence_edges(triples: DataFrame) -> DataFrame:
+    """Entity-merge edges from the graph itself: the distinct
+    (subject, object) pairs of its :func:`is_equivalence` rows."""
     return (
-        triples.filter(F.col("predicate").isin(*eq_preds))
-        .filter(F.col("object").startswith(":"))
+        triples.filter(is_equivalence())
         .select(F.col("subject").alias("src"), F.col("object").alias("dst"))
         .distinct()
     )

@@ -28,7 +28,7 @@ import os
 import shutil
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["StagedPipeline"]
@@ -119,16 +119,25 @@ class StagedPipeline:
     def alias(self, name: str, source: str) -> DataFrame:
         """Commit ``name`` as ``source``'s output, uncopied: its
         directory (cleared of any uncommitted leftover) holds only a
-        manifest whose ``data`` names ``source``'s parquet."""
+        manifest whose ``data`` names ``source``'s parquet, with the
+        keys of a :meth:`stage` manifest (rows and lineage are
+        ``source``'s, ``elapsed_sec`` the alias commit's own)."""
+        import time as _time
+
         path = self._path(name)
         self.log.append(f"compute:{name}")
+        t0 = _time.time()
+        src = self.manifest(source)
         shutil.rmtree(path, ignore_errors=True)
         os.makedirs(path)
         self._commit(path, {
             "stage": name,
             "data": source,
-            "rows": self.manifest(source)["rows"],
+            "rows": src["rows"],
+            "elapsed_sec": round(_time.time() - t0, 2),
             "upstream": [source],
+            "partitions": src.get("partitions", {}),
+            "n_partitions": src.get("n_partitions", 0),
         })
         return self._load(name)
 
@@ -137,6 +146,7 @@ class StagedPipeline:
         name: str,
         build: Callable[[], DataFrame],
         upstream: tuple[str, ...] = (),
+        counts: "dict[str, Column] | None" = None,
     ) -> DataFrame:
         """Return the stage's committed output, computing it only if no
         committed snapshot exists.
@@ -144,7 +154,9 @@ class StagedPipeline:
         Computing writes ``build()`` as parquet under ``<workdir>/<name>``
         with the source partition id as a lineage column, then commits a
         manifest (rows, elapsed seconds, ``upstream`` stage names,
-        per-partition row counts) by atomic rename.  Either way the
+        per-partition row counts, and per ``counts`` key the number of
+        rows on which that boolean column is true — observed in the
+        write job itself) by atomic rename.  Either way the
         returned DataFrame reads the committed data (an :meth:`alias`
         resolved), lineage column dropped."""
         import time as _time
@@ -158,7 +170,12 @@ class StagedPipeline:
         t0 = _time.time()
         df = build().withColumn(LINEAGE_COL, F.spark_partition_id())
         obs = Observation(f"stage_{name}")
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        counts = counts or {}
+        df = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            *(F.count_if(c).alias(k) for k, c in counts.items()),
+        )
         df.write.mode("overwrite").parquet(path)
         elapsed = round(_time.time() - t0, 2)
 
@@ -183,6 +200,7 @@ class StagedPipeline:
             "upstream": list(upstream),
             "partitions": lineage,
             "n_partitions": len(lineage),
+            **{k: obs.get[k] for k in counts},
         }
         self.log.append(f"done:{name}:{elapsed}s")
         self._commit(path, manifest)

@@ -7,7 +7,7 @@ Aho-Corasick reference, differential-tested), with the surface list in
 a Spark broadcast and the matcher memoized per worker.  Downstream is
 JVM-only: mentions are an explode of its ``surfaces`` column and
 :func:`page_entity_triples` is one grouped pass.  :func:`scan_mentions`
-scans an already-extracted ``text`` column (catalog and streaming) with
+scans an already-extracted ``text`` column (the catalog) with
 the same per-text helper.
 """
 
@@ -61,29 +61,15 @@ def extract_pages(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:
     return pages.select(*keep, "html").mapInPandas(kernel, schema=schema)
 
 
-def scan_mentions(
-    pages: DataFrame,
-    surfaces: tuple[str, ...],
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
-    """pages(url, text) -> mentions(url, surface[, passthrough...]):
-    one row per vocabulary occurrence, so a surface found three times on
-    a page yields three identical rows (consumers count or distinct them).
+def scan_mentions(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:
+    """pages(url, text) -> mentions(url, surface): one row per vocabulary
+    occurrence, so a surface found three times on a page yields three
+    identical rows (consumers count or distinct them).
 
     ``surfaces`` must be lowercase; matching is case-insensitive on
-    word boundaries.  ``passthrough`` names extra input columns carried
-    verbatim onto every mention row (e.g. ``("warc_ts",)`` for streaming
-    event time, with no stream-stream re-join to the page source).
+    word boundaries.
     """
-    spark = pages.sparkSession
-    bc = spark.sparkContext.broadcast(tuple(surfaces))
-
-    extra = tuple(passthrough)
-    out_schema = T.StructType.fromDDL("url string, surface string")
-    for name in extra:
-        out_schema.add(pages.schema[name])
-    in_cols = ["url", "text", *extra]
-    out_cols = ["url", "surface", *extra]
+    bc = pages.sparkSession.sparkContext.broadcast(tuple(surfaces))
 
     def scan(batches):
         patterns = bc.value
@@ -92,21 +78,15 @@ def scan_mentions(
             # per-column lists: no per-row tuple, no pandas transpose
             c_url: list = []
             c_surface: list = []
-            c_rest: tuple[list, ...] = tuple([] for _ in extra)
-            for url, text, *rest in pdf[in_cols].itertuples(
-                index=False, name=None
-            ):
+            for url, text in zip(pdf["url"], pdf["text"]):
                 found = _surfaces(text, patterns, matcher)
                 c_surface.extend(found)
                 c_url.extend([url] * len(found))
-                for col, val in zip(c_rest, rest):
-                    col.extend([val] * len(found))
-            data = {"url": c_url, "surface": c_surface}
-            for name, col in zip(extra, c_rest):
-                data[name] = col
-            yield pd.DataFrame(data, columns=out_cols)
+            yield pd.DataFrame({"url": c_url, "surface": c_surface})
 
-    return pages.select(*in_cols).mapInPandas(scan, schema=out_schema)
+    return pages.select("url", "text").mapInPandas(
+        scan, schema="url string, surface string"
+    )
 
 
 def page_entity_triples(linked: DataFrame, pages: DataFrame) -> DataFrame:
@@ -114,8 +94,9 @@ def page_entity_triples(linked: DataFrame, pages: DataFrame) -> DataFrame:
     per page with a linked entity, ``<subject> a :WebPage``, a
     ``:hasURL`` typed literal and one ``:mentions`` triple per distinct
     entity.  One JVM pass: ``collect_set`` per url, a join to the page
-    IRI :func:`extract_pages` minted (the optimizer picks the strategy)
-    and one ``inline`` of the triple structs."""
+    IRI :func:`extract_pages` minted (one row per url, so a recaptured
+    page emits its triples once; the optimizer picks the strategy) and
+    one ``inline`` of the triple structs."""
 
     def triple(predicate, obj):
         return F.struct(
@@ -127,7 +108,7 @@ def page_entity_triples(linked: DataFrame, pages: DataFrame) -> DataFrame:
     per_page = (
         linked.groupBy("url")
         .agg(F.collect_set("entity_iri").alias("entities"))
-        .join(pages.select("url", "subject"), "url")
+        .join(pages.select("url", "subject").dropDuplicates(["url"]), "url")
     )
     return per_page.select(
         F.inline(

@@ -27,6 +27,7 @@ from mhdb_tables2turtles_spark.web.canonicalize import (
     canonical_mapping,
     connected_components,
     equivalence_edges,
+    is_equivalence,
     merge_components,
     rewrite_triples,
 )
@@ -147,16 +148,25 @@ class KGPipeline:
                 t = t.unionByName(_equiv_triples(extra_equiv_edges))
             return t
 
+        # the triples write job also counts the merge-edge rows, so the
+        # alias decision below reads the manifest instead of the table
         triples = staged.stage(
-            "triples", _triples, upstream=("linked", "extract")
+            "triples",
+            _triples,
+            upstream=("linked", "extract"),
+            counts={"equivalence_rows": is_equivalence()},
         )
 
-        edges = equivalence_edges(triples)
-        if staged.is_committed("canonical") or not edges.isEmpty():
+        if staged.is_committed("canonical") or staged.manifest(
+            "triples"
+        ).get("equivalence_rows", 1):
             canonical = staged.stage(
                 "canonical",
                 lambda: rewrite_triples(
-                    triples, canonical_mapping(connected_components(edges))
+                    triples,
+                    canonical_mapping(
+                        connected_components(equivalence_edges(triples))
+                    ),
                 ),
                 upstream=("triples",),
             )

@@ -323,6 +323,13 @@ def test_no_merge_canonical_is_an_alias(spark, corpus, tmp_path, onto_ttl):
     pipe = KGPipeline(spark, wd, ttl_path=onto_ttl)
     out = pipe.run(corpus)
     assert os.listdir(os.path.join(wd, "canonical")) == [MANIFEST]
+    # the decision came from the triples write job's own count, and the
+    # alias manifest carries every key a computed stage manifest has
+    assert pipe.staged.manifest("triples")["equivalence_rows"] == 0
+    alias_man = pipe.staged.manifest("canonical")
+    assert alias_man["data"] == "triples"
+    assert set(pipe.staged.manifest("linked")) <= set(alias_man)
+    assert alias_man["elapsed_sec"] is not None
     triples = pipe.staged.read("triples")
     want = sorted(triples.collect())
     assert sorted(out["canonical"].collect()) == want
@@ -346,6 +353,7 @@ def test_canonicalization_merges_sameas(spark, corpus, tmp_path, onto_ttl):
         for r in out["canonical"].filter(F.col("predicate") == ":mentions").collect()
     }
     assert not (a in objs and b in objs)  # merged to one canonical IRI
+    assert pipe.staged.manifest("triples")["equivalence_rows"] == 1
     assert "data" not in pipe.staged.manifest("canonical")  # own parquet
 
 
@@ -447,11 +455,15 @@ def test_page_entity_triples_runs_no_python(spark):
 
     p1, p2 = "http://a.example/p1", "http://b.example/p2"
     linked = spark.createDataFrame(
-        [(p1, ":Chills"), (p1, ":Music"), (p2, ":Chills")],
+        [(p1, ":Chills"), (p1, ":Music"), (p2, ":Chills"), (p1, ":Chills")],
         ["url", "entity_iri"],
     )
+    # p1 appears twice (a recapture): its triples are still emitted once
     pages = spark.createDataFrame(
-        [(u, format_iri(u)) for u in (p1, p2, "http://c.example/unlinked")],
+        [
+            (u, format_iri(u))
+            for u in (p1, p2, "http://c.example/unlinked", p1)
+        ],
         ["url", "subject"],
     )
     triples = page_entity_triples(linked, pages)
