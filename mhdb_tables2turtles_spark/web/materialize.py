@@ -26,6 +26,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -122,11 +123,9 @@ class StagedPipeline:
         manifest whose ``data`` names ``source``'s parquet, with the
         keys of a :meth:`stage` manifest (rows and lineage are
         ``source``'s, ``elapsed_sec`` the alias commit's own)."""
-        import time as _time
-
         path = self._path(name)
         self.log.append(f"compute:{name}")
-        t0 = _time.time()
+        t0 = time.time()
         src = self.manifest(source)
         shutil.rmtree(path, ignore_errors=True)
         os.makedirs(path)
@@ -134,7 +133,7 @@ class StagedPipeline:
             "stage": name,
             "data": source,
             "rows": src["rows"],
-            "elapsed_sec": round(_time.time() - t0, 2),
+            "elapsed_sec": round(time.time() - t0, 2),
             "upstream": [source],
             "partitions": src.get("partitions", {}),
             "n_partitions": src.get("n_partitions", 0),
@@ -159,15 +158,13 @@ class StagedPipeline:
         write job itself) by atomic rename.  Either way the
         returned DataFrame reads the committed data (an :meth:`alias`
         resolved), lineage column dropped."""
-        import time as _time
-
         path = self._path(name)
         if self.is_committed(name):
             self.log.append(f"resume:{name}")
             return self._load(name)
 
         self.log.append(f"compute:{name}")
-        t0 = _time.time()
+        t0 = time.time()
         df = build().withColumn(LINEAGE_COL, F.spark_partition_id())
         obs = Observation(f"stage_{name}")
         counts = counts or {}
@@ -177,7 +174,7 @@ class StagedPipeline:
             *(F.count_if(c).alias(k) for k, c in counts.items()),
         )
         df.write.mode("overwrite").parquet(path)
-        elapsed = round(_time.time() - t0, 2)
+        elapsed = round(time.time() - t0, 2)
 
         # per-partition lineage: row counts per source partition, read
         # driver-side from the committed parquet footers (min==max row

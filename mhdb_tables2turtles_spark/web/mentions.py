@@ -13,7 +13,6 @@ the same per-text helper.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -25,11 +24,14 @@ from mhdb_tables2turtles_spark.web.trie import matcher_for
 __all__ = ["extract_pages", "scan_mentions", "page_entity_triples"]
 
 
-def _surfaces(text, patterns, matcher) -> list:
-    """The surface of every vocabulary match in ``text``, in order."""
-    if not text:
-        return []
-    return [patterns[i] for _, _, i in matcher.find_words(text.lower())]
+def _scan(texts, patterns: tuple[str, ...]) -> list:
+    """Per text, the surface of every vocabulary match, in order (none
+    for a null or empty text)."""
+    matcher = matcher_for(patterns)
+    return [
+        [patterns[i] for _, _, i in matcher.find_words(t.lower())] if t else []
+        for t in texts
+    ]
 
 
 def extract_pages(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:
@@ -48,14 +50,12 @@ def extract_pages(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:
     )
 
     def kernel(batches):
-        patterns = bc.value
-        matcher = matcher_for(patterns)
         for pdf in batches:
             text = pdf["html"].map(extract_text)
             yield pdf[keep].assign(
                 text=text,
                 subject=pdf["url"].map(format_iri, na_action="ignore"),
-                surfaces=[_surfaces(t, patterns, matcher) for t in text],
+                surfaces=_scan(text, bc.value),
             )
 
     return pages.select(*keep, "html").mapInPandas(kernel, schema=schema)
@@ -72,20 +72,13 @@ def scan_mentions(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:
     bc = pages.sparkSession.sparkContext.broadcast(tuple(surfaces))
 
     def scan(batches):
-        patterns = bc.value
-        matcher = matcher_for(patterns)
         for pdf in batches:
-            # per-column lists: no per-row tuple, no pandas transpose
-            c_url: list = []
-            c_surface: list = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                found = _surfaces(text, patterns, matcher)
-                c_surface.extend(found)
-                c_url.extend([url] * len(found))
-            yield pd.DataFrame({"url": c_url, "surface": c_surface})
+            yield pdf[["url"]].assign(surfaces=_scan(pdf["text"], bc.value))
 
-    return pages.select("url", "text").mapInPandas(
-        scan, schema="url string, surface string"
+    return (
+        pages.select("url", "text")
+        .mapInPandas(scan, schema="url string, surfaces array<string>")
+        .select("url", F.explode("surfaces").alias("surface"))
     )
 
 

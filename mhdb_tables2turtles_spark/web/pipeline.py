@@ -157,16 +157,14 @@ class KGPipeline:
             counts={"equivalence_rows": is_equivalence()},
         )
 
-        if staged.is_committed("canonical") or staged.manifest(
-            "triples"
-        ).get("equivalence_rows", 1):
+        # (a manifest written before the count existed reads as "merges")
+        merges = staged.manifest("triples").get("equivalence_rows", 1)
+        if merges or staged.is_committed("canonical"):
+            edges = equivalence_edges(triples)  # lazy: no job until built
             canonical = staged.stage(
                 "canonical",
                 lambda: rewrite_triples(
-                    triples,
-                    canonical_mapping(
-                        connected_components(equivalence_edges(triples))
-                    ),
+                    triples, canonical_mapping(connected_components(edges))
                 ),
                 upstream=("triples",),
             )
