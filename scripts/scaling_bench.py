@@ -224,7 +224,7 @@ tmpfs.
             f" {best[c]['elapsed_sec']} | {best[c]['pages_per_sec']} |"
             f" {best[c]['n_triples']} |"
             f" {', '.join(str(r['elapsed_sec']) + 's' for r in runs[c])} |\n"
-            for c, tag in ((lo, "N"), (hi, "4N"))
+            for c, tag in ((lo, "N"), (hi, f"{hi // lo}N"))
         )
         + f"""
 **Scaling efficiency ({lo} → {hi} cores, ideal speedup {ideal:g}x):
