@@ -81,34 +81,6 @@ def iri_styled(col: Column, style_col: Column) -> Column:
     return _IRI_STYLED(col, style_col)
 
 
-_BLANK_NODE = None
-
-
-def blank_node(col: Column) -> Column:
-    """``_:label`` blank-node token from a seed string: quotes/newlines
-    dropped, then the delimited label collapse (reference
-    ``create_label``, write_ttl.py:280-315, as used by
-    ``write_about_statement`` :368-371 — which formats the *tuple*
-    create_label returns, a latent bug; the evident intent, the label
-    half, is minted here)."""
-    global _BLANK_NODE
-    if _BLANK_NODE is None:
-        from mhdb_tables2turtles_spark.functions.strings import normalize_text
-
-        @pandas_udf("string")
-        def _f(s: pd.Series) -> pd.Series:
-            def mint(v):
-                if v is None:
-                    return None
-                cleaned = normalize_text(v, (('"', ""), ("\n", "")))
-                return "_:" + to_label(cleaned, "delimited") if cleaned else None
-
-            return s.map(mint)
-
-        _BLANK_NODE = _f
-    return _BLANK_NODE(col)
-
-
 def label(col: Column, style: str = "delimited") -> Column:
     """``to_label`` over a column (vectorized)."""
     return _label_udf(style)(col)

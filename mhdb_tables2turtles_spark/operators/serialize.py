@@ -293,120 +293,3 @@ def render_document(
         triples
     )
 
-
-# ------------------------------------------------------------ N-Triples
-
-_NT_ESCAPES = (
-    ("\\", "\\\\"),
-    ('"', '\\"'),
-    ("\n", "\\n"),
-    ("\r", "\\r"),
-    ("\t", "\\t"),
-)
-
-_RDF_TYPE_IRI = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-
-
-def _nt_escape(s: str) -> str:
-    for raw, esc in _NT_ESCAPES:
-        s = s.replace(raw, esc)
-    return s
-
-
-def _expand_pname(term: str, prefixes: dict[str, str]) -> str:
-    p, _, local = term.partition(":")
-    if p not in prefixes:
-        raise ValueError(f"unknown prefix {p!r} in term {term!r}")
-    return f"<{prefixes[p]}{local}>"
-
-
-def to_nt_term(term: str, prefixes: dict[str, str], position: str) -> str:
-    """One stored term → its N-Triples token.  Handles the engine's
-    term shapes: absolute ``<iri>``, prefixed names (incl. the base
-    ``:local``), the ``a`` keyword, and Turtle literals in both quote
-    forms with ``@lang`` / ``^^datatype`` suffixes (long-string
-    literals re-escape to the single-line N-Triples form)."""
-    if term.startswith("<") and term.endswith(">"):
-        return term
-    if position == "predicate" and term == "a":
-        return _RDF_TYPE_IRI
-    if term.startswith('"'):
-        if term.startswith('"""'):
-            end = term.rfind('"""')
-            if end < 3:
-                raise ValueError(f"unterminated long literal: {term!r}")
-            lexical, suffix = term[3:end], term[end + 3 :]
-        else:
-            end = term.rfind('"')
-            if end < 1:
-                raise ValueError(f"unterminated literal: {term!r}")
-            lexical, suffix = term[1:end], term[end + 1 :]
-            # stored short literals carry Turtle-escaped text already;
-            # unescape the two we emit so the kernel re-escapes uniformly
-            lexical = lexical.replace('\\"', '"').replace("\\\\", "\\")
-        out = f'"{_nt_escape(lexical)}"'
-        if suffix.startswith("@"):
-            out += suffix
-        elif suffix.startswith("^^"):
-            out += "^^" + _expand_pname(suffix[2:], prefixes)
-        elif suffix:
-            raise ValueError(f"bad literal suffix: {term!r}")
-        return out
-    if ":" in term:
-        return _expand_pname(term, prefixes)
-    raise ValueError(f"unserializable term for N-Triples: {term!r}")
-
-
-def write_ntriples(
-    triples: DataFrame,
-    path: str,
-    base_uri: str,
-    prefixes: "dict[str, str] | Iterable[Sequence[str]] | None" = None,
-    shards: int = 0,
-) -> None:
-    """Serialize the triple set as N-Triples part-files — the
-    line-oriented RDF interchange format for bulk exchange at crawl
-    scale: no header, no prefix state, every line self-contained, so
-    shards split/merge/stream trivially (unlike Turtle, whose PREFIX
-    block makes each document stateful).  The reference stops at Turtle
-    (write_ttl.py); N-Triples is the web-scale companion sink.
-
-    Row-local: one Arrow-batched kernel maps (s, p, o) → a line; the
-    only wide operation is the optional ``shards`` repartition.  The
-    prefix table must cover every prefixed name (ValueError otherwise —
-    same fail-loudly contract as resolve_used_prefixes(on_unknown=
-    'raise'))."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    pmap = dict(FIXED_PREFIXES)
-    if prefixes:
-        pmap.update(dict(prefixes))
-    pmap[""] = base_uri + "#"
-
-    # NB: no type hints — `from __future__ import annotations` stringifies
-    # them and pyspark cannot resolve closure-scoped names; the DDL type
-    # on the decorator carries the schema instead
-    @pandas_udf("string")
-    def _line(s, p, o):
-        return pd.Series(
-            [
-                f"{to_nt_term(a, pmap, 'subject')} "
-                f"{to_nt_term(b, pmap, 'predicate')} "
-                f"{to_nt_term(c, pmap, 'object')} ."
-                for a, b, c in zip(s, p, o)
-            ]
-        )
-
-    out = triples
-    if shards:
-        out = out.repartition(shards, "subject")
-    (
-        out.select(
-            _line(F.col("subject"), F.col("predicate"), F.col("object")).alias(
-                "value"
-            )
-        )
-        .write.mode("overwrite")
-        .text(path)
-    )

@@ -101,49 +101,6 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
     return triples.groupBy(*TRIPLE_COLS).agg(*aggs)
 
 
-def reify_statements(
-    triples: DataFrame, annotations: tuple = ()
-) -> DataFrame:
-    """W3C reification of each (s, p, o) row as a blank-node
-    ``rdf:Statement`` (reference ``write_about_statement``,
-    write_ttl.py:317-384 — unused by its own driver, declared here for
-    API completeness).
-
-    Per input triple: a blank node ``_:<label of "s_p_o">`` with
-    ``rdf:type rdf:Statement``, ``rdf:subject/predicate/object`` back-
-    references, plus caller ``annotations`` as extra (predicate, object)
-    constants (the reference's ``predicates`` argument, e.g. provenance
-    ``("source", '"..."')`` pairs).
-
-    Row-local: one Arrow-batched mint + a constant-width union — no
-    shuffle, linear in the triple stream.
-    """
-    from mhdb_tables2turtles_spark.functions import udfs
-
-    seeded = triples.select(
-        udfs.blank_node(
-            F.concat_ws("_", "subject", "predicate", "object")
-        ).alias("node"),
-        "subject",
-        "predicate",
-        "object",
-    )
-    emit = [("rdf:type", F.lit("rdf:Statement")),
-            ("rdf:subject", F.col("subject")),
-            ("rdf:predicate", F.col("predicate")),
-            ("rdf:object", F.col("object"))]
-    emit += [(p, F.lit(o)) for p, o in annotations]
-    parts = [
-        seeded.select(
-            F.col("node").alias("subject"),
-            F.lit(p).alias("predicate"),
-            o.alias("object"),
-        )
-        for p, o in emit
-    ]
-    return union_triples(parts)
-
-
 def doi_triples(
     df: DataFrame, doi_col: str = "doi", title_col: str | None = None
 ) -> DataFrame:

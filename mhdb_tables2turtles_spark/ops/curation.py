@@ -1,20 +1,9 @@
 """Corpus-curation verdict: compose every filter-family signal into ONE
 keep/drop decision per document (the FineWeb/Gopher-style end artifact).
 
-Two execution shapes over the same composition:
-
-* :func:`curation_verdict` — the pure DataFrame join, used inline by the
-  oracle query ``queries_cleaning.q_corpus_curation`` (the driver gate
-  needs a single self-contained plan).
-* :func:`staged_curation` — the production shape: each signal
-  (dedup decisions, decontamination, repetition, quality) is computed
-  ONCE, committed through :class:`web.materialize.StagedPipeline`
-  (atomic parquet + manifest, resume from last committed snapshot), and
-  the verdict joins the committed tables.  At 100 TB the signals are
-  each a full-corpus scan-and-shuffle; recomputing them inside one plan
-  (what the inline query does at fixture scale) would multiply that
-  cost and lose all of it on a failure — the staged form pays each
-  signal exactly once and a killed run resumes at the next signal.
+The composition is :func:`curation_verdict`, a pure DataFrame join
+used inline by the oracle query ``queries_cleaning.q_corpus_curation``
+(the DuckDB oracle check needs one self-contained plan).
 
 Precedence (highest first): exact dup > near dup > benchmark-
 contaminated > repetitive (> ``rep_bp`` duplicated-bigram basis points)
@@ -23,10 +12,10 @@ contaminated > repetitive (> ``rep_bp`` duplicated-bigram basis points)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["curation_verdict", "staged_curation", "CUR_REP_BP", "CUR_QUALITY"]
+__all__ = ["curation_verdict", "CUR_REP_BP", "CUR_QUALITY"]
 
 # drop thresholds for the composed curation verdict
 CUR_REP_BP = 2000     # > 20% duplicated bigram mass -> repetitive
@@ -67,56 +56,4 @@ def curation_verdict(
     )
     return j.select(
         "doc_id", reason.alias("reason"), (reason == "keep").alias("keep")
-    )
-
-
-def staged_curation(
-    spark: SparkSession,
-    sf_dir: str,
-    workdir: str,
-    rep_bp: int = CUR_REP_BP,
-    quality_floor: float = CUR_QUALITY,
-) -> DataFrame:
-    """Production curation run: materialize each signal once through
-    staged commits, then join the committed tables into the verdict.
-
-    Resume semantics come from :class:`StagedPipeline`: a run killed
-    after committing (say) ``dedup_decisions`` and ``decontaminate``
-    restarts by READING those two parquet snapshots and computing only
-    the remaining signals — check ``StagedPipeline.log`` for
-    ``resume:`` vs ``compute:`` entries.
-    """
-    # lazy imports: the signal builders live in the query modules, which
-    # import ops.* — importing them at module scope would be circular
-    from mhdb_tables2turtles_spark.queries import q_dedup_decisions
-    from mhdb_tables2turtles_spark.queries_cleaning import (
-        _read_spread,
-        q_decontaminate,
-        q_text_repetition,
-    )
-    from mhdb_tables2turtles_spark.ops.text import quality_score
-    from mhdb_tables2turtles_spark.web.materialize import StagedPipeline
-
-    staged = StagedPipeline(spark, workdir)
-    dd = staged.stage(
-        "dedup_decisions", lambda: q_dedup_decisions(spark, sf_dir)
-    )
-    de = staged.stage(
-        "decontaminate", lambda: q_decontaminate(spark, sf_dir)
-    )
-    rep = staged.stage(
-        "repetition", lambda: q_text_repetition(spark, sf_dir)
-    )
-    qu = staged.stage(
-        "quality",
-        lambda: quality_score(
-            _read_spread(spark, sf_dir, "documents")
-        ).select("doc_id", "quality"),
-    )
-    return staged.stage(
-        "verdict",
-        lambda: curation_verdict(
-            dd, de, rep, qu, rep_bp=rep_bp, quality_floor=quality_floor
-        ),
-        upstream=("dedup_decisions", "decontaminate", "repetition", "quality"),
     )

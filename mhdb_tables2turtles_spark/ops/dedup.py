@@ -2,9 +2,9 @@
 
 Scale notes (the point of each design):
 
-* **exact**: one shuffle on a 60-bit content hash — the classic
-  hash-groupBy; at 100 TB the shuffle carries (hash, doc_id) only, never
-  the text.
+* **exact** (inline in ``queries.q_dedup_exact``): one shuffle on a
+  60-bit content hash — the classic hash-groupBy; at 100 TB the shuffle
+  carries (hash, doc_id) only, never the text.
 * **MinHash+LSH**: signatures are computed **row-locally** with array
   lambdas (no explode, no shuffle, whole-stage codegen); the only shuffle
   is the band-bucket self-join, whose keys are uniformly distributed
@@ -23,32 +23,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mhdb_tables2turtles_spark.ops.common import hash60, norm_text, shingles, tokens
+from mhdb_tables2turtles_spark.ops.common import hash60, shingles, tokens
 
 __all__ = [
-    "exact_duplicates",
     "minhash_bands",
     "lsh_candidate_pairs",
     "jaccard_pairs",
     "simhash",
-    "simhash_duplicates",
     "near_dup_clusters",
     "incremental_near_dups",
 ]
-
-
-def exact_duplicates(docs: DataFrame) -> DataFrame:
-    """Duplicate groups by full-content hash: (text_hash, dup_count,
-    min_doc_id) for groups with >1 member."""
-    return (
-        docs.select(F.col("doc_id"), hash60(norm_text(F.col("text"))).alias("text_hash"))
-        .groupBy("text_hash")
-        .agg(
-            F.count("*").alias("dup_count"),
-            F.min("doc_id").alias("keep_doc_id"),
-        )
-        .filter(F.col("dup_count") > 1)
-    )
 
 
 MINHASH_P = 2_147_483_647  # 2^31 - 1; keeps a*(h%P)+b inside 63 bits
@@ -365,17 +349,6 @@ def simhash_np(docs: DataFrame, bits: int = 16) -> DataFrame:
 
     return docs.select("doc_id", "text").mapInPandas(
         kernel, schema="doc_id long, simhash long"
-    )
-
-
-def simhash_duplicates(docs: DataFrame, bits: int = 16) -> DataFrame:
-    """Groups of documents sharing an identical simhash (hamming-0
-    near-dup buckets): (simhash, dup_count, keep_doc_id)."""
-    return (
-        simhash(docs, bits)
-        .groupBy("simhash")
-        .agg(F.count("*").alias("dup_count"), F.min("doc_id").alias("keep_doc_id"))
-        .filter(F.col("dup_count") > 1)
     )
 
 

@@ -1,23 +1,14 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Decode kernels, by format:
-
-* **PNG** — REAL decoder (:func:`decode_png`): pure-stdlib (zlib)
-  implementation of the PNG spec's IDAT inflate + per-scanline filter
-  reconstruction (None/Sub/Up/Average/Paeth), 8-bit gray/RGB/GA/RGBA.
-* **WAV** — REAL decoder (:func:`decode_wav`): stdlib ``wave`` PCM
-  reader (rate/channels/width/frames + samples).
-* **JPEG / video codecs** — STUB (``NotImplementedError``): entropy
-  decoding needs PIL/ffmpeg, absent in this sandbox; the deterministic
-  fake twin (:func:`fake_decode_features`) keeps the Spark plumbing
-  testable with the same bytes->vector contract.
-
-What is always real and tested is the Spark side: schemas, Arrow-batched
-``mapInPandas`` signatures, batch shapes, and the partitioning strategy —
-swap the kernel body for PIL/ffmpeg off-sandbox and nothing else changes.
+The catalog's ``multimodal_*`` queries run the Spark side: a fake media
+table built from the documents fixture (:func:`media_from_documents`),
+a magic-byte sniff in pure column expressions (:func:`sniff_metadata`)
+and the 1->N Arrow-batched ``mapInPandas`` shape of frame sampling
+(:func:`sample_frames`).  No codec is decoded here; a real decoder
+(PIL/ffmpeg) would slot into the same ``mapInPandas`` signature.
 
 Scale notes: payloads stay ``binary`` end-to-end (no base64 round trips);
-feature extraction is embarrassingly parallel (``mapInPandas``, no
+per-payload work is embarrassingly parallel (``mapInPandas``, no
 shuffle); downstream joins key on ``media_id``.
 """
 
@@ -33,13 +24,6 @@ __all__ = [
     "MEDIA_SCHEMA",
     "media_from_documents",
     "sniff_metadata",
-    "decode_png",
-    "encode_png",
-    "decode_wav",
-    "decode_image",
-    "image_stats",
-    "fake_decode_features",
-    "extract_features",
     "sample_frames",
 ]
 
@@ -95,259 +79,6 @@ def sniff_metadata(media: DataFrame) -> DataFrame:
         kind.alias("kind"),
         F.octet_length(payload).alias("n_bytes"),
         (F.octet_length(payload) >= F.col("declared_bytes")).alias("payload_ok"),
-    )
-
-
-# ------------------------------------------------------------ PNG codec
-
-_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-# color type -> channels (8-bit depth only; palette/interlace rejected)
-_PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
-def decode_png(payload: bytes) -> "object":
-    """Decode an 8-bit PNG (gray / gray+alpha / RGB / RGBA, no
-    interlace, no palette) to a ``numpy`` uint8 array of shape
-    ``(height, width, channels)``.
-
-    Pure stdlib: chunk walk -> IDAT concat -> ``zlib.decompress`` ->
-    per-scanline filter reconstruction (types 0-4 per the PNG spec).
-    Chunk CRCs are verified.
-    """
-    import struct
-    import zlib
-
-    import numpy as np
-
-    if not payload.startswith(_PNG_MAGIC):
-        raise ValueError("not a PNG payload")
-    pos = len(_PNG_MAGIC)
-    width = height = None
-    channels = 0
-    idat = bytearray()
-    while pos + 8 <= len(payload):
-        (length,) = struct.unpack(">I", payload[pos : pos + 4])
-        ctype = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        (crc,) = struct.unpack(
-            ">I", payload[pos + 8 + length : pos + 12 + length]
-        )
-        if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-            raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
-        if ctype == b"IHDR":
-            width, height, depth, color, _comp, _filt, interlace = (
-                struct.unpack(">IIBBBBB", data)
-            )
-            if depth != 8:
-                raise NotImplementedError(f"PNG bit depth {depth} != 8")
-            if color not in _PNG_CHANNELS:
-                raise NotImplementedError(f"PNG color type {color}")
-            if interlace:
-                raise NotImplementedError("interlaced PNG")
-            channels = _PNG_CHANNELS[color]
-        elif ctype == b"IDAT":
-            idat.extend(data)
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length
-    if width is None:
-        raise ValueError("PNG missing IHDR")
-    raw = zlib.decompress(bytes(idat))
-    stride = width * channels
-    if len(raw) != height * (stride + 1):
-        raise ValueError("PNG decompressed size mismatch")
-    out = np.zeros((height, stride), dtype=np.uint8)
-    prev = bytearray(stride)
-    for y in range(height):
-        ftype = raw[y * (stride + 1)]
-        line = bytearray(raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)])
-        if ftype == 1:  # Sub
-            for i in range(channels, stride):
-                line[i] = (line[i] + line[i - channels]) & 0xFF
-        elif ftype == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                left = line[i - channels] if i >= channels else 0
-                line[i] = (line[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                left = line[i - channels] if i >= channels else 0
-                upleft = prev[i - channels] if i >= channels else 0
-                line[i] = (line[i] + _paeth(left, prev[i], upleft)) & 0xFF
-        elif ftype != 0:
-            raise ValueError(f"PNG filter type {ftype}")
-        out[y] = np.frombuffer(bytes(line), dtype=np.uint8)
-        prev = line
-    return out.reshape(height, width, channels)
-
-
-def encode_png(pixels: "object", filter_type: int = 0) -> bytes:
-    """Minimal PNG encoder (the decoder's test twin): uint8 array of
-    shape (h, w, channels in {1,2,3,4}) -> PNG bytes, every scanline
-    filtered with ``filter_type`` (0-4) so each reconstruction path is
-    exercisable bit-exactly."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    px = np.asarray(pixels, dtype=np.uint8)
-    h, w, ch = px.shape
-    color = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
-    flat = px.reshape(h, w * ch).astype(np.int32)
-    lines = bytearray()
-    prev = np.zeros(w * ch, dtype=np.int32)
-    for y in range(h):
-        cur = flat[y]
-        left = np.concatenate([np.zeros(ch, np.int32), cur[:-ch]])
-        upleft = np.concatenate([np.zeros(ch, np.int32), prev[:-ch]])
-        if filter_type == 0:
-            filt = cur
-        elif filter_type == 1:
-            filt = cur - left
-        elif filter_type == 2:
-            filt = cur - prev
-        elif filter_type == 3:
-            filt = cur - ((left + prev) >> 1)
-        elif filter_type == 4:
-            pred = np.array(
-                [_paeth(int(a), int(b), int(c))
-                 for a, b, c in zip(left, prev, upleft)],
-                dtype=np.int32,
-            )
-            filt = cur - pred
-        else:
-            raise ValueError(f"filter {filter_type}")
-        lines.append(filter_type)
-        lines.extend((filt & 0xFF).astype(np.uint8).tobytes())
-        prev = cur
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    return (
-        _PNG_MAGIC
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(lines)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def decode_wav(payload: bytes) -> dict:
-    """Decode a PCM WAV payload (stdlib ``wave``): framerate, channels,
-    sample width, frame count, and the raw sample bytes."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        return {
-            "framerate": w.getframerate(),
-            "channels": w.getnchannels(),
-            "sample_width": w.getsampwidth(),
-            "n_frames": w.getnframes(),
-            "samples": w.readframes(w.getnframes()),
-        }
-
-
-def decode_image(payload: bytes) -> "object":
-    """Decode an image payload to a (h, w, ch) uint8 array.  PNG decodes
-    for real (:func:`decode_png`); JPEG entropy decoding still requires
-    PIL/opencv and raises."""
-    if payload[: len(_PNG_MAGIC)].startswith(_PNG_MAGIC[:4]):
-        return decode_png(payload)
-    raise NotImplementedError(
-        "non-PNG image decode requires PIL/opencv; "
-        "use fake_decode_features in-sandbox"
-    )
-
-
-def image_stats(media: DataFrame) -> DataFrame:
-    """Real decode kernel over PNG payloads: (media_id, width, height,
-    channels, mean_0..) via :func:`decode_png` in an Arrow-batched
-    ``mapInPandas`` — the production shape for decode+featurize (row
-    errors surface as nulls, never kill the batch)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    arr = decode_png(bytes(p))
-                    means = [
-                        round(float(arr[:, :, c].mean()), 3)
-                        for c in range(arr.shape[2])
-                    ]
-                    rows.append(
-                        (mid, arr.shape[1], arr.shape[0], arr.shape[2], means)
-                    )
-                except Exception:
-                    rows.append((mid, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "channels", "chan_means",
-                ],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run,
-        schema=(
-            "media_id long, width int, height int, channels int, "
-            "chan_means array<double>"
-        ),
-    )
-
-
-def fake_decode_features(payload: bytes, n_features: int = 8) -> list[float]:
-    """Deterministic stand-in for a decode+featurize kernel: n byte-level
-    statistics of the payload.  Same contract (bytes -> fixed-length
-    vector) as a real extractor."""
-    if not payload:
-        return [0.0] * n_features
-    step = max(1, len(payload) // n_features)
-    return [
-        round(sum(payload[i : i + step]) / max(1, len(payload[i : i + step])), 3)
-        for i in range(0, step * n_features, step)
-    ]
-
-
-def extract_features(media: DataFrame, n_features: int = 8) -> DataFrame:
-    """Arrow-batched feature extraction: (media_id, features array<double>).
-
-    The kernel is :func:`fake_decode_features`; swapping in a real decode
-    changes nothing Spark-side.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "features": [
-                        fake_decode_features(bytes(p), n_features)
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema="media_id long, features array<double>"
     )
 
 

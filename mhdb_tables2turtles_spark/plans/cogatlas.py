@@ -21,22 +21,17 @@ clear intent: ASSERTS → ``:assertsCognitiveAtlasConcept``.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mhdb_tables2turtles_spark.functions import udfs
 
 __all__ = [
-    "load_cogatlas_tables",
     "resolve_nodes",
     "assertion_triples",
     "RESOLUTION_ORDER",
     "RELN_PREDICATES",
 ]
-
-COGATLAS_DIR = "/root/reference/input/cognitiveatlas.org"
 
 # (table, value column, IRI label style), priority order
 # (ingest.py:2534-2596; the xlsx worksheets mirror these CSVs)
@@ -72,53 +67,6 @@ _OBJECT_STYLE = {
     "HASINDICATOR": "delimited",
     "MEASUREDBY": "delimited",
 }
-
-# value column per CSV (all committed node CSVs carry ``name``; the
-# worksheet column aliases in RESOLUTION_ORDER are the reference's
-# renamed views of the same values)
-_CSV_VALUE_COLS = {
-    "tasks": "name",
-    "implementations": "name",
-    "indicators": "name",
-    "conditions": "name",
-    "contrasts": "name",
-}
-
-
-def load_cogatlas_tables(
-    spark: SparkSession, base_dir: str = COGATLAS_DIR
-) -> dict[str, DataFrame]:
-    """Node tables + relationships from the committed CSVs, normalized to
-    (node_id:long, value:string) / (reln_type, startNode, endNode)."""
-    out: dict[str, DataFrame] = {}
-    for name, _, _ in RESOLUTION_ORDER:
-        path = os.path.join(base_dir, f"{name}.csv")
-        df = spark.read.csv(path, header=True, multiLine=True, escape='"')
-        value_col = _CSV_VALUE_COLS[name]
-        if value_col not in df.columns:  # fall back to the worksheet name
-            value_col = RESOLUTION_ORDER[
-                [t[0] for t in RESOLUTION_ORDER].index(name)
-            ][1]
-        out[name] = df.select(
-            F.col("node_id").cast("long").alias("node_id"),
-            F.col(value_col).alias("value"),
-        ).filter(
-            F.col("node_id").isNotNull()
-            & F.col("value").isNotNull()
-            & (F.length(F.trim(F.col("value"))) > 0)
-        )
-    rel = spark.read.csv(
-        os.path.join(base_dir, "relationships.csv"), header=True
-    )
-    out["relationships"] = rel.select(
-        F.col("reln_type"),
-        F.col("startNode").cast("long").alias("startNode"),
-        F.col("endNode").cast("long").alias("endNode"),
-    ).filter(
-        F.col("startNode").isNotNull() & F.col("endNode").isNotNull()
-    )
-    return out
-
 
 def resolve_nodes(tables: dict[str, DataFrame]) -> DataFrame:
     """J4: (node_id, value, style) — first table in priority order that

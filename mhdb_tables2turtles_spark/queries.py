@@ -301,8 +301,7 @@ _SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
 
 
 def q_event_sessions(spark, sf_dir):
-    """Batch twin of the streaming sessionizer
-    (streaming/sessions.py::mention_sessions): gap-based session
+    """The engine's sessionization operator: gap-based session
     assignment via lag + running sum, then per-session aggregates.
 
     All event-time arithmetic AND outputs in integer microseconds
@@ -838,9 +837,9 @@ def q_dedup_decisions(spark, sf_dir):
     """The dedup family's end artifact: one keep/drop decision per
     document.  Exact duplicates (same normalized content hash) drop
     first; then near-dup cluster members that aren't their cluster's
-    canonical; everything else keeps.  Composes exact_duplicates +
-    near_dup_clusters; the corpus never shuffles, only hashes and the
-    tiny verified-edge graph."""
+    canonical; everything else keeps.  Composes the content-hash grouping
+    of :func:`q_dedup_exact` with near_dup_clusters; the corpus never
+    shuffles, only hashes and the tiny verified-edge graph."""
     docs = _read_spread(spark, sf_dir, "documents")
     hashes = docs.select(
         "doc_id", hash60(norm_text(F.col("text"))).alias("content_hash")

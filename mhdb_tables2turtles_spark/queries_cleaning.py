@@ -555,8 +555,7 @@ _SQL_URL_CANONICAL = f"""
 
 # ------------------------------------------------------ corpus_curation
 
-# drop thresholds for the composed curation verdict (shared with the
-# staged production shape, ops/curation.py)
+# drop thresholds for the composed curation verdict (ops/curation.py)
 from mhdb_tables2turtles_spark.ops.curation import (  # noqa: E402
     CUR_QUALITY as _CUR_QUALITY,
     CUR_REP_BP as _CUR_REP_BP,
@@ -569,10 +568,8 @@ def q_corpus_curation(spark, sf_dir):
     document composing every filter family (the FineWeb/Gopher-style
     decision): exact dup > near dup > benchmark-contaminated >
     repetitive (dup-bigram mass > 20%) > low quality (< 0.5) > keep.
-    Inline single-plan shape for the driver oracle; the production
-    shape (each signal materialized once through staged commits, then
-    joined) is ops/curation.py::staged_curation — both compose through
-    the same curation_verdict()."""
+    One inline plan, as the DuckDB oracle check needs; the composition
+    itself is ops/curation.py::curation_verdict()."""
     from mhdb_tables2turtles_spark.queries import q_dedup_decisions
     from mhdb_tables2turtles_spark.ops.text import quality_score
 

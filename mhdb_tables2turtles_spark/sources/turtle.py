@@ -13,8 +13,7 @@ prefix directives scope the whole document), so the unit of parallelism
 is the FILE — exactly why the sink shards its body into self-contained
 ``part-*`` files in the first place.  ``binaryFile`` scan → one
 Arrow-batched ``mapInPandas`` parse per file; driver memory is O(prefix
-table), executor memory O(largest shard).  For bulk line-oriented RDF
-interchange use sources/ntriples.py instead (splittable at any scale).
+table), executor memory O(largest shard).
 
 Term convention: surface form, same as the triple tables and golden
 oracles — prefixed names as written, literals with quotes/langtag/

@@ -28,13 +28,11 @@ onward.
 
 from __future__ import annotations
 
-import gzip
-import io
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["parse_warc", "build_warc", "read_warc_pages"]
+__all__ = ["parse_warc", "read_warc_pages"]
 
 _CRLF = b"\r\n"
 
@@ -124,27 +122,6 @@ def parse_warc(blob: bytes) -> list[dict]:
                 rec["html"] = _http_payload(rec.pop("body"))
             records.append(rec)
     return records
-
-
-def build_warc(pages: list[tuple[str, str, bytes]], gz: bool = False) -> bytes:
-    """Inverse of :func:`parse_warc` for tests/fixtures: (url, iso_date,
-    html) triples → WARC bytes (one gzip member per record if ``gz``),
-    wrapped in the HTTP response envelope Common Crawl stores."""
-    out = io.BytesIO()
-    for url, date, html in pages:
-        http = (
-            b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + html
-        )
-        head = (
-            f"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: {url}\r\n"
-            f"WARC-Date: {date}\r\nContent-Length: {len(http)}\r\n\r\n"
-        ).encode("ascii")
-        record = head + http + _CRLF + _CRLF
-        if gz:
-            out.write(gzip.compress(record, mtime=0))
-        else:
-            out.write(record)
-    return out.getvalue()
 
 
 def read_warc_pages(spark: SparkSession, path: str) -> DataFrame:

@@ -1,30 +1,23 @@
-"""Incremental page→triple ingestion with Structured Streaming.
+"""Incremental KG construction with Structured Streaming.
 
-Design: the batch pipeline's stages are stateless DataFrame→DataFrame
-functions, so the stream variant reuses them verbatim —
-``readStream`` swaps in for ``read`` and the Spark engine handles
-incrementalization.  State appears only in the windowed aggregation
-(watermark bounds it) and the sink checkpoint (exactly-once file sink).
+The stream builds the same graph as the batch pipeline: each
+micro-batch of pages is one :meth:`KGPipeline.update` epoch, so there is
+no second set of stream-only transformations to keep in step with it.
 
 At crawl scale: one micro-batch per WARC drop directory; the checkpoint
 directory is the streaming twin of the batch manifests — kill the job,
 restart with the same checkpoint, and processing resumes after the last
-committed batch without duplicating sink files.
+committed batch without duplicating epochs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from mhdb_tables2turtles_spark.web.mentions import extract_pages
 from mhdb_tables2turtles_spark.web.pages import PAGES_SCHEMA
 
 __all__ = [
     "read_page_stream",
-    "stream_triples",
-    "windowed_mention_rates",
-    "start_triple_sink",
     "stream_kg_updates",
 ]
 
@@ -39,79 +32,6 @@ def read_page_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
-
-
-def _stream_mentions(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:
-    """Page batch -> (subject, surface, warc_ts), one row per occurrence:
-    the batch pipeline's :func:`extract_pages` pass, exploded.  It is
-    row-local, so it lifts to streams unchanged, and ``warc_ts`` rides
-    through it — no stream-stream re-join back to the source (which
-    would hold unbounded join state)."""
-    return extract_pages(pages, surfaces).select(
-        "subject", F.explode("surfaces").alias("surface"), "warc_ts"
-    )
-
-
-def stream_triples(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:
-    """Streaming page batch -> (subject, predicate, object, warc_ts):
-    one ``:mentions`` triple per page and vocabulary surface found."""
-    return (
-        _stream_mentions(pages, surfaces)
-        .select(
-            "subject",
-            F.lit(":mentions").alias("predicate"),
-            F.col("surface").alias("object"),
-            "warc_ts",
-        )
-        # bounded-state dedup: duplicates only occur within one page's
-        # crawl window, so a watermark-scoped dedup is exact here while
-        # a plain dropDuplicates would grow state forever
-        .withWatermark("warc_ts", "1 hour")
-        .dropDuplicatesWithinWatermark(["subject", "predicate", "object"])
-    )
-
-
-def windowed_mention_rates(
-    pages: DataFrame,
-    surfaces: tuple[str, ...],
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Watermarked windowed aggregation: mentions per surface per
-    crawl-time window.  Late pages beyond the watermark are dropped —
-    bounded state regardless of stream length."""
-    return (
-        _stream_mentions(pages, surfaces)
-        .withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), F.col("surface"))
-        .agg(F.count("*").alias("n_mentions"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "surface",
-            "n_mentions",
-        )
-    )
-
-
-def start_triple_sink(
-    triples: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Exactly-once parquet sink.  ``available_now`` drains everything
-    currently in the source then stops (the batch-like test/backfill
-    mode); otherwise runs continuously."""
-    writer = (
-        triples.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_kg_updates(

@@ -3,8 +3,10 @@
 ``extract_text`` is a pure function of the html bytes: no library
 versions, no locale, no randomness — so the per-row invariant required by
 BASELINE.json (`input_hint`: "byte-identical extracted text per url")
-holds across runs, executors, and cluster sizes.  The Spark surface is a
-single Arrow-batched pandas UDF (never per-row Python).
+holds across runs, executors, and cluster sizes.  The Spark surface is
+the pipeline's one ``mapInPandas`` pass per page
+(:func:`~mhdb_tables2turtles_spark.web.mentions.extract_pages`) and the
+WARC reader, both of which call it per Arrow batch.
 
 The reference engine has no HTML stage (it reads spreadsheets,
 /root/reference/mhdb/spreadsheet_io.py:18-39); this is the north-rule
@@ -17,11 +19,7 @@ from __future__ import annotations
 import html as _html
 import re
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
-
-__all__ = ["extract_text", "extract_text_col", "extract_links"]
+__all__ = ["extract_text", "extract_links"]
 
 # Order matters and is part of the byte-identity contract — do not
 # "improve" these patterns without versioning the extractor.
@@ -68,19 +66,3 @@ def extract_links(html: bytes | None) -> list[str] | None:
             out.append(href)
     return out
 
-
-_UDF = None
-
-
-def extract_text_col(html: Column) -> Column:
-    """Vectorized ``extract_text`` over a binary column (UDF created
-    lazily — pandas_udf needs an active session to parse its DDL type)."""
-    global _UDF
-    if _UDF is None:
-
-        @pandas_udf("string")
-        def _extract_udf(h: pd.Series) -> pd.Series:
-            return h.map(extract_text)
-
-        _UDF = _extract_udf
-    return _UDF(html)

@@ -52,9 +52,7 @@ def alias_variants(label: str) -> set[str]:
     return {v for v in out if len(v) >= 3}
 
 
-def vocabulary_frame(
-    ttl_path: str = "/root/reference/output/chills.ttl",
-) -> pd.DataFrame:
+def vocabulary_frame(ttl_path: str) -> pd.DataFrame:
     """(surface, entity_iri, entity_type, is_alias) — one row per surface
     form per entity.  Several entities may share a surface (ambiguity is
     resolved by the linking stage)."""
@@ -93,9 +91,7 @@ def vocabulary_frame(
     return pd.DataFrame(rows, columns=["surface", "entity_iri", "entity_type", "is_alias"])
 
 
-def entity_profiles(
-    ttl_path: str = "/root/reference/output/chills.ttl",
-) -> pd.DataFrame:
+def entity_profiles(ttl_path: str) -> pd.DataFrame:
     """(entity_iri, profile_text) — label + definition words, the
     entity-side document for TF-IDF candidate scoring (:mod:`linking`)."""
     triples = load_golden_triples(ttl_path)

@@ -3,11 +3,16 @@
 not unit tests): golden-chills P/R vs the reference .ttl, the driver
 entry smoke check, and the staged web KG pipeline incl. resume.
 
+Drive 1 reads the reference checkout's ``output/chills.ttl``; where that
+file is absent it prints a skip with the reason and drives 2 and 3 still
+run.
+
 Usage: python scripts/verify_drives.py   (prints VERIFY-DRIVES-OK)
 """
 
 from __future__ import annotations
 
+import inspect
 import os
 import shutil
 import sys
@@ -17,22 +22,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def main() -> None:
+def drive_golden(spark, tmp: str, golden_ttl: str) -> None:
+    """Drive 1: chills golden pipeline via the library surface."""
     import pandas as pd
-    from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Drive 1: chills golden pipeline via the library surface
     from mhdb_tables2turtles_spark.operators.serialize import render_document
     from mhdb_tables2turtles_spark.operators.triples import (
         dedup_triples,
@@ -46,7 +39,7 @@ def main() -> None:
         reverse_fixture,
     )
 
-    golden = load_golden_triples("/root/reference/output/chills.ttl")
+    golden = load_golden_triples(golden_ttl)
     frames = reverse_fixture(golden)
     tables = {}
     for name, pdf in frames.items():
@@ -68,7 +61,6 @@ def main() -> None:
         "chills",
         "verify run",
     )
-    tmp = tempfile.mkdtemp()
     with open(os.path.join(tmp, "chills.ttl"), "w", encoding="utf-8") as f:
         f.write(doc)
     ours = set(parse_turtle_body(doc))
@@ -76,6 +68,31 @@ def main() -> None:
     p, r = tp / len(ours), tp / len(golden)
     print(f"golden chills: P={p:.4f} R={r:.4f} ours={len(ours)} golden={len(golden)}", flush=True)
     assert p >= 0.99 and r >= 0.99
+
+
+def main() -> None:
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master("local[4]")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", "4g")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    tmp = tempfile.mkdtemp()
+
+    from mhdb_tables2turtles_spark.sources.golden import load_golden_triples
+
+    # the reference checkout's chills.ttl, the library's default golden graph
+    golden_ttl = inspect.signature(load_golden_triples).parameters["path"].default
+    if os.path.exists(golden_ttl):
+        drive_golden(spark, tmp, golden_ttl)
+    else:
+        print(f"golden chills: skipped (input not found: {golden_ttl})", flush=True)
 
     # Drive 2: driver contract smoke
     import __spark_entry__ as entry_mod

@@ -35,8 +35,8 @@ def pytest_configure(config):
 
 
 # Oracle inputs outside the repo: the library's default golden graph
-# (``<reference checkout>/output/chills.ttl``), the checkout's ``mhdb``
-# module and its Cognitive Atlas CSVs.
+# (``<reference checkout>/output/chills.ttl``) and the checkout's
+# ``mhdb`` module.
 GOLDEN_TTL = inspect.signature(load_golden_triples).parameters["path"].default
 REFERENCE_MODULE = os.path.join(
     os.path.dirname(os.path.dirname(GOLDEN_TTL)), "mhdb"

@@ -251,45 +251,6 @@ def test_mix_weights_temperature(spark):
     assert 9998 <= got["big"].weight_bp + got["small"].weight_bp <= 10000
 
 
-def test_staged_curation_resume_matches_inline(spark, tmp_path):
-    """Production curation shape (each signal committed once, verdict
-    joins the committed tables) returns exactly the inline oracle
-    query's verdicts, and a run killed after two signal commits resumes
-    from the snapshots without recomputing them."""
-    from mhdb_tables2turtles_spark.ops.curation import staged_curation
-    from mhdb_tables2turtles_spark.queries_cleaning import q_corpus_curation
-    from mhdb_tables2turtles_spark.web.materialize import StagedPipeline
-
-    sf_dir = "/root/testdata/sf0.001"
-    wd = str(tmp_path / "curation")
-    got = {r.doc_id: (r.reason, r.keep)
-           for r in staged_curation(spark, sf_dir, wd).collect()}
-    want = {r.doc_id: (r.reason, r.keep)
-            for r in q_corpus_curation(spark, sf_dir).collect()}
-    assert got == want and len(got) > 0
-    # at least one non-keep verdict so precedence is actually exercised
-    assert any(not keep for _, keep in got.values())
-
-    # kill/resume: wipe the last three stage commits ("the job died
-    # after committing dedup_decisions and decontaminate"); the rerun
-    # must READ those two and compute only the rest
-    import shutil
-
-    for stage in ("repetition", "quality", "verdict"):
-        shutil.rmtree(str(tmp_path / "curation" / stage))
-    pipe_log_probe = StagedPipeline(spark, wd)
-    assert pipe_log_probe.is_committed("dedup_decisions")
-    assert not pipe_log_probe.is_committed("repetition")
-    got2 = {r.doc_id: (r.reason, r.keep)
-            for r in staged_curation(spark, sf_dir, wd).collect()}
-    assert got2 == want
-
-    # full resume: nothing recomputes on a third run over the same dir
-    got3 = {r.doc_id: (r.reason, r.keep)
-            for r in staged_curation(spark, sf_dir, wd).collect()}
-    assert got3 == want
-
-
 def test_line_repetition_crafted(spark):
     """Hand-checked line-level repetition: duplicated nav line counts
     both occurrences, whitespace-only lines ignored, char share weighs

@@ -1,17 +1,11 @@
-"""J4 priority resolution + J5 relation dispatch over the Cognitive
-Atlas CSVs (the one reference input that is actually committed)."""
+"""J4 priority resolution + J5 relation dispatch over Cognitive Atlas
+node and relationship tables."""
 
 from __future__ import annotations
 
-import pytest
-from conftest import requires
-from pyspark.sql import functions as F
-
 from mhdb_tables2turtles_spark.plans.cogatlas import (
-    COGATLAS_DIR,
     RELN_PREDICATES,
     assertion_triples,
-    load_cogatlas_tables,
     resolve_nodes,
 )
 
@@ -73,19 +67,3 @@ def test_assertion_dispatch_and_asserts_extras(spark):
     assert not any(p not in set(RELN_PREDICATES.values()) | {"rdfs:subClassOf", "rdfs:label"}
                    for _, p, _ in triples)
 
-
-@requires(COGATLAS_DIR)
-@pytest.mark.slow
-def test_real_csvs_end_to_end(spark):
-    tables = load_cogatlas_tables(spark)
-    assert tables["relationships"].count() > 10_000
-    triples = assertion_triples(tables)
-    n = triples.count()
-    # ~2.9k: ASSERTS endpoints live in concepts.csv, which is NOT in the
-    # reference's 5-table fallback list, so (like the reference) those
-    # assertions drop; the resolvable relation types all materialize
-    assert n > 2_000
-    preds = {r.predicate for r in triples.select("predicate").distinct().collect()}
-    assert {":isKindOf", ":hasTaskContrast", ":hasTaskIndicator"} <= preds
-    # deterministic across runs
-    assert triples.count() == n

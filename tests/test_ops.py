@@ -45,16 +45,6 @@ def test_hash60_portable(spark, ddb):
     assert got == want == py_hash60("abc")
 
 
-def test_exact_duplicates_none_in_fixture(spark, docs):
-    # fixture texts are unique; op returns empty, not an error
-    assert dedup.exact_duplicates(docs).count() == 0
-    # and detects injected dups
-    dup = docs.limit(3).union(docs.limit(3).withColumn("doc_id", F.col("doc_id") + 10_000))
-    groups = dedup.exact_duplicates(dup)
-    assert groups.count() == 3
-    assert groups.agg(F.max("dup_count")).first()[0] == 2
-
-
 def test_minhash_np_twin_identical(spark, docs):
     """The numpy mapInPandas variant (the bench path) must stay
     bit-identical to the HOF column version (the spec)."""
@@ -120,7 +110,9 @@ def test_simhash_row_local_and_grouped(spark, docs):
     dup = docs.limit(2).union(
         docs.limit(2).withColumn("doc_id", F.col("doc_id") + 500)
     )
-    assert dedup.simhash_duplicates(dup).count() == 2
+    # hamming-0 buckets: each copied doc shares its original's simhash
+    buckets = dedup.simhash(dup).groupBy("simhash").count()
+    assert buckets.filter(F.col("count") > 1).count() == 2
 
 
 def test_token_stats_and_quality(spark, docs, ddb):
@@ -199,87 +191,8 @@ def test_multimodal_plumbing(spark, docs):
     kinds = {r.kind for r in meta.select("kind").distinct().collect()}
     assert kinds == {"image/png", "image/jpeg", "audio/wav", "video/webm"}
     assert meta.filter(~F.col("payload_ok")).count() == 0
-    feats = multimodal.extract_features(media)
-    row = feats.first()
-    assert len(row.features) == 8
     frames = multimodal.sample_frames(media.limit(5))
     assert frames.count() >= 5
-    # JPEG entropy decode remains an honest stub
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"\xff\xd8\xff....")
-    # a PNG-prefixed payload that is not a real PNG is a decode error
-    with pytest.raises(ValueError):
-        multimodal.decode_image(b"\x89PNG....")
-
-
-def test_png_codec_roundtrip_all_filters():
-    """Real PNG decode: every scanline filter type (None/Sub/Up/Average/
-    Paeth) reconstructs bit-exactly, for gray, RGB, and RGBA."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    for ch in (1, 2, 3, 4):
-        px = rng.integers(0, 256, size=(5, 4, ch), dtype=np.uint8)
-        for ftype in range(5):
-            payload = multimodal.encode_png(px, filter_type=ftype)
-            out = multimodal.decode_png(payload)
-            assert out.shape == px.shape, (ch, ftype)
-            assert (out == px).all(), f"filter {ftype} ch {ch} mismatch"
-    # decode_image dispatches PNG to the real decoder
-    px = np.arange(24, dtype=np.uint8).reshape(2, 4, 3)
-    assert (multimodal.decode_image(multimodal.encode_png(px)) == px).all()
-
-
-def test_png_decoder_rejects_corruption():
-    import numpy as np
-
-    px = np.zeros((2, 2, 3), dtype=np.uint8)
-    payload = bytearray(multimodal.encode_png(px))
-    payload[40] ^= 0xFF  # flip a byte inside a chunk -> CRC must fail
-    with pytest.raises(ValueError):
-        multimodal.decode_png(bytes(payload))
-
-
-def test_wav_decoder():
-    import io
-    import struct
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(2)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(struct.pack("<4h", 100, -100, 2000, -2000))
-    got = multimodal.decode_wav(buf.getvalue())
-    assert (got["framerate"], got["channels"], got["sample_width"]) == (
-        8000, 2, 2,
-    )
-    assert got["n_frames"] == 2
-    assert struct.unpack("<4h", got["samples"]) == (100, -100, 2000, -2000)
-
-
-def test_image_stats_operator(spark):
-    """The decode kernel runs inside the Arrow-batched operator: real
-    PNGs yield dimensions + channel means, non-PNG payloads yield nulls
-    (and never kill the batch)."""
-    import numpy as np
-
-    solid = np.full((3, 5, 3), 200, dtype=np.uint8)
-    grad = np.zeros((4, 2, 1), dtype=np.uint8)
-    grad[:, :, 0] = np.arange(8).reshape(4, 2) * 30
-    rows = [
-        (1, bytearray(multimodal.encode_png(solid, filter_type=4))),
-        (2, bytearray(multimodal.encode_png(grad, filter_type=2))),
-        (3, bytearray(b"\xff\xd8\xffnot decodable")),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {r.media_id: r for r in multimodal.image_stats(media).collect()}
-    assert (got[1].width, got[1].height, got[1].channels) == (5, 3, 3)
-    assert got[1].chan_means == [200.0, 200.0, 200.0]
-    assert (got[2].width, got[2].height, got[2].channels) == (2, 4, 1)
-    assert got[2].chan_means == [105.0]  # mean of 0,30,...,210
-    assert got[3].width is None and got[3].chan_means is None
 
 
 def test_near_dup_clusters_crafted(spark):

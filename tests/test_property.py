@@ -1,9 +1,7 @@
 """Property-based fuzzing (hypothesis) of the pure RDF term kernels —
 the string paths where a single mis-escaped character silently corrupts
 a triple at any scale: the reference-faithful literal kernel
-(functions/strings.py), the N-Triples sink/source term codecs
-(operators/serialize.py::to_nt_term / sources/ntriples.py::
-parse_nt_line), and the W3C Turtle parser's collect mode
+(functions/strings.py) and the W3C Turtle parser's collect mode
 (operators/validate.py::parse_turtle).
 
 All pure Python — no SparkSession — so hundreds of examples run in
@@ -17,17 +15,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mhdb_tables2turtles_spark.functions.strings import language_literal
-from mhdb_tables2turtles_spark.operators.serialize import to_nt_term
 from mhdb_tables2turtles_spark.operators.validate import parse_turtle
-from mhdb_tables2turtles_spark.sources.ntriples import (
-    compact_iri,
-    parse_nt_line,
-)
 
-# printable unicode minus surrogates/control; backslash excluded where
-# noted — the reference's literal kernel passes backslashes through
-# raw (reference-faithful), which the strict Turtle validator then
-# rejects loudly at write time (see test_backslash_fails_loudly).
+# printable unicode minus surrogates/control; backslash excluded — the
+# reference's literal kernel passes backslashes through raw
+# (reference-faithful), which the strict Turtle validator then rejects
+# loudly at write time (see test_backslash_fails_loudly).
 _TEXT = st.text(
     alphabet=st.characters(
         blacklist_categories=("Cs", "Cc"), blacklist_characters="\\"
@@ -35,37 +28,6 @@ _TEXT = st.text(
     min_size=0,
     max_size=60,
 )
-
-# (namespace, prefix) pairs, longest namespace first — the
-# compact_iri/parse_nt_line convention
-_NS = [("http://purl.example/base#", ""), ("http://e.org/", "ex")]
-_NSDICT = {p: iri for iri, p in _NS}
-
-_LOCAL = st.text(
-    alphabet=st.sampled_from(
-        "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
-    ),
-    min_size=1,
-    max_size=20,
-)
-
-
-@settings(max_examples=200, deadline=None)
-@given(_TEXT)
-def test_literal_nt_normal_form_fixed_point(text):
-    """Any free text → reference literal kernel → N-Triples term →
-    parse: one pass reaches the engine's short normal form, and that
-    normal form is a FIXED POINT of the codec (serialize→parse is the
-    identity on it).  This is the invariant that makes the N-Triples
-    sink/source a lossless interchange path."""
-    stored = language_literal(text)  # '"""..."""@en' two-step escape
-    line1 = f"<http://e.org/s> <http://e.org/p> {to_nt_term(stored, _NSDICT, 'object')} ."
-    s, p, o1 = parse_nt_line(line1, _NS)
-    assert s == "ex:s" and p == "ex:p"
-    assert o1.endswith("@en")
-    line2 = f"<http://e.org/s> <http://e.org/p> {to_nt_term(o1, _NSDICT, 'object')} ."
-    _, _, o2 = parse_nt_line(line2, _NS)
-    assert o2 == o1  # normal form is a fixed point
 
 
 @settings(max_examples=200, deadline=None)
@@ -80,22 +42,10 @@ def test_turtle_parse_preserves_literal_surface(text):
     assert triples == [("ex:s", "ex:p", stored)]
 
 
-@settings(max_examples=200, deadline=None)
-@given(st.sampled_from(["", "ex"]), _LOCAL)
-def test_pname_expand_compact_roundtrip(prefix, local):
-    """Prefixed name → absolute IRI (sink) → longest-match compaction
-    (source) is the identity for every declared namespace."""
-    term = f"{prefix}:{local}"
-    nt = to_nt_term(term, _NSDICT, "object")
-    assert nt.startswith("<") and nt.endswith(">")
-    assert compact_iri(nt[1:-1], _NS) == term
-
-
 def test_backslash_fails_loudly():
     """A raw backslash survives the reference literal kernel (it only
     escapes quotes/newlines — reference fidelity), producing Turtle the
-    strict validator REJECTS rather than silently corrupts; the
-    N-Triples path, by contrast, escapes it and round-trips."""
+    strict validator REJECTS rather than silently corrupts."""
     from mhdb_tables2turtles_spark.operators.validate import (
         TurtleSyntaxError,
     )
@@ -104,9 +54,3 @@ def test_backslash_fails_loudly():
     doc = f"@prefix ex: <http://e.org/> .\nex:s ex:p {stored} .\n"
     with pytest.raises(TurtleSyntaxError):
         parse_turtle(doc)
-    nt = to_nt_term(stored, _NSDICT, "object")
-    assert "\\\\" in nt  # N-Triples codec escapes it
-    line = f"<http://e.org/s> <http://e.org/p> {nt} ."
-    _, _, o1 = parse_nt_line(line, _NS)
-    line2 = f"<http://e.org/s> <http://e.org/p> {to_nt_term(o1, _NSDICT, 'object')} ."
-    assert parse_nt_line(line2, _NS)[2] == o1

@@ -137,40 +137,6 @@ class TestTypedLiterals:
         assert typed_literal(30, "int") == '"30"^^xsd:int'
 
 
-class TestReification:
-    def test_blank_node_statements(self, spark):
-        """write_about_statement semantics (write_ttl.py:317-384): each
-        (s,p,o) becomes a blank-node rdf:Statement with back-references
-        plus caller annotations."""
-        from mhdb_tables2turtles_spark.operators.triples import (
-            reify_statements,
-        )
-
-        t = spark.createDataFrame(
-            [(":duck", ":continues", ":sitting")],
-            "subject string, predicate string, object string",
-        )
-        got = {
-            (r.subject, r.predicate, r.object)
-            for r in reify_statements(
-                t,
-                annotations=(
-                    (":source", '"""Duck Duck Goose"""@en'),
-                    (":statementType", ":role"),
-                ),
-            ).collect()
-        }
-        b = "_:duck_continues_sitting"
-        assert got == {
-            (b, "rdf:type", "rdf:Statement"),
-            (b, "rdf:subject", ":duck"),
-            (b, "rdf:predicate", ":continues"),
-            (b, "rdf:object", ":sitting"),
-            (b, ":source", '"""Duck Duck Goose"""@en'),
-            (b, ":statementType", ":role"),
-        }
-
-
 @requires(REFERENCE_MODULE)
 def test_doi_triples_reference_execution_parity(spark):
     """F12: run the REFERENCE's doi_iri (dead code — its add_if /

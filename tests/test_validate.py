@@ -287,237 +287,6 @@ def test_web_pipeline_raises_on_undeclarable_prefix(spark, tmp_path):
     assert resolve_used_prefixes(t, {"fabio": "http://x/"}) == []
 
 
-# ------------------------------------------------------------ N-Triples
-
-
-def test_to_nt_term_shapes():
-    from mhdb_tables2turtles_spark.operators.serialize import to_nt_term
-
-    pmap = {
-        "": "http://ex.org/base#",
-        "rdfs": "http://www.w3.org/2000/01/rdf-schema#",
-        "xsd": "https://www.w3.org/2009/XMLSchema/XMLSchema#",
-    }
-    assert to_nt_term(":Paper", pmap, "subject") == "<http://ex.org/base#Paper>"
-    assert (
-        to_nt_term("rdfs:label", pmap, "predicate")
-        == "<http://www.w3.org/2000/01/rdf-schema#label>"
-    )
-    assert to_nt_term("a", pmap, "predicate") == (
-        "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-    )
-    assert to_nt_term("<http://x/y>", pmap, "object") == "<http://x/y>"
-    # long literal with newline -> single-line escaped form
-    assert (
-        to_nt_term('"""li\nne"""@en', pmap, "object") == '"li\\nne"@en'
-    )
-    # short literal with stored Turtle escapes + datatype expansion
-    assert to_nt_term('"0.1"^^xsd:float', pmap, "object") == (
-        '"0.1"^^<https://www.w3.org/2009/XMLSchema/XMLSchema#float>'
-    )
-    assert (
-        to_nt_term('"say \\"hi\\""@en', pmap, "object") == '"say \\"hi\\""@en'
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown prefix"):
-        to_nt_term("nope:x", pmap, "subject")
-    with _pytest.raises(ValueError, match="unserializable"):
-        to_nt_term("bare-token", pmap, "subject")
-
-
-@requires(GOLDEN_TTL)
-def test_write_ntriples_golden_graph(spark, tmp_path):
-    """The reference's own emitted graph serializes to valid N-Triples:
-    every line matches the grammar, line count == triple count, and the
-    expansions of known triples appear verbatim."""
-    import glob
-    import re
-
-    from mhdb_tables2turtles_spark.operators.serialize import write_ntriples
-    from mhdb_tables2turtles_spark.sources.golden import (
-        header_prefixes,
-        load_golden_triples,
-    )
-
-    gold = sorted(load_golden_triples("/root/reference/output/chills.ttl"))
-    df = spark.createDataFrame(gold, ["subject", "predicate", "object"])
-    out = str(tmp_path / "nt")
-    write_ntriples(
-        df,
-        out,
-        base_uri="http://www.purl.org/mentalhealth/chills",
-        prefixes=header_prefixes("/root/reference/output/chills.ttl"),
-        shards=3,
-    )
-    lines = []
-    for p in sorted(glob.glob(out + "/part-*")):
-        with open(p) as f:
-            lines += [l.rstrip("\n") for l in f if l.strip()]
-    assert len(lines) == len(gold)
-    nt = re.compile(
-        r'^(<[^>]+>) (<[^>]+>) (<[^>]+>|"(?:[^"\\]|\\.)*"'
-        r"(?:@[A-Za-z-]+|\^\^<[^>]+>)?) \.$"
-    )
-    assert all(nt.match(l) for l in lines), [
-        l for l in lines if not nt.match(l)
-    ][:3]
-    base = "http://www.purl.org/mentalhealth/chills#"
-    assert (
-        f"<{base}Paper> "
-        "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type> "
-        "<http://www.w3.org/1999/02/22-rdf-syntax-ns#Class> ."
-    ) in lines
-
-
-def test_parse_nt_line_shapes():
-    from mhdb_tables2turtles_spark.sources.ntriples import (
-        compact_iri,
-        parse_nt_line,
-    )
-
-    ns = [
-        ("http://ex.org/base#", ""),
-        ("http://www.w3.org/2000/01/rdf-schema#", "rdfs"),
-        ("http://www.w3.org/2001/XMLSchema#", "xsd"),
-    ]
-    ns = sorted(ns, key=lambda t: len(t[0]), reverse=True)
-    # IRIs compact under the longest namespace; rdf:type -> 'a'
-    assert parse_nt_line(
-        "<http://ex.org/base#S> "
-        "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type> "
-        "<http://ex.org/base#Cls> .",
-        ns,
-    ) == (":S", "a", ":Cls")
-    # literal with language tag + escaped quote/newline -> stored short form
-    assert parse_nt_line(
-        '<http://ex.org/base#S> <http://ex.org/base#p> '
-        '"say \\"hi\\"\\nok"@en .',
-        ns,
-    ) == (":S", ":p", '"say \\"hi\\"\\nok"@en')
-    # typed literal: datatype IRI compacts too; \\u unescapes to the char
-    assert parse_nt_line(
-        '<http://ex.org/base#S> <http://ex.org/base#p> '
-        '"\\u00e9"^^<http://www.w3.org/2001/XMLSchema#string> .',
-        ns,
-    ) == (":S", ":p", '"\u00e9"^^xsd:string')
-    # blank nodes pass through; unmatched namespace stays absolute
-    assert parse_nt_line(
-        "_:b1 <http://other.org/p> _:b2 .", ns
-    ) == ("_:b1", "<http://other.org/p>", "_:b2")
-    # comments / blank lines skip; trailing comments allowed
-    assert parse_nt_line("  # a comment", ns) is None
-    assert parse_nt_line("", ns) is None
-    assert parse_nt_line(
-        "<http://a/b> <http://a/p> <http://a/c> . # trailing", ns
-    ) == ("<http://a/b>", "<http://a/p>", "<http://a/c>")
-    # malformed lines raise with the text
-    import pytest as _pytest
-
-    for bad in (
-        "<http://a/b> <http://a/p> .",           # missing object
-        "<http://a/b> <http://a/p> <http://a/c>", # missing dot
-        '<http://a/b> <http://a/p> "unterminated .',
-        "just words .",
-    ):
-        with _pytest.raises(ValueError, match="malformed"):
-            parse_nt_line(bad, ns)
-    # a local part with a slash does NOT compact (pname can't round-trip)
-    assert compact_iri("http://ex.org/base#x/y", ns) == "<http://ex.org/base#x/y>"
-
-
-def test_read_ntriples_roundtrip_and_skip(spark, tmp_path):
-    """write_ntriples -> read_ntriples is the identity on graphs in
-    canonical stored form, and on_error='skip' tolerates dirty lines."""
-    from mhdb_tables2turtles_spark.operators.serialize import write_ntriples
-    from mhdb_tables2turtles_spark.sources.ntriples import read_ntriples
-
-    rows = [
-        (":Doc1", "a", ":Class"),
-        (":Doc1", "rdfs:label", '"chills (en)"@en'),
-        (":Doc1", ":score", '"0.5"^^xsd:float'),
-        (":Doc2", ":cites", "<http://doi.org/10.1/xyz>"),
-        (":Doc2", "rdfs:comment", '"say \\"hi\\""@en'),
-    ]
-    df = spark.createDataFrame(rows, ["subject", "predicate", "object"])
-    out = str(tmp_path / "nt")
-    kw = dict(
-        base_uri="http://ex.org/kg",
-        prefixes=[
-            ("rdfs", "http://www.w3.org/2000/01/rdf-schema#"),
-            ("xsd", "http://www.w3.org/2001/XMLSchema#"),
-        ],
-    )
-    write_ntriples(df, out, **kw)
-    back = read_ntriples(spark, out, **kw)
-    assert sorted(map(tuple, back.collect())) == sorted(rows)
-    # idempotence: another write/read cycle is a fixed point
-    out2 = str(tmp_path / "nt2")
-    write_ntriples(back, out2, **kw)
-    again = read_ntriples(spark, out2, **kw)
-    assert sorted(map(tuple, again.collect())) == sorted(rows)
-    # dirty input: raise by default, skip on request
-    bad = tmp_path / "dirty.nt"
-    bad.write_text(
-        "<http://a/b> <http://a/p> <http://a/c> .\n"
-        "this line is garbage\n"
-        "<http://a/b> <http://a/p> \"ok\" .\n"
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="malformed"):
-        read_ntriples(spark, str(bad), **kw).collect()
-    kept = read_ntriples(spark, str(bad), on_error="skip", **kw).collect()
-    assert len(kept) == 2
-
-
-@requires(GOLDEN_TTL)
-def test_read_ntriples_golden_graph_roundtrip(spark, tmp_path):
-    """The reference's own emitted graph survives sink -> source: the
-    read-back triple set reaches a canonical fixed point whose size
-    equals the golden graph's, and IRI-only triples round-trip exactly."""
-    import glob
-
-    from mhdb_tables2turtles_spark.operators.serialize import write_ntriples
-    from mhdb_tables2turtles_spark.sources.golden import (
-        header_prefixes,
-        load_golden_triples,
-    )
-    from mhdb_tables2turtles_spark.sources.ntriples import read_ntriples
-
-    gold = sorted(load_golden_triples("/root/reference/output/chills.ttl"))
-    df = spark.createDataFrame(gold, ["subject", "predicate", "object"])
-    kw = dict(
-        base_uri="http://www.purl.org/mentalhealth/chills",
-        prefixes=header_prefixes("/root/reference/output/chills.ttl"),
-    )
-    out = str(tmp_path / "nt")
-    write_ntriples(df, out, **kw)
-    back = sorted(map(tuple, read_ntriples(spark, out, **kw).collect()))
-    assert len(back) == len(gold)
-    # canonical fixed point: a second cycle reproduces the read-back set
-    out2 = str(tmp_path / "nt2")
-    write_ntriples(
-        spark.createDataFrame(back, ["subject", "predicate", "object"]),
-        out2,
-        **kw,
-    )
-    again = sorted(
-        map(tuple, read_ntriples(spark, out2, **kw).collect())
-    )
-    assert again == back
-    # triples whose terms are all IRI-shaped round-trip verbatim
-    iri_gold = [
-        t for t in gold
-        if not any(x.startswith('"') for x in t)
-    ]
-    iri_back = [
-        t for t in back
-        if not any(x.startswith('"') for x in t)
-    ]
-    assert iri_back == sorted(iri_gold)
-
-
 def test_parse_turtle_surface_terms():
     from mhdb_tables2turtles_spark.operators.validate import (
         TurtleSyntaxError,

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from mhdb_tables2turtles_spark.web import vocab as vocab_mod
 from mhdb_tables2turtles_spark.web.canonicalize import connected_components
-from mhdb_tables2turtles_spark.web.extract import extract_text, extract_text_col
+from mhdb_tables2turtles_spark.web.extract import extract_text
 from mhdb_tables2turtles_spark.web.mentions import extract_pages, scan_mentions
 from mhdb_tables2turtles_spark.web.pipeline import KGPipeline, build_corpus
 from mhdb_tables2turtles_spark.web.trie import AhoCorasick
@@ -90,7 +90,7 @@ def test_matcher_for_evicts_least_recently_used():
 
 @requires(GOLDEN_TTL)
 def test_vocabulary_from_golden():
-    vf = vocab_mod.vocabulary_frame()
+    vf = vocab_mod.vocabulary_frame(GOLDEN_TTL)
     assert len(vf) > 300
     assert set(vf.columns) == {"surface", "entity_iri", "entity_type", "is_alias"}
     assert (vf["surface"] == vf["surface"].str.lower()).all()
@@ -117,12 +117,7 @@ def test_pages_deterministic_and_invariant(spark, corpus, onto_ttl):
     b = {r.url: (r.text, bytes(r.html)) for r in again.collect()}
     assert a == b  # parallelism-independent generation
     # per-row invariant: stage-1 extraction reproduces the committed text
-    mismatch = (
-        corpus.withColumn("t2", extract_text_col(F.col("html")))
-        .filter(F.col("t2") != F.col("text"))
-        .count()
-    )
-    assert mismatch == 0
+    assert all(text == extract_text(html) for text, html in a.values())
 
 
 def test_scan_mentions_matches_python(spark, corpus):
