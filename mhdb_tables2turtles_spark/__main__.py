@@ -7,11 +7,13 @@ spark-submit --py-files on a multi-executor cluster``) lands here:
     # script adds no master of its own
     zip -r pkg.zip mhdb_tables2turtles_spark
     spark-submit --py-files pkg.zip scripts/run_kg.py \
-        --input s3://bucket/pages --workdir s3://bucket/kg --ttl
+        --input s3://bucket/pages --workdir s3://bucket/kg \
+        --vocab-ttl ontology.ttl --ttl
 
     # locally (tests / smoke)
     python -m mhdb_tables2turtles_spark \
-        --synthesize 1000 --workdir /tmp/kg --count
+        --synthesize 1000 --workdir kg \
+        --vocab-ttl tests/data/ontology.ttl --count
 
 Input is the north-rule pages table ``(url string, warc_ts timestamp,
 html binary, text string, lang string)`` — either an existing
@@ -33,8 +35,8 @@ from pyspark.sql import SparkSession
 def _parse_args(argv: list[str] | None) -> argparse.Namespace:
     p = argparse.ArgumentParser(
         prog="mhdb_tables2turtles_spark",
-        description="Staged web-scale KG construction (extract -> mentions "
-        "-> linking -> triples -> canonicalize).",
+        description="Staged web-scale KG construction (extract -> linking "
+        "-> triples -> canonicalize).",
     )
     src = p.add_mutually_exclusive_group(required=True)
     src.add_argument(
@@ -70,8 +72,8 @@ def _parse_args(argv: list[str] | None) -> argparse.Namespace:
     p.add_argument("--workdir", help="stage-output root (resumable; web mode)")
     p.add_argument(
         "--vocab-ttl",
-        default="/root/reference/output/chills.ttl",
-        help="ontology Turtle file providing the vocabulary + profiles",
+        help="ontology Turtle file providing the vocabulary + profiles "
+        "(web mode)",
     )
     p.add_argument("--seed", type=int, default=42, help="synthetic-corpus seed")
     p.add_argument(
@@ -129,6 +131,8 @@ def main(argv: list[str] | None = None) -> int:
     args = _parse_args(argv)
     if not args.workbooks and not args.workdir:
         raise SystemExit("--workdir is required outside --workbooks mode")
+    if not args.workbooks and not args.vocab_ttl:
+        raise SystemExit("--vocab-ttl is required outside --workbooks mode")
     spark = build_session(args)
 
     if args.workbooks:
@@ -155,16 +159,14 @@ def main(argv: list[str] | None = None) -> int:
     pipe = KGPipeline(spark, args.workdir, ttl_path=args.vocab_ttl)
     if args.update_batch:
         out = pipe.update(pages, args.update_batch)
-        stage_names = ("triples_epochs", f"canonical_{args.update_batch}")
+        stage_names = ("triples_epochs", f"components_{args.update_batch}")
     else:
         out = pipe.run(
             pages,
             include_ontology=args.include_ontology,
             write_turtle=args.ttl,
         )
-        stage_names = (
-            "extract", "mentions", "linked", "triples", "canonical",
-        )
+        stage_names = ("extract", "linked", "triples", "canonical")
     summary = {
         "workdir": args.workdir,
         "epochs": pipe._epochs(),

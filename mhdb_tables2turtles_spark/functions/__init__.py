@@ -1,9 +1,6 @@
 from mhdb_tables2turtles_spark.functions.strings import (  # noqa: F401
-    anyuri_literal,
     format_iri,
-    gyear_literal,
     language_literal,
     normalize_text,
     to_label,
-    typed_literal,
 )

@@ -4,8 +4,8 @@ These pure-Python functions reproduce, bit-for-bit, the text semantics that
 decide IRI identity in the reference engine (semantics studied from
 ``/root/reference/mhdb/write_ttl.py`` -- ``return_string`` :61-101,
 ``language_string`` :24-58, ``convert_string_to_label`` :140-216,
-``check_iri`` :219-260 -- and the typed-literal format sites in
-``/root/reference/mhdb/ingest.py`` e.g. :3428-3456).  They are fresh
+``check_iri`` :219-260; typed literals are formatted in Spark by
+``plans.sheetspec._literal_expr``).  They are fresh
 implementations verified against the reference's observed outputs
 (``/root/reference/output/chills.ttl``).
 
@@ -25,9 +25,6 @@ __all__ = [
     "language_literal",
     "to_label",
     "format_iri",
-    "typed_literal",
-    "anyuri_literal",
-    "gyear_literal",
     "LABEL_STYLES",
 ]
 
@@ -138,16 +135,3 @@ def format_iri(value, style: str = "delimited") -> str:
         return s
     return ":" + to_label(s, style)
 
-
-def typed_literal(value, xsd_type: str) -> str:
-    """``"value"^^xsd:type`` literal (reference format sites: ingest.py:3431,
-    :3441, :3446, :3543, :2050-2056)."""
-    return '"{}"^^xsd:{}'.format(value, xsd_type)
-
-
-def anyuri_literal(url) -> str:
-    return typed_literal(str(url).strip(), "anyURI")
-
-
-def gyear_literal(year) -> str:
-    return typed_literal(int(year), "gyear")

@@ -20,7 +20,6 @@ from pyspark.sql.functions import pandas_udf
 from mhdb_tables2turtles_spark.functions.strings import (
     format_iri,
     language_literal,
-    to_label,
 )
 
 
@@ -29,15 +28,6 @@ def _iri_udf(style: str):
     @pandas_udf("string")
     def _f(s: pd.Series) -> pd.Series:
         return s.map(lambda v: None if v is None else format_iri(v, style))
-
-    return _f
-
-
-@lru_cache(maxsize=None)
-def _label_udf(style: str):
-    @pandas_udf("string")
-    def _f(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: None if v is None else to_label(v, style))
 
     return _f
 
@@ -79,11 +69,6 @@ def iri_styled(col: Column, style_col: Column) -> Column:
 
         _IRI_STYLED = _f
     return _IRI_STYLED(col, style_col)
-
-
-def label(col: Column, style: str = "delimited") -> Column:
-    """``to_label`` over a column (vectorized)."""
-    return _label_udf(style)(col)
 
 
 def lang_literal(col: Column, lang: str = "en") -> Column:

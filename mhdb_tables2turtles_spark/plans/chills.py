@@ -8,39 +8,21 @@ serializer groups predicates in the same first-emission order.
 
 from __future__ import annotations
 
+from mhdb_tables2turtles_spark.plans.common import (
+    classes_spec,
+    properties_spec,
+)
 from mhdb_tables2turtles_spark.plans.sheetspec import (
     ForeignKey,
-    IriRef,
     Literal,
     SheetSpec,
 )
 
 # fmt: off
 CHILLS_SPECS = (
-    # ingest.py:3084-3114
-    SheetSpec(
-        table="Classes", subject_column="ClassName", subject_style="delimited",
-        rdf_type="rdf:Class", label_column="label",
-        emitters=(
-            Literal("definition", "rdfs:comment"),
-            IriRef("sameAs", "owl:sameAs", raw=True),
-            IriRef("equivalentClasses", "rdfs:equivalentClass", split=True, raw=True),
-            IriRef("subClassOf", "rdfs:subClassOf", raw=False),
-        ),
-    ),
-    # ingest.py:3116-3148
-    SheetSpec(
-        table="Properties", subject_column="property", subject_style="delimited",
-        rdf_type="rdf:Property", label_column="label",
-        emitters=(
-            IriRef("propertyDomain", "rdfs:domain", raw=False),
-            IriRef("propertyRange", "rdfs:range", raw=False),
-            Literal("definition", "rdfs:comment"),
-            IriRef("sameAs", "owl:sameAs", raw=True),
-            IriRef("equivalentProperty", "rdfs:equivalentProperty", raw=True),
-            IriRef("subPropertyOf", "rdfs:subPropertyOf", raw=False),
-        ),
-    ),
+    # ingest.py:3084-3148
+    classes_spec(),
+    properties_spec(),
     # papers fact sheet, ingest.py:3150-3465
     SheetSpec(
         table="Index", subject_column="Reseach study (research paper tilte)",

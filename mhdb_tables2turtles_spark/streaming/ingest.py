@@ -44,8 +44,9 @@ def stream_kg_updates(
     becomes one incremental epoch of the batch pipeline —
     ``foreachBatch`` hands the (plain, non-streaming) batch DataFrame to
     :meth:`~mhdb_tables2turtles_spark.web.pipeline.KGPipeline.update`,
-    which appends the batch's triples with partition lineage and
-    re-canonicalizes incrementally.
+    which writes the batch's triples once, into their partition of the
+    epoch triple table, and commits the merged component labels; the
+    epoch's canonical graph is read back through ``canonical_asof``.
 
     Exactly-once across BOTH layers: Structured Streaming's checkpoint
     makes each micro-batch id delivered at-least-once with a stable id,

@@ -35,15 +35,15 @@ def _scan(texts, patterns: tuple[str, ...]) -> list:
 
 
 def extract_pages(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:
-    """pages(url, warc_ts, lang, html) -> (url, warc_ts, lang, text,
-    subject, surfaces): ``extract_text(html)`` byte for byte, the page
-    IRI ``format_iri(url)``, and one ``surfaces`` entry per row
+    """pages(url, html) -> (url, text, subject, surfaces):
+    ``extract_text(html)`` byte for byte, the page IRI
+    ``format_iri(url)``, and one ``surfaces`` entry per row
     :func:`scan_mentions` would emit for the page (none for null html).
-    ``surfaces`` must be lowercase."""
+    Only what linking and :func:`page_entity_triples` read crosses the
+    stage boundary.  ``surfaces`` must be lowercase."""
     bc = pages.sparkSession.sparkContext.broadcast(tuple(surfaces))
-    keep = ["url", "warc_ts", "lang"]
     schema = (
-        T.StructType([pages.schema[c] for c in keep])
+        T.StructType([pages.schema["url"]])
         .add("text", "string")
         .add("subject", "string")
         .add("surfaces", T.ArrayType(T.StringType()))
@@ -52,13 +52,13 @@ def extract_pages(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:
     def kernel(batches):
         for pdf in batches:
             text = pdf["html"].map(extract_text)
-            yield pdf[keep].assign(
+            yield pdf[["url"]].assign(
                 text=text,
                 subject=pdf["url"].map(format_iri, na_action="ignore"),
                 surfaces=_scan(text, bc.value),
             )
 
-    return pages.select(*keep, "html").mapInPandas(kernel, schema=schema)
+    return pages.select("url", "html").mapInPandas(kernel, schema=schema)
 
 
 def scan_mentions(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:

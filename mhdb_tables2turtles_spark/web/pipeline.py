@@ -1,23 +1,30 @@
 """End-to-end web-scale KG construction (north rule).
 
-    pages (url, warc_ts, lang, html)
+    pages (url, html)
       -> stage extract   : the one Python pass per page: html -> text
                            (byte-identical per url), page IRI, surfaces
-      -> stage mentions  : explode of the surfaces (JVM)
-      -> stage linked    : alias candidates + TF-IDF scoring
+      -> stage linked    : explode of the surfaces (JVM), alias
+                           candidates + TF-IDF scoring
       -> stage triples   : per-page entity set ⋈ page IRI, inline (JVM)
       -> stage canonical : connected-components rewrite; with no
                            owl:sameAs edge, an alias of triples (no copy)
       -> Turtle shards / triple table
 
 Every stage commits through :class:`materialize.StagedPipeline` (resume +
-lineage + counters).  The ontology side (vocabulary, entity profiles,
-equivalence edges) comes from the ontology Turtle file ``ttl_path``, so
-the triple vocabulary matches the ontology's IRIs exactly — the P/R
-metric is then a set comparison of `(s, p, o)`.
+lineage + counters), and only rows a resume or a reader cannot cheaply
+recompute are committed, each once: the mentions explode runs inside the
+linked write job, and :meth:`KGPipeline.update` commits an epoch's
+triples and component labels but no graph copy.  The ontology side
+(vocabulary, entity profiles, equivalence edges) comes from the ontology
+Turtle file ``ttl_path``, so the triple vocabulary matches the
+ontology's IRIs exactly — the P/R metric is then a set comparison of
+`(s, p, o)`.
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -123,16 +130,15 @@ class KGPipeline:
         # row count (== page/url count, urls are unique per page) is free:
         # it feeds the idf corpus size (no extra full scan in token_idf)
         n_pages = staged.manifest("extract")["rows"]
-        mentions = staged.stage(
-            "mentions", lambda: _mentions(extracted), upstream=("extract",)
-        )
+        # the mentions explode is free to redo, so it runs inside the
+        # linked write job instead of committing a copy of `surfaces`
         linked = staged.stage(
             "linked",
             lambda: link_mentions(
-                mentions, self.vocab, extracted, self.profiles,
+                _mentions(extracted), self.vocab, extracted, self.profiles,
                 n_pages=n_pages,
             ),
-            upstream=("mentions", "extract"),
+            upstream=("extract",),
         )
         def _triples() -> DataFrame:
             t = page_entity_triples(linked, extracted)
@@ -174,8 +180,6 @@ class KGPipeline:
             canonical = staged.alias("canonical", "triples")
 
         if write_turtle:
-            import os
-
             from mhdb_tables2turtles_spark.operators.serialize import (
                 render_header,
                 resolve_used_prefixes,
@@ -221,7 +225,6 @@ class KGPipeline:
 
         return {
             "extract": extracted,
-            "mentions": mentions,
             "linked": linked,
             "triples": triples,
             "canonical": canonical,
@@ -241,22 +244,42 @@ class KGPipeline:
     # --------------------------------------------- incremental re-crawl
 
     def canonical_asof(self, batch_id: str | None = None) -> DataFrame:
-        """Time travel over the committed canonical graph: the snapshot
-        as of ``batch_id`` (must be an applied epoch), or the base
-        crawl's snapshot with ``None``.  Every epoch's canonical stage
-        is retained (Iceberg-snapshot semantics on plain parquet), so
-        this is a metadata lookup + one committed-parquet read — no
-        recompute."""
+        """Time travel over the committed graph: the canonical graph as
+        of ``batch_id`` (must be an applied epoch), or the base crawl's
+        committed ``canonical`` stage with ``None``.
+
+        An epoch's graph is not stored: it is the base triples plus the
+        ``triples_epochs`` partitions of every epoch applied up to
+        ``batch_id``, rewritten through ``components_<batch_id>``.  All
+        three inputs are committed tables that are never rewritten
+        (re-applying a batch is a no-op), so a snapshot reads the same
+        however many epochs follow it."""
+        from pyspark.sql.types import StructType
+
+        staged = self.staged
         if batch_id is None:
-            return self.staged.read("canonical")
-        if batch_id not in self._epochs():
+            return staged.read("canonical")
+        epochs = self._epochs()
+        if batch_id not in epochs:
             raise KeyError(f"no committed epoch {batch_id!r}")
-        return self.staged.read(f"canonical_{batch_id}")
+        triples = staged.read("triples")
+        if staged.is_committed("triples_epochs"):
+            # the committed schema keeps crawl_batch a string (partition
+            # discovery would type numeric-looking batch ids as ints)
+            schema = StructType.fromJson(
+                staged.manifest("triples_epochs")["schema"]
+            )
+            applied = epochs[: epochs.index(batch_id) + 1]
+            triples = triples.unionByName(
+                self.spark.read.schema(schema)
+                .parquet(os.path.join(staged.workdir, "triples_epochs"))
+                .filter(F.col("crawl_batch").isin(*applied))
+                .drop("crawl_batch")
+            )
+        comps = staged.read(f"components_{batch_id}")
+        return rewrite_triples(triples, canonical_mapping(comps))
 
     def _epochs(self) -> list[str]:
-        import json
-        import os
-
         p = os.path.join(self.staged.workdir, "_EPOCHS.json")
         if not os.path.exists(p):
             return []
@@ -264,9 +287,6 @@ class KGPipeline:
             return json.load(f)
 
     def _commit_epoch(self, batch_id: str) -> None:
-        import json
-        import os
-
         p = os.path.join(self.staged.workdir, "_EPOCHS.json")
         epochs = self._epochs()
         if batch_id not in epochs:
@@ -306,75 +326,63 @@ class KGPipeline:
         ``page_entity_triples``) over ONE in-memory checkpoint of the
         extracted pages, which all three consumers read.
 
-        Resume protocol: the epoch commits ONE stage
-        (``<workdir>/epoch_<batch_id>/triples``) — the extract → scan →
-        link → triples chain of a re-crawl batch runs as a single
-        uncommitted dataflow, because a batch is small by definition and
-        re-running it after a kill is cheaper than paying four
-        write + lineage-scan + read-back commit round-trips on EVERY
-        epoch (the round-4 bench measured the per-epoch floor as almost
-        entirely commit fixed cost).  The epoch's triples then append to
-        the shared ``triples_epochs`` table via partition-level lineage
-        (:meth:`~materialize.StagedPipeline.incremental_stage`, one
-        partition per crawl batch); the merged component labels and the
-        rewritten canonical graph commit as per-epoch stages; the epoch
+        Resume protocol: an epoch commits two things.  Its triples are
+        written once, straight into their ``crawl_batch`` partition of
+        the shared ``triples_epochs`` table
+        (:meth:`~materialize.StagedPipeline.incremental_stage`, whose
+        ``done_partitions`` lineage makes re-applying a batch a no-op);
+        the batch chain runs uncommitted inside that write, because a
+        batch is small by definition and re-running it after a kill is
+        cheaper than a commit round-trip per step.  The merged component
+        labels then commit as ``components_<batch_id>``, and the epoch
         enters ``_EPOCHS.json`` (atomic replace) LAST.  A kill anywhere
-        re-runs only uncommitted steps (at epoch granularity for the
-        batch chain, stage granularity after it); a resumed epoch whose
-        triples are committed runs no Spark job before
-        ``incremental_stage``.
+        re-runs only uncommitted steps.  The epoch's canonical graph is
+        not committed: :meth:`canonical_asof` derives it from those
+        committed inputs.
 
         Returns ``triples`` (this epoch's new triples), ``components``
         (the merged labels), ``canonical`` (the full rewritten graph as
         of this epoch) and ``counters`` (committed row counts per stage).
         """
-        import os
-
         if not self.staged.is_committed("triples"):
             raise RuntimeError("run() the base crawl before update()")
         staged = self.staged
 
-        # epoch stage graph — isolated workdir, single commit
-        ep = StagedPipeline(
-            self.spark, os.path.join(staged.workdir, f"epoch_{batch_id}")
-        )
-
-        def _new_triples() -> DataFrame:
-            extracted = extract_pages(new_pages, self.surfaces)
+        def _batch_triples(batch: DataFrame) -> DataFrame:
+            extracted = extract_pages(batch, self.surfaces)
             extracted = extracted.localCheckpoint(eager=True)
-            n_new = extracted.count()
             linked = link_mentions(
                 _mentions(extracted), self.vocab, extracted, self.profiles,
-                n_pages=n_new,
+                n_pages=extracted.count(),
             )
             t = page_entity_triples(linked, extracted)
             if extra_equiv_edges is not None:
                 t = t.unionByName(_equiv_triples(extra_equiv_edges))
-            return t
+            return t.withColumn("crawl_batch", F.lit(batch_id))
 
-        new_triples = ep.stage("triples", _new_triples)
-
-        # append to the shared epoch-partitioned triple table (lineage =
-        # done_partitions; re-running a committed batch is a no-op)
         epochs_table = staged.incremental_stage(
             "triples_epochs",
-            new_triples.withColumn("crawl_batch", F.lit(batch_id)),
+            new_pages.withColumn("crawl_batch", F.lit(batch_id)),
             "crawl_batch",
-            lambda df: df,
+            _batch_triples,
         )
+        new_triples = epochs_table.filter(
+            F.col("crawl_batch") == batch_id
+        ).drop("crawl_batch")
 
         # previous component labels: the last committed epoch's, or the
         # base labels (computed from the base graph's own equivalence
         # edges on first update — a committed stage, so once ever)
         prior = self._epochs()
-        base_triples = staged.read("triples")
         prev_name = (
             f"components_{prior[-1]}" if prior else "components_base"
         )
         if not prior:
             staged.stage(
                 "components_base",
-                lambda: connected_components(equivalence_edges(base_triples)),
+                lambda: connected_components(
+                    equivalence_edges(staged.read("triples"))
+                ),
                 upstream=("triples",),
             )
         prev = staged.read(prev_name)
@@ -385,24 +393,13 @@ class KGPipeline:
             return merge_components(prev, equivalence_edges(new_triples))
 
         comps = staged.stage(
-            f"components_{batch_id}", _merged, upstream=(prev_name,)
-        )
-
-        def _canonical():
-            all_triples = base_triples.unionByName(
-                epochs_table.drop("crawl_batch")
-            )
-            return rewrite_triples(all_triples, canonical_mapping(comps))
-
-        canonical = staged.stage(
-            f"canonical_{batch_id}",
-            _canonical,
-            upstream=(f"components_{batch_id}", "triples_epochs"),
+            f"components_{batch_id}", _merged,
+            upstream=(prev_name, "triples_epochs"),
         )
         self._commit_epoch(batch_id)
         return {
             "triples": new_triples,
             "components": comps,
-            "canonical": canonical,
-            "counters": {**staged.counters(), **ep.counters()},
+            "canonical": self.canonical_asof(batch_id),
+            "counters": staged.counters(),
         }

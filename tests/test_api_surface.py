@@ -75,15 +75,18 @@ def _exported() -> dict[str, str]:
 
 
 def _referenced() -> set[str]:
+    """Names used by non-test code.  An import inside a package
+    ``__init__.py`` is a re-export, not a caller, so it does not count."""
     names: set[str] = set()
     for root in NON_TEST_ROOTS:
         for path in _py_files(root):
+            reexports = os.path.basename(path) == "__init__.py"
             for node in ast.walk(_parse(path)):
                 if isinstance(node, ast.Name):
                     names.add(node.id)
                 elif isinstance(node, ast.Attribute):
                     names.add(node.attr)
-                elif isinstance(node, ast.alias):
+                elif isinstance(node, ast.alias) and not reexports:
                     names.add(node.name.rsplit(".", 1)[-1])
     return names
 

@@ -33,7 +33,6 @@ def test_cli_synthesize_and_resume(spark, tmp_path, capsys, onto_ttl):
     assert rc == 0
     assert set(summary["stages"]) == {
         "extract",
-        "mentions",
         "linked",
         "triples",
         "canonical",
@@ -62,6 +61,21 @@ def test_cli_reads_parquet_input(spark, tmp_path, capsys, onto_ttl):
     assert rc == 0
     assert summary["stages"]["extract"]["rows"] == 40
     assert "canonical_triples" not in summary  # no --count: no extra job
+
+
+def test_cli_web_mode_requires_vocab_ttl(tmp_path, monkeypatch):
+    # no default ontology: web mode without --vocab-ttl is a usage error
+    # raised before any Spark session is built
+    import pytest
+
+    import mhdb_tables2turtles_spark.__main__ as cli
+
+    def no_session(args):
+        raise AssertionError("a Spark session was requested")
+
+    monkeypatch.setattr(cli, "build_session", no_session)
+    with pytest.raises(SystemExit, match="--vocab-ttl"):
+        cli.main(["--synthesize", "5", "--workdir", str(tmp_path / "kg")])
 
 
 def test_cli_no_master_flag_defers_to_submitter(spark):
@@ -122,6 +136,6 @@ def test_cli_update_batch_epoch(spark, tmp_path, capsys, onto_ttl):
     )
     assert rc == 0
     assert upd["epochs"] == ["b1"]
-    assert "canonical_b1" in upd["stages"]
+    assert "components_b1" in upd["stages"]
     assert upd["stages"]["triples_epochs"]["rows"] > 0
     assert upd["canonical_triples"] > 0

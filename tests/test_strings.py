@@ -9,13 +9,10 @@ import pytest
 from conftest import REFERENCE_MODULE, requires
 
 from mhdb_tables2turtles_spark.functions.strings import (
-    anyuri_literal,
     format_iri,
-    gyear_literal,
     language_literal,
     normalize_text,
     to_label,
-    typed_literal,
 )
 
 
@@ -124,17 +121,6 @@ class TestFormatIri:
 
     def test_strips(self):
         assert format_iri("  Paper  ") == ":Paper"
-
-
-class TestTypedLiterals:
-    def test_anyuri(self):
-        assert anyuri_literal(" http://x.org ") == '"http://x.org"^^xsd:anyURI'
-
-    def test_gyear(self):
-        assert gyear_literal(2017.0) == '"2017"^^xsd:gyear'
-
-    def test_int(self):
-        assert typed_literal(30, "int") == '"30"^^xsd:int'
 
 
 @requires(REFERENCE_MODULE)

@@ -219,8 +219,10 @@ def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path, onto_ttl):
         triples.filter(F.col("predicate") == "a").count() == n_pages_linked
     )
     counters = out["counters"]
-    assert set(counters) == {"extract", "mentions", "linked", "triples", "canonical"}
+    assert set(counters) == {"extract", "linked", "triples", "canonical"}
     assert counters["extract"] == 60
+    # extract commits only what linking and the triple pass read
+    assert out["extract"].columns == ["url", "text", "subject", "surfaces"]
 
     # resume: a fresh pipeline over the same workdir recomputes nothing
     pipe2 = KGPipeline(spark, wd, ttl_path=onto_ttl)
@@ -229,8 +231,8 @@ def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path, onto_ttl):
     assert out2["canonical"].count() == n
 
     # lineage manifest shape
-    man = pipe2.staged.manifest("mentions")
-    assert man["rows"] == counters["mentions"]
+    man = pipe2.staged.manifest("linked")
+    assert man["rows"] == counters["linked"]
     assert man["n_partitions"] >= 1
     assert sum(man["partitions"].values()) == man["rows"]
 
@@ -248,26 +250,18 @@ def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path, onto_ttl):
 def test_kill_mid_pipeline_resumes_from_last_commit(
     spark, corpus, tmp_path, onto_ttl
 ):
-    """SURVEY §5.3-5: die after stage-2 commit, restart, identical final
-    result with no recomputation of committed stages."""
+    """SURVEY §5.3-5: die after the extract commit, restart, identical
+    final result with no recomputation of committed stages."""
     wd = str(tmp_path / "kgkill")
-    # simulate a job killed after the first two stage commits
-    from pyspark.sql import functions as F
-
+    # simulate a job killed after the first stage commit
     dead = KGPipeline(spark, wd, ttl_path=onto_ttl)
-    extracted = dead.staged.stage(
-        "extract", lambda: extract_pages(corpus, dead.surfaces)
-    )
     dead.staged.stage(
-        "mentions",
-        lambda: extracted.select(
-            "url", F.explode("surfaces").alias("surface")
-        ),
+        "extract", lambda: extract_pages(corpus, dead.surfaces)
     )
     # process "dies" here; a fresh run picks up after the last commit
     pipe = KGPipeline(spark, wd, ttl_path=onto_ttl)
     out = pipe.run(corpus)
-    assert pipe.staged.log[:2] == ["resume:extract", "resume:mentions"]
+    assert pipe.staged.log[:1] == ["resume:extract"]
     assert [s for s in pipe.staged.log if s.startswith("compute:")] == [
         "compute:linked",
         "compute:triples",
@@ -317,6 +311,10 @@ def test_no_merge_canonical_is_an_alias(spark, corpus, tmp_path, onto_ttl):
     wd = str(tmp_path / "kg_alias")
     pipe = KGPipeline(spark, wd, ttl_path=onto_ttl)
     out = pipe.run(corpus)
+    # each committed table once: no mentions copy of extract's surfaces
+    assert sorted(os.listdir(wd)) == [
+        "canonical", "extract", "linked", "triples",
+    ]
     assert os.listdir(os.path.join(wd, "canonical")) == [MANIFEST]
     # the decision came from the triples write job's own count, and the
     # alias manifest carries every key a computed stage manifest has
@@ -369,6 +367,9 @@ def test_pipeline_with_ontology_and_turtle(spark, corpus, tmp_path, onto_ttl):
     golden = load_golden_triples(onto_ttl)
     assert golden <= ours  # recall 1.0 vs the ontology triples
     assert os.path.exists(os.path.join(wd, "ttl", "_SUCCESS"))
+    assert sorted(os.listdir(wd)) == [
+        "canonical", "extract", "linked", "triples", "ttl",
+    ]
     # shard contents parse back as subject blocks
     import glob
 
@@ -678,6 +679,29 @@ def test_update_resumes_and_is_idempotent(spark, tmp_path, onto_ttl):
     assert not any(s.startswith("compute:") for s in logs), logs
     assert again["canonical"].count() == n1
     assert pipe2._epochs() == ["b1"]
+
+
+def test_update_commits_labels_not_graph_copies(spark, tmp_path, onto_ttl):
+    """An epoch writes its triples once, into its triples_epochs
+    partition, and commits its component labels; it leaves no per-epoch
+    stage graph and no canonical snapshot behind."""
+    import os
+
+    corpus = build_corpus(
+        spark, n_pages=12, seed=9, partitions=1, ttl_path=onto_ttl
+    )
+    wd = str(tmp_path / "kg_layout")
+    pipe = KGPipeline(spark, wd, ttl_path=onto_ttl)
+    pipe.run(corpus.limit(8))
+    out = pipe.update(corpus.subtract(corpus.limit(8)), "e1")
+    assert sorted(os.listdir(wd)) == [
+        "_EPOCHS.json", "canonical", "components_base", "components_e1",
+        "extract", "linked", "triples", "triples_epochs",
+    ]
+    assert pipe.staged.manifest("triples_epochs")["done_partitions"] == ["e1"]
+    assert out["triples"].count() == pipe.staged.manifest(
+        "triples_epochs"
+    )["rows"]
 
 
 def test_update_requires_base_run(spark, tmp_path, onto_ttl):
