@@ -20,16 +20,19 @@ predicate.  The bytes depend only on the deduped triples and their
 order keys, never on the plan that produced them.  Equivalence with the
 reference is judged as set-of-triples P/R.
 
-Scale path: the body is computed distributed (groupBy subject ->
-sort_array(collect_list) -> concat); small outputs collect via
-``toLocalIterator``, large outputs write ordered part-file shards.
+Both sinks render blocks in Spark (groupBy subject ->
+array_sort(collect_list) -> concat).  A single document
+(:func:`render_document`) is one collect of those blocks, which also
+carry the term prefixes its header declares; the web path
+(:func:`write_body_shards`) writes them as part-file shards, each
+sorted by the same block order.
 """
 
 from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 FIXED_PREFIXES = (
@@ -86,14 +89,29 @@ def owl_profile(triples: DataFrame) -> DataFrame:
     )
 
 
+_TERMS = ("subject", "predicate", "object")
 # total block order: first-emission key, then the block text (its
 # leading subject is unique) for subjects that share a key
 _BLOCK_KEY = ("block_order", "block")
 
 
+def _term_prefix(term: Column) -> Column:
+    """The prefix of a prefixed-name term, else null.  A term is one when
+    it is no literal (``"``), IRIREF (``<``) or blank node (``_:``) and
+    contains ``:`` but not ``://``; the base prefix ``:`` is not
+    collected (reference: create_mhdb:244-259)."""
+    prefix = F.substring_index(term, ":", 1)
+    named = ~term.startswith('"') & ~term.startswith("<")
+    named &= ~term.startswith("_:") & term.contains(":")
+    named &= ~term.contains("://") & (prefix != "")
+    return F.when(named, prefix)
+
+
 def subject_blocks(triples: DataFrame) -> DataFrame:
     """Triples -> one rendered Turtle block per subject with a stable
-    ``block_order`` struct for global ordering."""
+    ``block_order`` struct for global ordering and the distinct term
+    ``prefixes`` the block uses (pruned by the optimizer where no
+    consumer reads it)."""
     has_order = "sheet_rank" in triples.columns
     if not has_order:
         triples = (
@@ -108,6 +126,9 @@ def subject_blocks(triples: DataFrame) -> DataFrame:
         F.col("object").alias("o"),
         F.col("predicate").alias("p"),
     )
+    prefixes = F.array_compact(
+        F.array(*[_term_prefix(F.col(c)) for c in _TERMS])
+    )
     return (
         triples.groupBy("subject")
         .agg(
@@ -115,6 +136,9 @@ def subject_blocks(triples: DataFrame) -> DataFrame:
                 F.struct("sheet_rank", "row_id", "pred_rank")
             ).alias("block_order"),
             F.array_sort(F.collect_list(pair)).alias("pairs"),
+            F.array_distinct(F.flatten(F.collect_list(prefixes))).alias(
+                "prefixes"
+            ),
         )
         .select(
             "block_order",
@@ -130,114 +154,91 @@ def subject_blocks(triples: DataFrame) -> DataFrame:
                 ),
                 F.lit(" ."),
             ).alias("block"),
+            "prefixes",
         )
     )
 
 
-def render_body(triples: DataFrame) -> str:
-    """Collect the full body string on the driver (small graphs / tests).
-
-    At web scale use :func:`write_body_shards` instead.
-    """
-    rows = subject_blocks(triples).orderBy(*_BLOCK_KEY).select("block")
-    return "\n\n".join(r.block for r in rows.toLocalIterator())
+def _block_key(row) -> tuple:
+    """Driver-side sort key equal to Spark's ascending ``_BLOCK_KEY``
+    order: fields compare left to right, nulls first."""
+    return tuple((v is not None, v) for v in (*row.block_order, row.block))
 
 
-def write_body_shards(triples: DataFrame, path: str, shards: int = 0) -> None:
+def write_body_shards(triples: DataFrame, path: str) -> None:
     """Write the body as ordered text part-files (one block per record,
     blocks separated by a blank line when concatenated)."""
-    blocks = subject_blocks(triples)
-    if shards:
-        blocks = blocks.repartitionByRange(shards, *_BLOCK_KEY)
     (
-        blocks.sortWithinPartitions(*_BLOCK_KEY)
+        subject_blocks(triples)
+        .sortWithinPartitions(*_BLOCK_KEY)
         .select(F.concat(F.col("block"), F.lit("\n")).alias("value"))
         .write.mode("overwrite")
         .text(path)
     )
 
 
-def used_prefixes_df(triples: DataFrame) -> DataFrame:
-    """Distinct prefix tokens used in any s/p/o: contains ``:``, not
-    ``://``, not a literal (reference: create_mhdb:244-259).  Stays a
-    DataFrame so the ontologies-sheet resolution is a join, not a
-    driver-side dict probe."""
-    col = F.col("term")
-    return (
-        triples.select(
-            F.explode(F.array("subject", "predicate", "object")).alias("term")
-        )
-        .filter(
-            col.contains(":")
-            & ~col.contains("://")
-            & ~col.startswith('"')
-        )
-        .select(F.split(col, ":").getItem(0).alias("prefix"))
-        .filter(F.length("prefix") > 0)
-        .distinct()
-    )
-
-
-def harvest_prefixes(triples: DataFrame) -> list[str]:
-    """Driver-side list form of :func:`used_prefixes_df` (prefix-count
-    sized — tiny)."""
-    return sorted(r.prefix for r in used_prefixes_df(triples).collect())
-
-
-def resolve_prefixes(
-    triples: DataFrame, ontologies: DataFrame
-) -> list[tuple[str, str]]:
-    """Join harvested prefixes against the resources workbook's
-    ``ontologies`` sheet (columns ``prefix``, ``iri``; reference driver:
-    create_mhdb:370-388) -> ordered (prefix, iri) pairs for the header.
-
-    The sheet is ontology-sized -> broadcast; the only scan is the triple
-    stream the prefixes are harvested from."""
-    onto = ontologies.select(
-        F.trim(F.col("prefix")).alias("prefix"),
-        F.trim(F.col("iri")).alias("iri"),
-    ).filter(
-        F.col("prefix").isNotNull()
-        & F.col("iri").isNotNull()
-        & (F.length("prefix") > 0)
-    )
+def used_prefixes(triples: DataFrame) -> set[str]:
+    """Distinct term prefixes of a triple table, for a writer that does
+    not collect :func:`subject_blocks`."""
     rows = (
-        used_prefixes_df(triples)
-        .join(F.broadcast(onto), "prefix")
+        triples.select(F.explode(F.array(*_TERMS)).alias("term"))
+        .select(_term_prefix(F.col("term")).alias("prefix"))
+        .filter(F.col("prefix").isNotNull())
         .distinct()
         .collect()
     )
-    return sorted((r.prefix, r.iri) for r in rows)
+    return {r.prefix for r in rows}
+
+
+def prefix_dict(table: "dict[str, str] | DataFrame | None") -> dict[str, str]:
+    """A ``{prefix: iri}`` table from a dict or from the resources
+    workbook's ``ontologies`` sheet (columns ``prefix``, ``iri``;
+    reference driver: create_mhdb:370-388), trimmed, without null or
+    empty prefixes and null IRIs; a prefix listed twice keeps its
+    greatest IRI."""
+    if not isinstance(table, DataFrame):
+        return dict(table or {})
+    rows = (
+        table.select(
+            F.trim(F.col("prefix")).alias("prefix"),
+            F.trim(F.col("iri")).alias("iri"),
+        )
+        .filter(
+            F.col("prefix").isNotNull()
+            & F.col("iri").isNotNull()
+            & (F.length("prefix") > 0)
+        )
+        .collect()
+    )
+    return dict(sorted((r.prefix, r.iri) for r in rows))
 
 
 def resolve_used_prefixes(
-    triples: DataFrame, known: dict, on_unknown: str = "skip"
+    used: Iterable[str], known: dict, on_unknown: str = "skip"
 ) -> list[tuple[str, str]]:
-    """Harvested triple prefixes resolved against a ``{prefix: iri}``
-    table -> ordered (prefix, iri) pairs for the header, excluding the
-    fixed and base prefixes.
+    """Used term prefixes resolved against a ``{prefix: iri}`` table ->
+    ordered (prefix, iri) pairs for the header, excluding the fixed
+    prefixes.
 
     ``on_unknown="raise"`` fails loudly when a triple uses a prefix the
     table cannot declare — the artifact would be undeclared-prefix
     Turtle, invalid to any strict parser; write paths with no separate
     validation step must use this mode.
     """
-    fixed = {p for p, _ in FIXED_PREFIXES} | {""}
-    used: list[tuple[str, str]] = []
+    fixed = {p for p, _ in FIXED_PREFIXES}
+    pairs: list[tuple[str, str]] = []
     unknown: list[str] = []
-    for p in harvest_prefixes(triples):
-        if p in fixed:
-            continue
+    for p in sorted(set(used) - fixed):
         if p in known:
-            used.append((p, known[p]))
+            pairs.append((p, known[p]))
         else:
             unknown.append(p)
     if unknown and on_unknown == "raise":
         raise ValueError(
             "triples use prefixes with no known declaration "
-            f"(header would be invalid Turtle): {sorted(unknown)}"
+            f"(header would be invalid Turtle): {unknown}"
         )
-    return used
+    return pairs
 
 
 def render_header(
@@ -274,22 +275,12 @@ def render_document(
     comment: str,
     prefix_table: "dict[str, str] | DataFrame | None" = None,
 ) -> str:
-    """Full Turtle document: header (with harvested prefixes resolved
-    against ``prefix_table``) + body.
-
-    ``prefix_table`` is either the resources workbook's ``ontologies``
-    sheet as a DataFrame (columns ``prefix``/``iri`` — the plan form,
-    resolved via :func:`resolve_prefixes`) or a plain dict."""
-    if isinstance(prefix_table, DataFrame):
-        fixed = {p for p, _ in FIXED_PREFIXES} | {""}
-        used = [
-            (p, iri)
-            for p, iri in resolve_prefixes(triples, prefix_table)
-            if p not in fixed
-        ]
-    else:
-        used = resolve_used_prefixes(triples, prefix_table or {})
-    return render_header(base_uri, version, label, comment, used) + render_body(
-        triples
+    """Full Turtle document: header (with the used prefixes resolved
+    against ``prefix_table``, see :func:`prefix_dict`) + body, from one
+    collect of :func:`subject_blocks`."""
+    blocks = sorted(subject_blocks(triples).collect(), key=_block_key)
+    used = resolve_used_prefixes(
+        {p for b in blocks for p in b.prefixes}, prefix_dict(prefix_table)
     )
-
+    body = "\n\n".join(b.block for b in blocks)
+    return render_header(base_uri, version, label, comment, used) + body

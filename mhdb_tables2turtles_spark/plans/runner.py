@@ -28,7 +28,12 @@ from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mhdb_tables2turtles_spark.operators.serialize import render_document
+from mhdb_tables2turtles_spark.operators.serialize import (
+    owl_profile,
+    prefix_dict,
+    render_document,
+    render_header,
+)
 from mhdb_tables2turtles_spark.operators.triples import (
     dedup_triples,
     filter_valid,
@@ -110,26 +115,26 @@ def run_all(
     tables_root: str | None = None,
     base_uri: str = "http://www.purl.org/mentalhealth",
     version: str = "0.1.0",
-    validate: bool = True,
     profile: str = "reference",
 ) -> dict[str, dict]:
     """Build and write ``<out_dir>/<workbook>.ttl`` for every workbook —
     the reference's ``run_all=1`` driver path.  Returns per-workbook
     triple counts and output paths.
 
-    ``validate`` runs every rendered document through the strict Turtle
-    grammar checker before the atomic write — the Spark analogue of the
+    Every rendered document runs through the strict Turtle grammar
+    checker before the atomic write — the Spark analogue of the
     reference's external-parser pass
-    (/root/reference/validate_turtle_files.sh:12-24).  A document that
-    fails (e.g. a worksheet cell containing a bare backslash, which the
-    reference's escape chain — reproduced verbatim for parity — passes
-    through into the literal) is NOT written; its ``validation_error``
-    is recorded in the result and the remaining workbooks still build,
-    so one bad cell never turns the whole driver run into a crash with
-    no artifacts.  Likewise a workbook whose input file is missing (the
-    chills fixture reads the reference's golden ``chills.ttl``) is
-    skipped with a ``skipped`` reason naming the file; the resources
-    ``ontologies`` sheet, which every header needs, stays required.
+    (/root/reference/validate_turtle_files.sh:12-24); ``n_triples`` is
+    its pair count less the header's.  A document that fails (e.g. a
+    worksheet cell containing a bare backslash, which the reference's
+    escape chain — reproduced verbatim for parity — passes through into
+    the literal) is NOT written; its ``validation_error`` is recorded in
+    the result and the remaining workbooks still build, so one bad cell
+    never turns the whole driver run into a crash with no artifacts.
+    Likewise a workbook whose input file is missing (the chills fixture
+    reads the reference's golden ``chills.ttl``) is skipped with a
+    ``skipped`` reason naming the file; the resources ``ontologies``
+    sheet, which every header needs, stays required.
 
     ``profile="owl"`` rewrites the reference's nonstandard vocabulary
     (``rdf:Class``/``rdf:Property``/``rdfs:equivalentProperty``) to the
@@ -144,9 +149,7 @@ def run_all(
     ``.tmp`` files are overwritten, and no reader ever sees a torn file.
 
     The per-workbook graphs are ontology-sized (the web-scale path is
-    ``web/pipeline.py``), so the single-document renderer is the right
-    sink here — same choice as ``render_body``'s documented small-graph
-    mode.
+    ``web/pipeline.py``), so each document is one collect of its plan.
     """
     from mhdb_tables2turtles_spark.operators.validate import (
         TurtleSyntaxError,
@@ -156,10 +159,11 @@ def run_all(
     os.makedirs(out_dir, exist_ok=True)
     # prefix table: the resources workbook's `ontologies` sheet, exactly
     # like the reference driver (create_mhdb:370-388) — every workbook's
-    # header resolves its harvested prefixes against this one sheet
-    ontologies = load_workbook_tables(spark, "resources", tables_root).get(
-        "ontologies"
+    # header resolves its used prefixes against this one sheet
+    ontologies = prefix_dict(
+        load_workbook_tables(spark, "resources", tables_root).get("ontologies")
     )
+    header_pairs = validate_turtle(render_header(base_uri, version, "h", "h"))
     out: dict[str, dict] = {}
     for name in WORKBOOKS:
         path = os.path.join(out_dir, f"{name}.ttl")
@@ -176,17 +180,8 @@ def run_all(
             # a missing input skips this workbook only
             info["skipped"] = f"input not found: {exc.filename or exc}"
         else:
-            # materialize once: the renderer needs three actions over the
-            # triple set (prefix harvest, ordered body, count) and the
-            # workbook plans are deep union-of-join trees — without this
-            # each action recomputes the whole plan (measured 3x the
-            # runtime)
-            triples = build_workbook(spark, name, tables).localCheckpoint()
+            triples = build_workbook(spark, name, tables)
             if profile == "owl":
-                from mhdb_tables2turtles_spark.operators.serialize import (
-                    owl_profile,
-                )
-
                 triples = owl_profile(triples)
             doc = render_document(
                 triples,
@@ -196,13 +191,13 @@ def run_all(
                 f"mhdb {name} workbook (PySpark plan)",
                 prefix_table=ontologies,
             )
-            info["n_triples"] = triples.count()
-            if validate:
-                try:
-                    info["n_pairs_validated"] = validate_turtle(doc)
-                except TurtleSyntaxError as exc:
-                    info["validation_error"] = str(exc)
-            if info["validation_error"] is None:
+            try:
+                pairs = validate_turtle(doc)
+            except TurtleSyntaxError as exc:
+                info["validation_error"] = str(exc)
+            else:
+                info["n_pairs_validated"] = pairs
+                info["n_triples"] = pairs - header_pairs
                 tmp = path + ".tmp"
                 with open(tmp, "w", encoding="utf-8") as f:
                     f.write(doc)

@@ -134,9 +134,10 @@ def read_turtle_dir(spark: SparkSession, ttl_dir: str) -> DataFrame:
     parts = os.path.join(ttl_dir, "part-*")
     if not _glob.glob(parts):
         raise FileNotFoundError(f"no part-* shards under {ttl_dir!r}")
-    # the shards are fragments of ONE document (write_body_shards range-
-    # partitions subject blocks with no bnode-locality guarantee), so a
-    # labeled node split across shards must reunite on read
+    # the shards are fragments of ONE document (write_body_shards leaves
+    # each subject block in its group-by partition, with no bnode-locality
+    # guarantee), so a labeled node split across shards must reunite on
+    # read
     return read_turtle(
         spark, parts, extra_prefixes=prefixes, scope="document"
     )

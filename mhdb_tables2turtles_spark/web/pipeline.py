@@ -183,6 +183,7 @@ class KGPipeline:
             from mhdb_tables2turtles_spark.operators.serialize import (
                 render_header,
                 resolve_used_prefixes,
+                used_prefixes,
                 write_body_shards,
             )
             from mhdb_tables2turtles_spark.sources.golden import (
@@ -206,7 +207,7 @@ class KGPipeline:
                 # table cannot declare must fail HERE, not land as an
                 # invalid artifact behind the header.ttl resume gate
                 used = resolve_used_prefixes(
-                    canonical, header_prefixes(self.ttl_path),
+                    used_prefixes(canonical), header_prefixes(self.ttl_path),
                     on_unknown="raise",
                 )
                 # header file sorts before part-* shards when concatenated

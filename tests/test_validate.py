@@ -276,15 +276,69 @@ def test_web_pipeline_raises_on_undeclarable_prefix(spark, tmp_path):
     time instead of landing an invalid artifact behind the resume gate."""
     from mhdb_tables2turtles_spark.operators.serialize import (
         resolve_used_prefixes,
+        used_prefixes,
     )
 
     t = spark.createDataFrame(
         [(":s", "wd:undeclared", ":o")], ["subject", "predicate", "object"]
     )
+    used = used_prefixes(t)
     with pytest.raises(ValueError, match="wd"):
-        resolve_used_prefixes(t, {"fabio": "http://x/"}, on_unknown="raise")
+        resolve_used_prefixes(used, {"fabio": "http://x/"}, on_unknown="raise")
     # skip mode (used where a later validation pass exists) drops it
-    assert resolve_used_prefixes(t, {"fabio": "http://x/"}) == []
+    assert resolve_used_prefixes(used, {"fabio": "http://x/"}) == []
+
+
+def test_iriref_and_blank_node_terms_declare_no_prefix(spark):
+    """``<urn:isbn:…>`` and ``_:b0`` contain a colon but are not prefixed
+    names: neither the web harvest nor a document's blocks read a prefix
+    from them, so the strict web write accepts a graph that validates."""
+    from mhdb_tables2turtles_spark.operators.serialize import (
+        render_document,
+        render_header,
+        resolve_used_prefixes,
+        subject_blocks,
+        used_prefixes,
+    )
+
+    t = spark.createDataFrame(
+        [(":s", "rdfs:seeAlso", "<urn:isbn:0451450523>"), (":s", ":p", "_:b0")],
+        ["subject", "predicate", "object"],
+    )
+    assert used_prefixes(t) == {"rdfs"}
+    assert [r.prefixes for r in subject_blocks(t).collect()] == [["rdfs"]]
+    assert resolve_used_prefixes(used_prefixes(t), {}, on_unknown="raise") == []
+    args = ("http://example.org/o", "0", "o", "o")
+    doc = render_document(t, *args)
+    assert doc.startswith(render_header(*args))
+    assert validate_turtle(doc) == 2 + validate_turtle(render_header(*args))
+
+
+def test_shard_writer_prunes_the_prefix_aggregate(spark, tmp_path, monkeypatch):
+    """The ``prefixes`` column of ``subject_blocks`` costs the web shard
+    writer nothing: its optimized plan holds no prefix aggregate."""
+    from mhdb_tables2turtles_spark.operators.serialize import (
+        subject_blocks,
+        write_body_shards,
+    )
+
+    t = spark.createDataFrame(
+        [(":s", "obo:p", "obo:o"), (":t", ":p", '"x"')],
+        ["subject", "predicate", "object"],
+    )
+    cls = type(t)
+    write = cls.write
+    written = []
+    monkeypatch.setattr(
+        cls, "write", property(lambda df: written.append(df) or write.fget(df))
+    )
+    write_body_shards(t, str(tmp_path / "ttl"))
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "flatten" in optimized(subject_blocks(t))
+    assert len(written) == 1 and "flatten" not in optimized(written[0])
 
 
 def test_parse_turtle_surface_terms():

@@ -183,8 +183,8 @@ def test_resources_license_intent(spark):
 
 def test_ontologies_prefix_table_plan(spark):
     """S5 second half: the header's ontology PREFIX lines come from the
-    resources workbook's ontologies sheet via a broadcast join against
-    the harvested used-prefix set — not a caller-supplied dict."""
+    resources workbook's ontologies sheet, looked up for the prefixes
+    the document's subject blocks use — not a caller-supplied dict."""
     from mhdb_tables2turtles_spark.operators.serialize import render_document
     from mhdb_tables2turtles_spark.operators.triples import dedup_triples
     from mhdb_tables2turtles_spark.plans.resources import resources_triples
@@ -280,6 +280,78 @@ def test_workbook_snapshot(spark, ontologies, name):
             lineterm="", n=1,
         )
         pytest.fail("\n".join(list(diff)[:40]))
+
+
+def test_render_document_is_one_collect(spark, ontologies):
+    """A document is one collect of its subject blocks: at most two
+    Spark jobs (the shuffle map stage and the result) over a
+    materialized workbook."""
+    from mhdb_tables2turtles_spark.operators.serialize import (
+        prefix_dict,
+        render_document,
+    )
+    from mhdb_tables2turtles_spark.plans.runner import build_workbook
+
+    triples = build_workbook(spark, "states").localCheckpoint()
+    known = prefix_dict(ontologies)
+    sc = spark.sparkContext
+    sc.setJobGroup("render-one-collect", "render_document job count")
+    try:
+        render_document(
+            triples, "http://www.purl.org/mentalhealth/states", "0.1.0",
+            "states", "states workbook", prefix_table=known,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("render-one-collect")
+    assert 1 <= len(jobs) <= 2, jobs
+
+
+def test_render_document_orders_blocks_as_spark_does(spark):
+    """The driver-side block sort is Spark's ``orderBy(block_order,
+    block)``: key fields left to right, nulls first, ties by text."""
+    from mhdb_tables2turtles_spark.operators.serialize import (
+        render_document,
+        render_header,
+        subject_blocks,
+    )
+
+    t = spark.createDataFrame(
+        [(":a", "a", ":C", 1, 5, 0), (":b", "a", ":C", 1, None, 0),
+         (":c", "a", ":C", None, 2, 0), (":d", "a", ":C", 0, 9, None),
+         (":e", "a", ":C", 0, 9, 1), (":f", "a", ":C", 1, 5, 0)],
+        "subject string, predicate string, object string, "
+        "sheet_rank int, row_id long, pred_rank int",
+    )
+    spark_order = subject_blocks(t).orderBy("block_order", "block")
+    want = "\n\n".join(r.block for r in spark_order.collect())
+    args = ("http://example.org/o", "0", "o", "o")
+    assert render_document(t, *args) == render_header(*args) + want
+    assert want.index(":c ") < want.index(":d ") < want.index(":b ")
+
+
+def test_prefix_table_dataframe_equals_dict(spark):
+    """An ontologies sheet renders the same document as the dict it
+    trims to: padded cells are trimmed, a null IRI declares nothing."""
+    from mhdb_tables2turtles_spark.operators.serialize import render_document
+
+    t = spark.createDataFrame(
+        [(":s", "a", "obo:X"), (":s", "skos:note", ":o"), (":o", "a", ":C")],
+        ["subject", "predicate", "object"],
+    )
+    sheet = spark.createDataFrame(
+        [("  obo ", " http://purl.obolibrary.org/obo/ "), ("skos", None),
+         (None, "http://x/"), ("", "http://y/")],
+        "prefix string, iri string",
+    )
+    args = ("http://example.org/o", "0", "o", "o")
+    doc = render_document(t, *args, prefix_table=sheet)
+    assert doc == render_document(
+        t, *args, prefix_table={"obo": "http://purl.obolibrary.org/obo/"}
+    )
+    assert "PREFIX obo: <http://purl.obolibrary.org/obo/> \n" in doc
+    assert "PREFIX skos" not in doc
 
 
 def _edge_tables(spark):
