@@ -47,6 +47,7 @@ from mhdb_tables2turtles_spark.plans.sheetspec import workbook_triples
 from mhdb_tables2turtles_spark.plans.states import STATES_SPECS
 from mhdb_tables2turtles_spark.sources import workbooks as wb
 from mhdb_tables2turtles_spark.sources.golden import (
+    REFERENCE_CHILLS_TTL,
     fixture_spark_tables,
     load_golden_triples,
     reverse_fixture,
@@ -65,7 +66,7 @@ WORKBOOKS: dict[str, tuple] = {
     "measures": (lambda t: workbook_triples(t, MEASURES_SPECS), wb.measures_frames),
     "chills": (
         lambda t: workbook_triples(t, CHILLS_SPECS),
-        lambda: reverse_fixture(load_golden_triples()),
+        lambda: reverse_fixture(load_golden_triples(REFERENCE_CHILLS_TTL)),
     ),
 }
 

@@ -23,6 +23,10 @@ import pandas as pd
 
 Triple = tuple[str, str, str]
 
+# the reference checkout's emitted chills workbook: the golden graph and
+# the chills fixture's source
+REFERENCE_CHILLS_TTL = "/root/reference/output/chills.ttl"
+
 _TYPED = re.compile(r'^"(.*)"\^\^xsd:(\w+)$', re.S)
 _LANG = re.compile(r'^"""(.*)"""@(\w+)$', re.S)
 
@@ -49,16 +53,12 @@ def parse_turtle_body(text: str) -> list[Triple]:
     return triples
 
 
-def load_golden_triples(
-    path: str = "/root/reference/output/chills.ttl",
-) -> set[Triple]:
+def load_golden_triples(path: str) -> set[Triple]:
     with open(path, encoding="utf-8") as f:
         return set(parse_turtle_body(f.read()))
 
 
-def header_prefixes(
-    path: str = "/root/reference/output/chills.ttl",
-) -> dict[str, str]:
+def header_prefixes(path: str) -> dict[str, str]:
     """The ontology document's declared prefix table (``PREFIX p: <iri>``
     lines) — the web pipeline resolves its harvested triple prefixes
     against this, so a graph that unions the ontology emits a header

@@ -7,20 +7,29 @@ ambiguous surface forms: several ontology entities may share a surface
 entity whose profile text (label + definition) best matches the page, by
 TF-IDF-weighted token overlap.
 
+The idf is taken over the entity profiles, not over the pages: N is the
+number of profiled entities and df the number whose profile holds the
+token.  A page's links are therefore a function of the page and the
+ontology alone — linking a batch of pages gives each page the links a
+full-corpus run gives it, which is what lets an incremental epoch equal
+a full rebuild.
+
 Plan shape (all built-in ops, Catalyst-optimizable):
 
-  mentions ⨝B vocab(surface)                      -- broadcast: dictionary is tiny
-  pages ⟕ explode(tokens)                          -- only pages w/ ambiguous mentions
-  ⋉B profile_tokens                                -- map-side prune BEFORE any shuffle
-  -> (url, token, tf)  ⨝B idf(token)  ⨝B entity_tokens(token)
-  groupBy(url, entity) sum(tf·idf²)                -- map-side partial agg
-  row_number over (url, surface)                   -- pick argmax
+  mentions ⨝B vocab(surface)                -- broadcast: dictionary is tiny
+  pages ⋉ ambiguous urls -> explode(tokens) -- pages w/ ambiguous mentions
+  ⨝B idf(token)                             -- profile idf: map-side prune
+  groupBy(url, token) count -> tf           -- map-side partial agg
+  ⨝B entity_tokens(token)
+  groupBy(url, entity) sum(tf·idf²)         -- map-side partial agg
+  row_number over (url, surface)            -- pick argmax
 
-Every token-keyed structure (tf agg, df agg, idf join) is pruned against
-the ontology-sized profile-token set by broadcast semi-join *before* it
-shuffles, so shuffle volume is O(profile-token hits), not O(corpus
-tokens); the remaining wide shuffles key on ``url`` — high-cardinality
-and uniform at web scale (no hub keys), so this survives 1000 executors.
+The idf aggregate runs over the profiles, so it is ontology-sized and
+broadcasts; joining it to the page-token stream drops every token no
+profile holds *before* the tf shuffle, so shuffle volume is
+O(profile-token hits), not O(corpus tokens).  The remaining wide
+shuffles key on ``url`` — high-cardinality and uniform at web scale (no
+hub keys), so this survives 1000 executors.
 """
 
 from __future__ import annotations
@@ -28,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["candidate_entities", "token_idf", "link_mentions"]
+__all__ = ["candidate_entities", "link_mentions"]
 
 
 def candidate_entities(mentions: DataFrame, vocab: DataFrame) -> DataFrame:
@@ -40,52 +49,9 @@ def candidate_entities(mentions: DataFrame, vocab: DataFrame) -> DataFrame:
     )
 
 
-def token_idf(
-    pages: DataFrame,
-    restrict_tokens: DataFrame | None = None,
-    n_pages: int | None = None,
-) -> DataFrame:
-    """(token, idf) over the page corpus: idf = ln((N+1)/(df+1)) + 1.
-
-    One pass: explode distinct tokens per page, count pages per token.
-
-    ``restrict_tokens`` (a single-column ``token`` DataFrame) prunes the
-    exploded stream *before* the document-frequency shuffle via a
-    broadcast semi-join — df values for surviving tokens are unchanged
-    (a filter cannot alter how many pages contain a kept token), but the
-    shuffle shrinks from every distinct corpus token (~unbounded at
-    10^12 pages) to the restriction set.
-
-    ``n_pages`` should be passed in from an upstream stage manifest /
-    ``observe()`` counter (web/materialize.py records it for free on the
-    write job); the ``pages.count()`` fallback is an extra full-corpus
-    pass — acceptable only where no counter exists.
-    """
-    if n_pages is None:
-        n_pages = pages.count()
-    exploded = (
-        pages.select(
-            F.col("url"),
-            F.explode(
-                F.array_distinct(F.split(F.lower(F.col("text")), r"\s+"))
-            ).alias("token"),
-        )
-        .filter(F.length("token") > 1)
-    )
-    if restrict_tokens is not None:
-        exploded = exploded.join(
-            F.broadcast(restrict_tokens), "token", "left_semi"
-        )
-    return (
-        exploded.groupBy("token")
-        .agg(F.count("*").alias("df"))
-        .select(
-            "token",
-            (F.log((F.lit(n_pages) + 1.0) / (F.col("df") + 1.0)) + 1.0).alias(
-                "idf"
-            ),
-        )
-    )
+def _tokens(text: str) -> F.Column:
+    """Lower-cased whitespace tokens of a text column."""
+    return F.split(F.lower(F.col(text)), r"\s+")
 
 
 def link_mentions(
@@ -93,14 +59,13 @@ def link_mentions(
     vocab: DataFrame,
     pages: DataFrame,
     profiles: DataFrame,
-    n_pages: int | None = None,
 ) -> DataFrame:
     """-> (url, surface, entity_iri, score, is_ambiguous).
 
     Unambiguous surfaces short-circuit the scorer entirely (the common
     case); only pages containing ambiguous surfaces pay for tokenization.
-    ``n_pages`` (corpus size for the idf) comes from the caller's stage
-    counters so the scorer adds no extra corpus pass.
+    The score of an entity on a page is the sum of ``tf · idf²`` over the
+    tokens its profile shares with the page text.
     """
     cands = candidate_entities(mentions, vocab).select(
         "url", "surface", "entity_iri", "is_alias"
@@ -114,7 +79,7 @@ def link_mentions(
     )
     # the dictionary is driver-sized: decide at plan-build time whether
     # any surface is ambiguous.  With none (the common case for a
-    # label-minted ontology) the whole TF-IDF subtree — corpus-wide idf,
+    # label-minted ontology) the whole TF-IDF subtree — profile idf,
     # token explode, score join — is omitted from the plan entirely
     # instead of executing against zero ambiguous rows.
     if amb_surfaces.isEmpty():
@@ -131,37 +96,31 @@ def link_mentions(
 
     entity_tokens = profiles.select(
         "entity_iri",
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.col("profile_text")), r"\s+"))
-        ).alias("token"),
+        F.explode(F.array_distinct(_tokens("profile_text"))).alias("token"),
     ).filter(F.length("token") > 1)
-    # only tokens occurring in some entity profile can contribute to a
-    # score (scores is an inner join against entity_tokens), so prune the
-    # page-token stream against this ontology-sized set BEFORE any
-    # shuffle: the tf aggregation, the df aggregation, and the idf join
-    # all shrink from corpus-token cardinality (unbounded at 10^12
-    # pages) to profile-token cardinality (broadcastable by
-    # construction).  Inner joins commute with this filter — results are
-    # value-identical.
-    profile_tokens = entity_tokens.select("token").distinct()
-
-    # pages that actually need scoring (semi-join prunes the token scan)
+    n_entities = profiles.agg(F.count_distinct("entity_iri").alias("n"))
+    idf = (
+        entity_tokens.groupBy("token")
+        .agg(F.count("*").alias("df"))
+        .crossJoin(F.broadcast(n_entities))
+        .select(
+            "token",
+            (F.log((F.col("n") + 1.0) / (F.col("df") + 1.0)) + 1.0)
+            .alias("idf"),
+        )
+    )
+    # pages that actually need scoring (semi-join prunes the token scan);
+    # the idf join keeps only tokens some profile holds, before the tf
+    # shuffle
     amb_pages = pages.join(amb.select("url").distinct(), "url", "left_semi")
     page_tokens = (
-        amb_pages.select(
-            "url",
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token"),
-        )
-        .filter(F.length("token") > 1)
-        .join(F.broadcast(profile_tokens), "token", "left_semi")
-        .groupBy("url", "token")
+        amb_pages.select("url", F.explode(_tokens("text")).alias("token"))
+        .join(F.broadcast(idf), "token")
+        .groupBy("url", "token", "idf")
         .agg(F.count("*").alias("tf"))
     )
-
-    idf = token_idf(pages, restrict_tokens=profile_tokens, n_pages=n_pages)
     scores = (
-        page_tokens.join(F.broadcast(idf), "token")
-        .join(F.broadcast(entity_tokens), "token")
+        page_tokens.join(F.broadcast(entity_tokens), "token")
         .groupBy("url", "entity_iri")
         .agg(F.sum(F.col("tf") * F.col("idf") * F.col("idf")).alias("score"))
     )

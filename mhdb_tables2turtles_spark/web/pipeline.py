@@ -4,7 +4,9 @@
       -> stage extract   : the one Python pass per page: html -> text
                            (byte-identical per url), page IRI, surfaces
       -> stage linked    : explode of the surfaces (JVM), alias
-                           candidates + TF-IDF scoring
+                           candidates + TF-IDF scoring against the
+                           entity profiles (idf over the ontology, so
+                           a page links the same in any batch)
       -> stage triples   : per-page entity set ⋈ page IRI, inline (JVM)
       -> stage canonical : connected-components rewrite; with no
                            owl:sameAs edge, an alias of triples (no copy)
@@ -126,17 +128,12 @@ class KGPipeline:
         extracted = staged.stage(
             "extract", lambda: extract_pages(pages, self.surfaces)
         )
-        # the extract stage is committed at this point, so its manifest
-        # row count (== page/url count, urls are unique per page) is free:
-        # it feeds the idf corpus size (no extra full scan in token_idf)
-        n_pages = staged.manifest("extract")["rows"]
         # the mentions explode is free to redo, so it runs inside the
         # linked write job instead of committing a copy of `surfaces`
         linked = staged.stage(
             "linked",
             lambda: link_mentions(
-                _mentions(extracted), self.vocab, extracted, self.profiles,
-                n_pages=n_pages,
+                _mentions(extracted), self.vocab, extracted, self.profiles
             ),
             upstream=("extract",),
         )
@@ -312,15 +309,11 @@ class KGPipeline:
         re-running connected components over every equivalence edge
         ingested so far (the
         :func:`~mhdb_tables2turtles_spark.web.canonicalize.merge_components`
-        guarantee).  End-to-end triple equality with a from-scratch
-        :meth:`run` over all pages additionally requires linking to be
-        corpus-independent: TF-IDF idf statistics are computed per
-        epoch (standard re-crawl practice — already-linked pages are
-        not re-linked when corpus statistics drift), so an ambiguous
-        surface whose argmax depends on idf may link differently than
-        a full rebuild would.  With an unambiguous dictionary (the
-        scorer short-circuits) equality is exact — tested both ways in
-        test_web_pipeline.
+        guarantee).  Linking is a function of the page and the ontology
+        alone (the TF-IDF idf is taken over the entity profiles), so a
+        batch's pages link exactly as they would in a full run, shared
+        surfaces included: ``run(A)`` + ``update(B)`` yields the same
+        triples as a from-scratch ``run(A ∪ B)``.
 
         One KG definition: the batch runs :meth:`run`'s own functions
         (``extract_pages``, the surfaces explode, ``link_mentions``,
@@ -353,8 +346,7 @@ class KGPipeline:
             extracted = extract_pages(batch, self.surfaces)
             extracted = extracted.localCheckpoint(eager=True)
             linked = link_mentions(
-                _mentions(extracted), self.vocab, extracted, self.profiles,
-                n_pages=extracted.count(),
+                _mentions(extracted), self.vocab, extracted, self.profiles
             )
             t = page_entity_triples(linked, extracted)
             if extra_equiv_edges is not None:

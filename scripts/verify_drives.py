@@ -12,7 +12,6 @@ Usage: python scripts/verify_drives.py   (prints VERIFY-DRIVES-OK)
 
 from __future__ import annotations
 
-import inspect
 import os
 import shutil
 import sys
@@ -85,14 +84,15 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     tmp = tempfile.mkdtemp()
 
-    from mhdb_tables2turtles_spark.sources.golden import load_golden_triples
+    from mhdb_tables2turtles_spark.sources.golden import REFERENCE_CHILLS_TTL
 
-    # the reference checkout's chills.ttl, the library's default golden graph
-    golden_ttl = inspect.signature(load_golden_triples).parameters["path"].default
-    if os.path.exists(golden_ttl):
-        drive_golden(spark, tmp, golden_ttl)
+    if os.path.exists(REFERENCE_CHILLS_TTL):
+        drive_golden(spark, tmp, REFERENCE_CHILLS_TTL)
     else:
-        print(f"golden chills: skipped (input not found: {golden_ttl})", flush=True)
+        print(
+            f"golden chills: skipped (input not found: {REFERENCE_CHILLS_TTL})",
+            flush=True,
+        )
 
     # Drive 2: driver contract smoke
     import __spark_entry__ as entry_mod

@@ -1,10 +1,9 @@
-import inspect
 import os
 
 import pytest
 from pyspark.sql import SparkSession
 
-from mhdb_tables2turtles_spark.sources.golden import load_golden_triples
+from mhdb_tables2turtles_spark.sources.golden import REFERENCE_CHILLS_TTL
 
 
 @pytest.fixture(scope="session")
@@ -34,10 +33,10 @@ def pytest_configure(config):
     config.addinivalue_line("markers", "slow: long-running end-to-end test")
 
 
-# Oracle inputs outside the repo: the library's default golden graph
+# Oracle inputs outside the repo: the reference checkout's golden graph
 # (``<reference checkout>/output/chills.ttl``) and the checkout's
 # ``mhdb`` module.
-GOLDEN_TTL = inspect.signature(load_golden_triples).parameters["path"].default
+GOLDEN_TTL = REFERENCE_CHILLS_TTL
 REFERENCE_MODULE = os.path.join(
     os.path.dirname(os.path.dirname(GOLDEN_TTL)), "mhdb"
 )

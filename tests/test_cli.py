@@ -109,7 +109,7 @@ def test_cli_workbooks_run_all(spark, tmp_path, capsys):
     )
 
     ours = set(parse_turtle_body((out / "chills.ttl").read_text()))
-    golden = load_golden_triples()
+    golden = load_golden_triples(GOLDEN_TTL)
     assert len(ours & golden) / len(golden) >= 0.99
 
 

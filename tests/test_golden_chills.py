@@ -9,7 +9,7 @@ triple sets.
 
 import pandas as pd
 import pytest
-from conftest import requires
+from conftest import GOLDEN_TTL, requires
 
 from mhdb_tables2turtles_spark.operators.triples import (
     dedup_triples,
@@ -22,14 +22,12 @@ from mhdb_tables2turtles_spark.sources.golden import (
     reverse_fixture,
 )
 
-GOLDEN = "/root/reference/output/chills.ttl"
-
-pytestmark = requires(GOLDEN)
+pytestmark = requires(GOLDEN_TTL)
 
 
 @pytest.fixture(scope="module")
 def golden_triples():
-    return load_golden_triples(GOLDEN)
+    return load_golden_triples(GOLDEN_TTL)
 
 
 @pytest.fixture(scope="module")

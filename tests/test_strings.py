@@ -128,9 +128,10 @@ def test_doi_triples_reference_execution_parity(spark):
     """F12: run the REFERENCE's doi_iri (dead code — its add_if /
     language_string names are undefined; shimmed to evident intent) and
     assert our operator emits the identical triple set."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/reference")
+    sys.path.insert(0, os.path.dirname(REFERENCE_MODULE))
     import numpy as np
 
     if not hasattr(np, "int"):

@@ -74,7 +74,7 @@ def test_grammar_langtag_vs_directive_tokens():
 def test_grammar_accepts_reference_golden_file():
     # the reference's own emitted output must parse (it passed the
     # reference's external `ttl` validator when committed)
-    text = open("/root/reference/output/chills.ttl", encoding="utf-8").read()
+    text = open(GOLDEN_TTL, encoding="utf-8").read()
     assert validate_turtle(text) > 1600
 
 
@@ -400,7 +400,7 @@ def test_parse_turtle_matches_golden_oracle_parser():
     from mhdb_tables2turtles_spark.operators.validate import parse_turtle
     from mhdb_tables2turtles_spark.sources.golden import parse_turtle_body
 
-    with open("/root/reference/output/chills.ttl", encoding="utf-8") as f:
+    with open(GOLDEN_TTL, encoding="utf-8") as f:
         text = f.read()
     grammar = {
         t for t in parse_turtle(text) if not t[0].startswith("<")

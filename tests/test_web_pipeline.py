@@ -3,6 +3,8 @@ connected components, staged resume."""
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
 from conftest import GOLDEN_TTL, requires
@@ -412,35 +414,22 @@ def test_linking_prefers_matching_profile(spark):
     from mhdb_tables2turtles_spark.web.linking import link_mentions
     from mhdb_tables2turtles_spark.web.mentions import scan_mentions as scan
 
-    mentions = scan(pages, ("sound",))
-    linked = {
-        r.url: r.entity_iri
-        for r in link_mentions(mentions, vocab, pages, profiles).collect()
-    }
+    def link(batch):
+        return {
+            r.url: r.entity_iri
+            for r in link_mentions(
+                scan(batch, ("sound",)), vocab, batch, profiles
+            ).collect()
+        }
+
+    linked = link(pages)
     assert linked == {"u1": ":SoundMeasure", "u2": ":SoundStimulus"}
-
-
-def test_token_idf_restriction_is_value_identical(spark):
-    # pruning the token stream before the df aggregation must not change
-    # idf for surviving tokens (the scale guard in link_mentions relies
-    # on this: inner joins commute with the pre-shuffle semi-join)
-    from mhdb_tables2turtles_spark.web.linking import token_idf
-
-    pages = spark.createDataFrame(
-        [
-            ("u1", "alpha beta gamma alpha"),
-            ("u2", "beta gamma delta"),
-            ("u3", "gamma epsilon"),
-        ],
-        ["url", "text"],
-    )
-    keep = spark.createDataFrame([("beta",), ("gamma",)], ["token"])
-    full = {r.token: r.idf for r in token_idf(pages).collect()}
-    restricted = {
-        r.token: r.idf for r in token_idf(pages, restrict_tokens=keep).collect()
-    }
-    assert set(restricted) == {"beta", "gamma"}
-    assert restricted == {t: full[t] for t in restricted}
+    # the idf comes from the profiles, so a page links the same alone as
+    # in any corpus
+    alone = {}
+    for url in ("u1", "u2"):
+        alone.update(link(pages.filter(F.col("url") == url)))
+    assert alone == linked
 
 
 def test_page_entity_triples_runs_no_python(spark):
@@ -475,21 +464,6 @@ def test_page_entity_triples_runs_no_python(spark):
     ])  # 2 decls + 2 urls + 3 mentions; the unlinked page emits nothing
     plan = triples._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
-def test_token_idf_precomputed_count_is_value_identical(spark):
-    # n_pages from a stage counter must reproduce the count() fallback
-    # exactly (the pipeline passes the extract-manifest row count so the
-    # linking plan adds no extra full-corpus pass)
-    from mhdb_tables2turtles_spark.web.linking import token_idf
-
-    pages = spark.createDataFrame(
-        [("u1", "alpha beta"), ("u2", "beta gamma"), ("u3", "gamma gamma")],
-        ["url", "text"],
-    )
-    counted = {r.token: r.idf for r in token_idf(pages).collect()}
-    passed = {r.token: r.idf for r in token_idf(pages, n_pages=3).collect()}
-    assert counted == passed
 
 
 # ------------------------------------------------------------ link graph
@@ -605,35 +579,35 @@ def test_pagerank_directed_no_inlink_node_keeps_base(spark):
 # --------------------------------------------------- incremental update
 
 
-def _unambiguous(pipe, spark):
-    """Restrict the pipeline's dictionary to surfaces with exactly one
-    entity: linking short-circuits the TF-IDF scorer, making triples a
-    corpus-independent function of each page — the precondition for
-    exact incremental-vs-full-rebuild equality (see update()'s
-    docstring for why ambiguous surfaces may legitimately diverge)."""
-    import pandas as pd
+def _shared_label_ontology(onto_ttl, path):
+    """``onto_ttl`` with entity 2k+1 relabelled to entity 2k's label for
+    k < 10: ten surfaces name two entities each, so linking them runs
+    the TF-IDF scorer."""
+    label = re.compile(r'rdfs:label """(.*?)"""@en')
+    with open(onto_ttl, encoding="utf-8") as f:
+        text = f.read()
+    labels = label.findall(text)
+    labels[1:20:2] = labels[0:20:2]
+    it = iter(labels)
+    path.write_text(
+        label.sub(lambda m: f'rdfs:label """{next(it)}"""@en', text),
+        encoding="utf-8",
+    )
+    return str(path)
 
-    vf = pipe.vocab.toPandas()
-    keep = vf.groupby("surface")["entity_iri"].transform("nunique") == 1
-    vf = vf[keep]
-    pipe.vocab = spark.createDataFrame(vf)
-    pipe.surfaces = tuple(sorted(set(vf["surface"])))
-    return pipe
 
-
-def test_update_equals_full_rebuild(spark, tmp_path, onto_ttl):
+def _assert_update_equals_full_rebuild(spark, tmp_path, ttl_path):
     """run(A) + update(B) must equal run(A ∪ B) triple-for-triple,
     including the incremental canonicalization (disjoint equivalence
-    batches E1 at base, E2 at update, vs E1 ∪ E2 from scratch)."""
+    batches E1 at base, E2 at update, vs E1 ∪ E2 from scratch).
+    Returns the full run's outputs."""
     full_corpus = build_corpus(
-        spark, n_pages=48, seed=7, partitions=4, ttl_path=onto_ttl
+        spark, n_pages=120, seed=7, partitions=4, ttl_path=ttl_path
     )
     half = F.col("url").substr(-1, 1).isin(*"01234")
     pages_a, pages_b = full_corpus.filter(half), full_corpus.filter(~half)
 
-    pipe = _unambiguous(
-        KGPipeline(spark, str(tmp_path / "kg_inc"), ttl_path=onto_ttl), spark
-    )
+    pipe = KGPipeline(spark, str(tmp_path / "kg_inc"), ttl_path=ttl_path)
     iris = [r.entity_iri for r in pipe.vocab.limit(3).collect()]
     e1 = spark.createDataFrame([(iris[0], iris[1])], ["src", "dst"])
     e2 = spark.createDataFrame([(iris[1], iris[2])], ["src", "dst"])
@@ -641,8 +615,8 @@ def test_update_equals_full_rebuild(spark, tmp_path, onto_ttl):
     pipe.run(pages_a, extra_equiv_edges=e1, include_ontology=True)
     out = pipe.update(pages_b, "crawl_b", extra_equiv_edges=e2)
 
-    fresh = _unambiguous(
-        KGPipeline(spark, str(tmp_path / "kg_full"), ttl_path=onto_ttl), spark
+    fresh = KGPipeline(
+        spark, str(tmp_path / "kg_full"), ttl_path=ttl_path
     ).run(
         full_corpus,
         extra_equiv_edges=e1.unionAll(e2),
@@ -656,6 +630,19 @@ def test_update_equals_full_rebuild(spark, tmp_path, onto_ttl):
         for r in fresh["canonical"].collect()
     }
     assert got == want and len(got) > 0
+    return fresh
+
+
+def test_update_equals_full_rebuild(spark, tmp_path, onto_ttl):
+    _assert_update_equals_full_rebuild(spark, tmp_path, onto_ttl)
+
+
+def test_update_equals_full_rebuild_shared_labels(spark, tmp_path, onto_ttl):
+    """The same equality where surfaces are shared: an epoch's pages link
+    exactly as they do in the full run."""
+    ttl = _shared_label_ontology(onto_ttl, tmp_path / "shared.ttl")
+    fresh = _assert_update_equals_full_rebuild(spark, tmp_path, ttl)
+    assert fresh["linked"].filter("is_ambiguous").count() > 0
 
 
 def test_update_resumes_and_is_idempotent(spark, tmp_path, onto_ttl):

@@ -18,8 +18,9 @@ import sys
 
 import numpy as np
 import pytest
+from conftest import REFERENCE_MODULE
 
-REFERENCE = "/root/reference"
+REFERENCE = os.path.dirname(REFERENCE_MODULE)
 
 
 class FakeXls:
