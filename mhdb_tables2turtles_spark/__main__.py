@@ -166,7 +166,7 @@ def main(argv: list[str] | None = None) -> int:
             include_ontology=args.include_ontology,
             write_turtle=args.ttl,
         )
-        stage_names = ("extract", "linked", "triples", "canonical")
+        stage_names = ("extract", "triples", "canonical")
     summary = {
         "workdir": args.workdir,
         "epochs": pipe._epochs(),

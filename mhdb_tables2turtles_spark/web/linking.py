@@ -17,6 +17,7 @@ a full rebuild.
 Plan shape (all built-in ops, Catalyst-optimizable):
 
   mentions ⨝B vocab(surface)                -- broadcast: dictionary is tiny
+  filter surface IN ambiguous               -- list decided on the driver
   pages ⋉ ambiguous urls -> explode(tokens) -- pages w/ ambiguous mentions
   ⨝B idf(token)                             -- profile idf: map-side prune
   groupBy(url, token) count -> tf           -- map-side partial agg
@@ -24,6 +25,9 @@ Plan shape (all built-in ops, Catalyst-optimizable):
   groupBy(url, entity) sum(tf·idf²)         -- map-side partial agg
   row_number over (url, surface)            -- pick argmax
 
+Which surfaces are ambiguous is read off the ontology-sized vocabulary
+on the driver, with no Spark job; with none, the scorer is left out of
+the plan.
 The idf aggregate runs over the profiles, so it is ontology-sized and
 broadcasts; joining it to the page-token stream drops every token no
 profile holds *before* the tf shuffle, so shuffle volume is
@@ -33,6 +37,8 @@ hub keys), so this survives 1000 executors.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -65,24 +71,23 @@ def link_mentions(
     Unambiguous surfaces short-circuit the scorer entirely (the common
     case); only pages containing ambiguous surfaces pay for tokenization.
     The score of an entity on a page is the sum of ``tf · idf²`` over the
-    tokens its profile shares with the page text.
+    tokens its profile shares with the page text.  ``vocab`` is
+    collected on the driver to find the ambiguous surfaces; made by
+    ``createDataFrame`` from a pandas frame it is a local relation, and
+    that collect runs no Spark job.
     """
     cands = candidate_entities(mentions, vocab).select(
         "url", "surface", "entity_iri", "is_alias"
     ).distinct()
 
-    amb_surfaces = (
-        vocab.groupBy("surface")
-        .agg(F.count_distinct("entity_iri").alias("n"))
-        .filter(F.col("n") > 1)
-        .select("surface")
-    )
-    # the dictionary is driver-sized: decide at plan-build time whether
-    # any surface is ambiguous.  With none (the common case for a
-    # label-minted ontology) the whole TF-IDF subtree — profile idf,
-    # token explode, score join — is omitted from the plan entirely
-    # instead of executing against zero ambiguous rows.
-    if amb_surfaces.isEmpty():
+    # decided at plan-build time: with no ambiguous surface (the common
+    # case for a label-minted ontology) the whole TF-IDF subtree —
+    # profile idf, token explode, score join — is omitted from the plan
+    # instead of executing against zero ambiguous rows
+    pairs = {tuple(r) for r in vocab.select("surface", "entity_iri").collect()}
+    per_surface = Counter(surface for surface, _ in pairs)
+    ambiguous = sorted(s for s, n in per_surface.items() if n > 1)
+    if not ambiguous:
         return cands.select(
             "url",
             "surface",
@@ -91,8 +96,9 @@ def link_mentions(
             F.lit(False).alias("is_ambiguous"),
         )
 
-    amb = cands.join(F.broadcast(amb_surfaces), "surface")
-    unamb = cands.join(F.broadcast(amb_surfaces), "surface", "left_anti")
+    is_amb = F.col("surface").isin(ambiguous)
+    amb = cands.filter(is_amb)
+    unamb = cands.filter(~is_amb)
 
     entity_tokens = profiles.select(
         "entity_iri",

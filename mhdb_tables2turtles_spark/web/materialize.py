@@ -13,6 +13,10 @@ committed snapshot and never duplicates committed work (north rule:
 A stage equal to another committed stage commits as an *alias*: a
 manifest naming that stage's data, no copy.
 
+The manifest also carries the written frame's schema, so reading a
+committed stage submits no Spark job (parquet schema inference is one);
+a manifest without it falls back to inference.
+
 On a real cluster, swap ``_write_parquet``/``_read`` for
 ``writeTo(...).createOrReplace()`` on an Iceberg catalog; the manifest
 maps onto Iceberg's own snapshot summary + a lineage table.
@@ -31,6 +35,7 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 __all__ = ["StagedPipeline"]
 
@@ -100,9 +105,16 @@ class StagedPipeline:
             return json.load(f)
 
     def _load(self, name: str) -> DataFrame:
-        """Committed data of ``name``, an :meth:`alias` resolved."""
-        data = self.manifest(name).get("data", name)
-        return self.spark.read.parquet(self._path(data)).drop(LINEAGE_COL)
+        """Committed data of ``name``, an :meth:`alias` resolved.  Read
+        with the manifest's ``schema``: no inference job, and a
+        partition column keeps its written type (discovery would type a
+        numeric-looking string as an int).  A manifest without the key
+        is read by inference."""
+        m = self.manifest(name)
+        reader = self.spark.read
+        if m.get("schema"):
+            reader = reader.schema(StructType.fromJson(m["schema"]))
+        return reader.parquet(self._path(m.get("data", name))).drop(LINEAGE_COL)
 
     def _commit(self, path: str, manifest: dict) -> None:
         tmp = os.path.join(path, MANIFEST + ".tmp")
@@ -121,7 +133,7 @@ class StagedPipeline:
         """Commit ``name`` as ``source``'s output, uncopied: its
         directory (cleared of any uncommitted leftover) holds only a
         manifest whose ``data`` names ``source``'s parquet, with the
-        keys of a :meth:`stage` manifest (rows and lineage are
+        keys of a :meth:`stage` manifest (rows, lineage and schema are
         ``source``'s, ``elapsed_sec`` the alias commit's own)."""
         path = self._path(name)
         self.log.append(f"compute:{name}")
@@ -137,6 +149,7 @@ class StagedPipeline:
             "upstream": [source],
             "partitions": src.get("partitions", {}),
             "n_partitions": src.get("n_partitions", 0),
+            "schema": src.get("schema"),
         })
         return self._load(name)
 
@@ -153,9 +166,9 @@ class StagedPipeline:
         Computing writes ``build()`` as parquet under ``<workdir>/<name>``
         with the source partition id as a lineage column, then commits a
         manifest (rows, elapsed seconds, ``upstream`` stage names,
-        per-partition row counts, and per ``counts`` key the number of
-        rows on which that boolean column is true — observed in the
-        write job itself) by atomic rename.  Either way the
+        per-partition row counts, the written schema, and per ``counts``
+        key the number of rows on which that boolean column is true —
+        observed in the write job itself) by atomic rename.  Either way the
         returned DataFrame reads the committed data (an :meth:`alias`
         resolved), lineage column dropped."""
         path = self._path(name)
@@ -197,6 +210,7 @@ class StagedPipeline:
             "upstream": list(upstream),
             "partitions": lineage,
             "n_partitions": len(lineage),
+            "schema": df.schema.jsonValue(),
             **{k: obs.get[k] for k in counts},
         }
         self.log.append(f"done:{name}:{elapsed}s")
@@ -222,26 +236,11 @@ class StagedPipeline:
         completed work, and a partition interrupted before its manifest
         update is simply re-overwritten on the next run.
         """
-        from pyspark.sql.types import StructType
-
         path = self._path(name)
-        done: list = []
-        null_done = False
-        schema_json = None
-        if self.is_committed(name):
-            m = self.manifest(name)
-            done = m.get("done_partitions", [])
-            null_done = m.get("null_partition_done", False)
-            schema_json = m.get("schema")
-
-        def _read_committed() -> DataFrame:
-            # committed schema recorded in the manifest: an all-empty (or
-            # not-yet-written) stage directory has no data files to infer
-            # from, and inference would also widen partition-column types
-            reader = self.spark.read
-            if schema_json:
-                reader = reader.schema(StructType.fromJson(schema_json))
-            return reader.parquet(path)
+        committed = self.is_committed(name)
+        m = self.manifest(name) if committed else {}
+        done: list = m.get("done_partitions", [])
+        null_done = m.get("null_partition_done", False)
 
         # explicit null handling: `~isin(done)` is NULL (dropped) for a
         # null partition key, which would silently skip those rows forever
@@ -256,11 +255,13 @@ class StagedPipeline:
         ]
         if not todo:
             self.log.append(f"resume:{name}")
-            if schema_json is None:
+            if not committed:
                 # never committed AND zero input rows: nothing on disk to
                 # read — hand back the (empty) transform result directly
                 return fn(todo_df)
-            return _read_committed()
+            # the manifest's schema also reads a directory that holds
+            # no data file (every committed batch empty)
+            return self._load(name)
 
         self.log.append(f"compute:{name}:{sorted(todo, key=str)}")
         out = fn(todo_df)
@@ -275,23 +276,19 @@ class StagedPipeline:
             .partitionBy(partition_key)
             .parquet(path)
         )
-        prev_rows = 0
-        if self.is_committed(name):
-            prev_rows = self.manifest(name).get("rows", 0)
-        schema_json = out.schema.jsonValue()
         manifest = {
             "stage": name,
-            "rows": prev_rows + obs.get["rows"],
+            "rows": m.get("rows", 0) + obs.get["rows"],
             "incremental": True,
             "partition_key": partition_key,
             "done_partitions": sorted(
                 done + [t for t in todo if t is not None], key=str
             ),
             "null_partition_done": null_done or any(t is None for t in todo),
-            "schema": schema_json,
+            "schema": out.schema.jsonValue(),
         }
         self._commit(path, manifest)
-        return _read_committed()
+        return self._load(name)
 
     def counters(self) -> dict[str, int]:
         """Committed row counts per stage (stages written by an older

@@ -3,20 +3,21 @@
     pages (url, html)
       -> stage extract   : the one Python pass per page: html -> text
                            (byte-identical per url), page IRI, surfaces
-      -> stage linked    : explode of the surfaces (JVM), alias
-                           candidates + TF-IDF scoring against the
-                           entity profiles (idf over the ontology, so
-                           a page links the same in any batch)
-      -> stage triples   : per-page entity set ⋈ page IRI, inline (JVM)
+      -> stage triples   : all JVM, inside the one write: explode of the
+                           surfaces, alias candidates + TF-IDF scoring
+                           against the entity profiles (idf over the
+                           ontology, so a page links the same in any
+                           batch), then per-page entity set ⋈ page IRI,
+                           inline
       -> stage canonical : connected-components rewrite; with no
                            owl:sameAs edge, an alias of triples (no copy)
       -> Turtle shards / triple table
 
 Every stage commits through :class:`materialize.StagedPipeline` (resume +
 lineage + counters), and only rows a resume or a reader cannot cheaply
-recompute are committed, each once: the mentions explode runs inside the
-linked write job, and :meth:`KGPipeline.update` commits an epoch's
-triples and component labels but no graph copy.  The ontology side
+recompute are committed, each once: the mentions explode and the
+linking run inside the triples write, and :meth:`KGPipeline.update`
+commits an epoch's triples and component labels but no graph copy.  The ontology side
 (vocabulary, entity profiles, equivalence edges) comes from the ontology
 Turtle file ``ttl_path``, so the triple vocabulary matches the
 ontology's IRIs exactly — the P/R metric is then a set comparison of
@@ -110,6 +111,26 @@ class KGPipeline:
             rows, ["subject", "predicate", "object"]
         )
 
+    def _link_triples(
+        self, extracted: DataFrame, extra_equiv_edges: DataFrame | None
+    ) -> tuple[DataFrame, DataFrame]:
+        """The one KG definition over :func:`extract_pages` output, lazy
+        and JVM-only: the surfaces explode, ``link_mentions``, then
+        ``page_entity_triples`` -> ``(linked, triples)``.
+
+        Merge evidence is part of the graph: the extra edges ride along
+        as owl:sameAs rows, so a committed triple table is
+        self-contained — ``equivalence_edges()`` recovers them on any
+        later read, which is what lets :meth:`update` re-derive the base
+        component labels without the caller re-supplying them."""
+        linked = link_mentions(
+            _mentions(extracted), self.vocab, extracted, self.profiles
+        )
+        triples = page_entity_triples(linked, extracted)
+        if extra_equiv_edges is not None:
+            triples = triples.unionByName(_equiv_triples(extra_equiv_edges))
+        return linked, triples
+
     def run(
         self,
         pages: DataFrame,
@@ -119,7 +140,10 @@ class KGPipeline:
     ):
         """-> dict of stage outputs; 'canonical' is the final triple set.
 
-        ``include_ontology`` unions the reference graph into the triple
+        Commits ``extract``, ``triples`` and ``canonical`` (an alias of
+        ``triples`` when there is no merge); ``linked`` is returned as
+        the lazy link frame the triples write ran, not a committed
+        stage.  ``include_ontology`` unions the reference graph into the triple
         stage; ``write_turtle`` also materializes ordered ``.ttl`` shards
         (``<workdir>/ttl/``) from the canonical graph.
         """
@@ -128,35 +152,24 @@ class KGPipeline:
         extracted = staged.stage(
             "extract", lambda: extract_pages(pages, self.surfaces)
         )
-        # the mentions explode is free to redo, so it runs inside the
-        # linked write job instead of committing a copy of `surfaces`
-        linked = staged.stage(
-            "linked",
-            lambda: link_mentions(
-                _mentions(extracted), self.vocab, extracted, self.profiles
-            ),
-            upstream=("extract",),
+        # linking is JVM-only and a function of the page and the ontology
+        # alone, so it runs inside the triples write job: committing it
+        # would only write rows for the triples stage to read back
+        linked, page_triples = self._link_triples(
+            extracted, extra_equiv_edges
         )
+
         def _triples() -> DataFrame:
-            t = page_entity_triples(linked, extracted)
             if include_ontology:
-                t = t.unionByName(self.ontology_triples())
-            if extra_equiv_edges is not None:
-                # merge evidence is part of the graph: persisting the
-                # extra edges as owl:sameAs rows makes the committed
-                # triple stage self-contained — equivalence_edges()
-                # recovers them on ANY later read, which is what lets
-                # update() re-derive the base component labels without
-                # the caller re-supplying this argument
-                t = t.unionByName(_equiv_triples(extra_equiv_edges))
-            return t
+                return page_triples.unionByName(self.ontology_triples())
+            return page_triples
 
         # the triples write job also counts the merge-edge rows, so the
         # alias decision below reads the manifest instead of the table
         triples = staged.stage(
             "triples",
             _triples,
-            upstream=("linked", "extract"),
+            upstream=("extract",),
             counts={"equivalence_rows": is_equivalence()},
         )
 
@@ -252,8 +265,6 @@ class KGPipeline:
         three inputs are committed tables that are never rewritten
         (re-applying a batch is a no-op), so a snapshot reads the same
         however many epochs follow it."""
-        from pyspark.sql.types import StructType
-
         staged = self.staged
         if batch_id is None:
             return staged.read("canonical")
@@ -262,15 +273,10 @@ class KGPipeline:
             raise KeyError(f"no committed epoch {batch_id!r}")
         triples = staged.read("triples")
         if staged.is_committed("triples_epochs"):
-            # the committed schema keeps crawl_batch a string (partition
-            # discovery would type numeric-looking batch ids as ints)
-            schema = StructType.fromJson(
-                staged.manifest("triples_epochs")["schema"]
-            )
+            # read with the committed schema: crawl_batch stays a string
             applied = epochs[: epochs.index(batch_id) + 1]
             triples = triples.unionByName(
-                self.spark.read.schema(schema)
-                .parquet(os.path.join(staged.workdir, "triples_epochs"))
+                staged.read("triples_epochs")
                 .filter(F.col("crawl_batch").isin(*applied))
                 .drop("crawl_batch")
             )
@@ -315,10 +321,10 @@ class KGPipeline:
         surfaces included: ``run(A)`` + ``update(B)`` yields the same
         triples as a from-scratch ``run(A ∪ B)``.
 
-        One KG definition: the batch runs :meth:`run`'s own functions
-        (``extract_pages``, the surfaces explode, ``link_mentions``,
-        ``page_entity_triples``) over ONE in-memory checkpoint of the
-        extracted pages, which all three consumers read.
+        One KG definition: the batch runs ``extract_pages`` and then
+        :meth:`run`'s own link-and-triples chain (:meth:`_link_triples`)
+        over ONE in-memory checkpoint of the extracted pages, which the
+        chain reads for the surfaces, the page text and the page IRI.
 
         Resume protocol: an epoch commits two things.  Its triples are
         written once, straight into their ``crawl_batch`` partition of
@@ -345,12 +351,7 @@ class KGPipeline:
         def _batch_triples(batch: DataFrame) -> DataFrame:
             extracted = extract_pages(batch, self.surfaces)
             extracted = extracted.localCheckpoint(eager=True)
-            linked = link_mentions(
-                _mentions(extracted), self.vocab, extracted, self.profiles
-            )
-            t = page_entity_triples(linked, extracted)
-            if extra_equiv_edges is not None:
-                t = t.unionByName(_equiv_triples(extra_equiv_edges))
+            _, t = self._link_triples(extracted, extra_equiv_edges)
             return t.withColumn("crawl_batch", F.lit(batch_id))
 
         epochs_table = staged.incremental_stage(

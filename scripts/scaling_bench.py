@@ -122,7 +122,7 @@ def run_one(cpus: int, corpus_path: str) -> dict:
     elapsed = time.time() - t0
     stage_secs = {
         s: pipe.staged.manifest(s).get("elapsed_sec")
-        for s in ("extract", "linked", "triples", "canonical")
+        for s in ("extract", "triples", "canonical")
         if pipe.staged.is_committed(s)
     }
     shutil.rmtree(workdir, ignore_errors=True)
@@ -190,7 +190,7 @@ def main() -> None:
     # noise-robust estimator: external load windows pollute individual
     # stages independently, so the sum of per-stage minima across reps
     # estimates each config's quiet-window capability
-    stage_names = ("extract", "linked", "triples", "canonical")
+    stage_names = ("extract", "triples", "canonical")
     stage_min = {
         c: {
             s: min(r["stages"].get(s, float("inf")) for r in rs)
@@ -210,8 +210,8 @@ def main() -> None:
         f"""
 ## {heading} (local[{lo}] vs local[{hi}])
 
-End-to-end KG pipeline (extract → linked → triples → canonical,
-every stage committed) over a pre-materialized synthetic
+End-to-end KG pipeline (extract → triples, linking inside the triples
+write → canonical, every stage committed) over a pre-materialized synthetic
 corpus (seed 42) built from `tests/data/ontology.ttl`.  Runs alternate
 between configs; each config's best of {REPS} is scored; stage I/O on
 tmpfs.

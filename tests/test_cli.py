@@ -33,7 +33,6 @@ def test_cli_synthesize_and_resume(spark, tmp_path, capsys, onto_ttl):
     assert rc == 0
     assert set(summary["stages"]) == {
         "extract",
-        "linked",
         "triples",
         "canonical",
     }

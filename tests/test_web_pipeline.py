@@ -3,6 +3,7 @@ connected components, staged resume."""
 
 from __future__ import annotations
 
+import contextlib
 import re
 
 import pandas as pd
@@ -221,7 +222,7 @@ def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path, onto_ttl):
         triples.filter(F.col("predicate") == "a").count() == n_pages_linked
     )
     counters = out["counters"]
-    assert set(counters) == {"extract", "linked", "triples", "canonical"}
+    assert set(counters) == {"extract", "triples", "canonical"}
     assert counters["extract"] == 60
     # extract commits only what linking and the triple pass read
     assert out["extract"].columns == ["url", "text", "subject", "surfaces"]
@@ -233,8 +234,8 @@ def test_pipeline_end_to_end_and_resume(spark, corpus, tmp_path, onto_ttl):
     assert out2["canonical"].count() == n
 
     # lineage manifest shape
-    man = pipe2.staged.manifest("linked")
-    assert man["rows"] == counters["linked"]
+    man = pipe2.staged.manifest("triples")
+    assert man["rows"] == counters["triples"]
     assert man["n_partitions"] >= 1
     assert sum(man["partitions"].values()) == man["rows"]
 
@@ -265,7 +266,6 @@ def test_kill_mid_pipeline_resumes_from_last_commit(
     out = pipe.run(corpus)
     assert pipe.staged.log[:1] == ["resume:extract"]
     assert [s for s in pipe.staged.log if s.startswith("compute:")] == [
-        "compute:linked",
         "compute:triples",
         "compute:canonical",
     ]
@@ -315,7 +315,7 @@ def test_no_merge_canonical_is_an_alias(spark, corpus, tmp_path, onto_ttl):
     out = pipe.run(corpus)
     # each committed table once: no mentions copy of extract's surfaces
     assert sorted(os.listdir(wd)) == [
-        "canonical", "extract", "linked", "triples",
+        "canonical", "extract", "triples",
     ]
     assert os.listdir(os.path.join(wd, "canonical")) == [MANIFEST]
     # the decision came from the triples write job's own count, and the
@@ -323,7 +323,7 @@ def test_no_merge_canonical_is_an_alias(spark, corpus, tmp_path, onto_ttl):
     assert pipe.staged.manifest("triples")["equivalence_rows"] == 0
     alias_man = pipe.staged.manifest("canonical")
     assert alias_man["data"] == "triples"
-    assert set(pipe.staged.manifest("linked")) <= set(alias_man)
+    assert set(pipe.staged.manifest("extract")) <= set(alias_man)
     assert alias_man["elapsed_sec"] is not None
     triples = pipe.staged.read("triples")
     want = sorted(triples.collect())
@@ -334,6 +334,91 @@ def test_no_merge_canonical_is_an_alias(spark, corpus, tmp_path, onto_ttl):
     pipe.export_store(store_path)
     back = read_triple_store(spark, store_path).select(*triples.columns)
     assert sorted(back.collect()) == want
+
+
+@contextlib.contextmanager
+def _spark_jobs(spark, group):
+    """Collect the ids of the Spark jobs the block submits, run under job
+    group ``group``; the caller's group is restored afterwards."""
+    sc = spark.sparkContext
+    keys = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+        # the status store is fed asynchronously by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_no_merge_run_job_budget(spark, corpus, tmp_path, onto_ttl):
+    """A no-merge run with Turtle output commits extract and triples,
+    aliases canonical, and submits a pinned number of Spark jobs:
+    linking runs inside the triples write, the ambiguity decision and
+    the reads of committed stages submit none."""
+    pipe = KGPipeline(spark, str(tmp_path / "kg_jobs"), ttl_path=onto_ttl)
+    with _spark_jobs(spark, "kg-run-job-budget") as jobs:
+        pipe.run(corpus, write_turtle=True)
+    assert [s for s in pipe.staged.log if s.startswith("compute:")] == [
+        "compute:extract", "compute:triples", "compute:canonical",
+    ]
+    # the extract, triples and Turtle-shard writes (AQE runs each
+    # shuffle as a job of its own) and the used-prefix collect; 18 while
+    # linked was a committed stage and every read inferred its schema
+    assert len(jobs) == 9, sorted(jobs)
+
+
+def _staged_sample(spark, workdir):
+    from mhdb_tables2turtles_spark.web.materialize import StagedPipeline
+
+    staged = StagedPipeline(spark, workdir)
+    staged.stage(
+        "sample",
+        lambda: spark.range(0, 40, numPartitions=3).select(
+            "id", F.format_string("row %d", "id").alias("label")
+        ),
+    )
+    return staged
+
+
+def test_read_of_committed_stage_submits_no_job(spark, tmp_path):
+    """The manifest carries the written schema, so a read infers none."""
+    staged = _staged_sample(spark, str(tmp_path / "st"))
+    with _spark_jobs(spark, "staged-read") as jobs:
+        df = staged.read("sample")
+    assert jobs == []
+    assert df.columns == ["id", "label"]
+    assert sorted(r.id for r in df.collect()) == list(range(40))
+
+
+def test_manifest_without_schema_is_read_by_inference(spark, tmp_path):
+    import json
+    import os
+
+    from mhdb_tables2turtles_spark.web.materialize import (
+        MANIFEST,
+        StagedPipeline,
+    )
+
+    wd = str(tmp_path / "st_old")
+    want = sorted(_staged_sample(spark, wd).read("sample").collect())
+    path = os.path.join(wd, "sample", MANIFEST)
+    with open(path) as f:
+        manifest = json.load(f)
+    del manifest["schema"]
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    df = StagedPipeline(spark, wd).read("sample")
+    assert df.columns == ["id", "label"]
+    assert sorted(df.collect()) == want
 
 
 def test_canonicalization_merges_sameas(spark, corpus, tmp_path, onto_ttl):
@@ -370,7 +455,7 @@ def test_pipeline_with_ontology_and_turtle(spark, corpus, tmp_path, onto_ttl):
     assert golden <= ours  # recall 1.0 vs the ontology triples
     assert os.path.exists(os.path.join(wd, "ttl", "_SUCCESS"))
     assert sorted(os.listdir(wd)) == [
-        "canonical", "extract", "linked", "triples", "ttl",
+        "canonical", "extract", "triples", "ttl",
     ]
     # shard contents parse back as subject blocks
     import glob
@@ -683,7 +768,7 @@ def test_update_commits_labels_not_graph_copies(spark, tmp_path, onto_ttl):
     out = pipe.update(corpus.subtract(corpus.limit(8)), "e1")
     assert sorted(os.listdir(wd)) == [
         "_EPOCHS.json", "canonical", "components_base", "components_e1",
-        "extract", "linked", "triples", "triples_epochs",
+        "extract", "triples", "triples_epochs",
     ]
     assert pipe.staged.manifest("triples_epochs")["done_partitions"] == ["e1"]
     assert out["triples"].count() == pipe.staged.manifest(
