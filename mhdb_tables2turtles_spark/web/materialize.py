@@ -114,7 +114,8 @@ class StagedPipeline:
         reader = self.spark.read
         if m.get("schema"):
             reader = reader.schema(StructType.fromJson(m["schema"]))
-        return reader.parquet(self._path(m.get("data", name))).drop(LINEAGE_COL)
+        data = self._path(m.get("data", name))
+        return reader.parquet(data).drop(LINEAGE_COL)
 
     def _commit(self, path: str, manifest: dict) -> None:
         tmp = os.path.join(path, MANIFEST + ".tmp")

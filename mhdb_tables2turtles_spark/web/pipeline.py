@@ -17,11 +17,11 @@ Every stage commits through :class:`materialize.StagedPipeline` (resume +
 lineage + counters), and only rows a resume or a reader cannot cheaply
 recompute are committed, each once: the mentions explode and the
 linking run inside the triples write, and :meth:`KGPipeline.update`
-commits an epoch's triples and component labels but no graph copy.  The ontology side
-(vocabulary, entity profiles, equivalence edges) comes from the ontology
-Turtle file ``ttl_path``, so the triple vocabulary matches the
-ontology's IRIs exactly — the P/R metric is then a set comparison of
-`(s, p, o)`.
+commits an epoch's triples and component labels but no graph copy.
+The ontology side (vocabulary, entity profiles, equivalence edges)
+comes from the ontology Turtle file ``ttl_path``, so the triple
+vocabulary matches the ontology's IRIs exactly — the P/R metric is then
+a set comparison of `(s, p, o)`.
 """
 
 from __future__ import annotations
@@ -143,9 +143,9 @@ class KGPipeline:
         Commits ``extract``, ``triples`` and ``canonical`` (an alias of
         ``triples`` when there is no merge); ``linked`` is returned as
         the lazy link frame the triples write ran, not a committed
-        stage.  ``include_ontology`` unions the reference graph into the triple
-        stage; ``write_turtle`` also materializes ordered ``.ttl`` shards
-        (``<workdir>/ttl/``) from the canonical graph.
+        stage.  ``include_ontology`` unions the reference graph into the
+        triple stage; ``write_turtle`` also materializes ordered
+        ``.ttl`` shards (``<workdir>/ttl/``) from the canonical graph.
         """
         staged = self.staged
 
